@@ -19,24 +19,42 @@ object Tables {
     * job before any query executes, and the 275-entry sweep paid it
     * 10× per SQL-path entry (Tables.register infers all ten tables) —
     * measured as 10 of q23's 13 jobs, ~0.4 s of a 0.57 s entry. A
-    * table's file schema is immutable metadata (this is exactly what a
+    * table's file schema is metadata (this is exactly what a
     * catalog/metastore persists so scans never infer); caching it is
     * NOT result caching — every query still reads its data from the
-    * parquet files. Keyed by path; the fixture builders write each
-    * path once behind a marker, so a path's schema never changes
-    * within a JVM. The first load of a path still pays one inference
+    * parquet files. One entry per path, stamped with the files the
+    * read resolved to ([[listing]]): a path rewritten with another
+    * schema (the streaming `file` input reads user paths through here)
+    * lists other files, so its schema is inferred again instead of
+    * served stale. The first load of a path still pays one inference
     * (fresh JVMs start cold). */
-  private val schemaCache =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]()
+  private val schemaCache = new java.util.concurrent.ConcurrentHashMap[
+    String, (Seq[(String, Long, Long)], org.apache.spark.sql.types.StructType)]()
 
-  /** Schema-cached parquet read of an immutable path (no reader
-    * options). Shared with the streaming file input for its plain
-    * parquet case. */
-  def cachedParquet(spark: SparkSession, path: String): DataFrame = {
-    val schema = schemaCache.computeIfAbsent(path,
-      p => spark.read.parquet(p).schema)
-    spark.read.schema(schema).parquet(path)
-  }
+  /** Schema-cached parquet read (no reader options). Shared with the
+    * streaming file input for its plain parquet case. */
+  def cachedParquet(spark: SparkSession, path: String): DataFrame =
+    Option(schemaCache.get(path))
+      .map { case (files, schema) => (files, spark.read.schema(schema).parquet(path)) }
+      .collect { case (files, df) if listing(df) == files => df }
+      .getOrElse {
+        val inferred = spark.read.parquet(path)
+        schemaCache.put(path, (listing(inferred), inferred.schema))
+        spark.read.schema(inferred.schema).parquet(path)
+      }
+
+  /** Name, size and modification time of each file a parquet read
+    * resolved to, sorted — taken from the file index Spark listed on the
+    * driver while building the read, so it costs no listing and no job. */
+  private def listing(df: DataFrame): Seq[(String, Long, Long)] =
+    df.queryExecution.analyzed.collectFirst {
+      case l: org.apache.spark.sql.execution.datasources.LogicalRelation => l.relation
+    }.collect {
+      case r: org.apache.spark.sql.execution.datasources.HadoopFsRelation => r.location
+    }.collect {
+      case i: org.apache.spark.sql.execution.datasources.PartitioningAwareFileIndex =>
+        i.allFiles().map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).sorted
+    }.getOrElse(Nil)
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
     val df = cachedParquet(spark, s"$dir/$name.parquet")
@@ -65,16 +83,20 @@ object Tables {
     * re-pointing ten temp views per query is pure per-entry overhead.
     * Keyed WEAKLY by session (a stopped session must not pin the map);
     * a dir CHANGE re-registers, which ScaleProbe relies on when it runs
-    * one query against sf0.1 and /tmp/sf1 in the same session. */
+    * one query against sf0.1 and /tmp/sf1 in the same session, and so
+    * does a dropped view (catalog lookups only, no job). */
   private val registeredDir =
     java.util.Collections.synchronizedMap(
       new java.util.WeakHashMap[SparkSession, String]())
 
   /** Register every table for `dir` as a temp view (for the SQL-path queries). */
   def register(spark: SparkSession, dir: String): Unit =
-    if (registeredDir.get(spark) != dir) {
+    if (registeredDir.get(spark) != dir || !names.forall(isTempView(spark, _))) {
       names.foreach(n => load(spark, dir, n).createOrReplaceTempView(n))
       registeredDir.put(spark, dir)
       ()
     }
+
+  private def isTempView(spark: SparkSession, name: String): Boolean =
+    scala.util.Try(spark.catalog.getTable(name).isTemporary).getOrElse(false)
 }

@@ -1,12 +1,10 @@
 package graft.streaming
 
-import java.util.concurrent.atomic.AtomicInteger
-
 import org.apache.spark.sql.{Encoder, SparkSession}
 import org.apache.spark.sql.connector.read.streaming.Offset
-import org.apache.spark.sql.execution.streaming.runtime.{LongOffset, MemoryStream}
+import org.apache.spark.sql.execution.streaming.runtime.LongOffset
 
-/** A [[MemoryStream]] that DEFERS broker acks to checkpoint commit — the
+/** A [[PushStream]] that DEFERS broker acks to checkpoint commit — the
   * delivery-guarantee core shared by the Pulsar and NATS JetStream
   * inputs: the reader thread [[enqueue]]s each message together with its
   * ack token WITHOUT acking, and `ackOne` runs for a message only after
@@ -23,6 +21,9 @@ import org.apache.spark.sql.execution.streaming.runtime.{LongOffset, MemoryStrea
   * `0..k` — `k + 1` of them — are safe to ack (an earlier revision
   * acked only `k` and permanently starved the newest message of its
   * ack, an endless redeliver-duplicate loop at ack_wait cadence).
+  * Planning does not touch this: [[PushStream]] packs a micro-batch's
+  * messages into at most one contiguous partition per core, but the
+  * offsets it plans from still count one block per message.
   *
   * Timing boundary, stated: Spark invokes a source's `commit(end)` while
   * CONSTRUCTING the batch after the one that processed `end`, so acks
@@ -35,14 +36,9 @@ import org.apache.spark.sql.execution.streaming.runtime.{LongOffset, MemoryStrea
   * Ack failures (connection closed mid-shutdown) are swallowed: the
   * broker redelivers the unacked message, which at-least-once permits.
   */
-object CommitAckStream {
-  // clear of MemoryStream.apply's own small counter so ids never collide
-  private val ids = new AtomicInteger(1 << 20)
-}
-
 final class CommitAckStream[A: Encoder, T](spark: SparkSession,
     ackOne: T => Unit)
-  extends MemoryStream[A](CommitAckStream.ids.getAndIncrement(), spark, None) {
+  extends PushStream[A](spark) {
 
   private val lock = new Object
   private val unacked = new scala.collection.mutable.Queue[T]()

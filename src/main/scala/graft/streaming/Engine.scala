@@ -461,7 +461,8 @@ object Engine {
               !k.startsWith("store.") && !k.startsWith("codec.") }
           // plain parquet with no reader options: schema-cached read
           // (graft.Tables) — skips the per-pipeline one-task schema
-          // inference job on stable input paths. Any option could
+          // inference job while the path's file listing is unchanged,
+          // and infers again once it is rewritten. Any option could
           // change the inferred schema, so those fall through.
           if (fmt == "parquet" && readerOpts.isEmpty)
             graft.Tables.cachedParquet(spark, path)

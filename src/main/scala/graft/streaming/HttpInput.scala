@@ -1,19 +1,8 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
-/** HTTP server input (SURVEY.md §2.1; reference input/http.rs:42-115):
-  * an embedded endpoint receives POST bodies and feeds them into the
-  * stream as binary envelopes — the foreachBatch-harness shape the survey
-  * prescribes (no custom DataSourceV2 needed). Uses the JDK's built-in
-  * HttpServer, so no extra dependency.
-  *
-  * Optional bearer-token auth mirrors the reference's auth block. The
-  * driver-side queue is the ingestion edge (like the reference's bounded
-  * channel); downstream processing is fully distributed.
-  */
 /** HTTP input, client mode (reference input/http.rs:225-233: poll a
   * remote endpoint with `method` on an `interval`). One poll = one GET →
   * envelope rows, EOF semantics; the engine trigger drives repetition.
@@ -43,6 +32,19 @@ object HttpPoll {
   }
 }
 
+/** HTTP server input (SURVEY.md §2.1; reference input/http.rs:42-115):
+  * an embedded endpoint receives POST bodies and feeds them into the
+  * stream as binary envelopes — the foreachBatch-harness shape the survey
+  * prescribes (no custom DataSourceV2 needed). Uses the JDK's built-in
+  * HttpServer, so no extra dependency.
+  *
+  * Optional bearer-token auth mirrors the reference's auth block. The
+  * driver-side queue is the ingestion edge (like the reference's bounded
+  * channel); downstream processing is fully distributed. Each accepted
+  * POST is one message and one offset of the [[PushStream]], and a
+  * micro-batch plans at most one contiguous partition per core, not one
+  * task per POST.
+  */
 final class HttpInput(spark: SparkSession, port: Int, path: String = "/ingest",
                       bearerToken: Option[String] = None,
                       maxRequestsPerSecond: Option[Int] = None,
@@ -50,8 +52,7 @@ final class HttpInput(spark: SparkSession, port: Int, path: String = "/ingest",
                       basicAuth: Option[(String, String)] = None) {
   import spark.implicits._
 
-  private implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
-  private val stream = MemoryStream[String]
+  private val stream = new PushStream[String](spark)
   private val server = com.sun.net.httpserver.HttpServer.create(
     new java.net.InetSocketAddress("127.0.0.1", port), 0)
 

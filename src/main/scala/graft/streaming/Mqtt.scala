@@ -3,7 +3,6 @@ package graft.streaming
 import java.io.{BufferedInputStream, BufferedOutputStream}
 import java.nio.charset.StandardCharsets
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 /** MQTT 3.1.1 input + output (SURVEY.md §2.1/§2.2; reference
@@ -199,7 +198,9 @@ object Mqtt {
   /** Streaming subscribe input: PUBLISH frames land as envelope rows
     * tagged with `__meta_topic`. `qos`/`cleanSession`/`keepAlive`/auth
     * mirror input/mqtt.rs:35-57 (clean_session=false + a stable client
-    * id = the broker-durable subscription).
+    * id = the broker-durable subscription). Each PUBLISH is one offset of
+    * the [[PushStream]]; a micro-batch plans at most one contiguous
+    * partition per core.
     *
     * Delivery boundary, stated: MQTT's QoS acknowledgments (PUBACK /
     * PUBREC-PUBREL-PUBCOMP) are TRANSPORT handshakes the broker paces
@@ -214,9 +215,8 @@ object Mqtt {
       topicFilter: String, clientId: String = "graft-in", qos: Int = 0,
       username: Option[String] = None, password: Option[String] = None,
       cleanSession: Boolean = true, keepAliveSecs: Int = 60) {
-    private implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
     import spark.implicits._
-    private val stream = MemoryStream[(String, String)]
+    private val stream = new PushStream[(String, String)](spark)
     private val conn = new Conn(host, port, clientId, username, password,
       cleanSession, keepAliveSecs)
     conn.subscribe(topicFilter, qos)

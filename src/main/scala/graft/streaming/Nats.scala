@@ -3,7 +3,6 @@ package graft.streaming
 import java.io.{BufferedInputStream, BufferedOutputStream}
 import java.nio.charset.StandardCharsets
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 /** NATS input + output (SURVEY.md §2.1/§2.2; reference
@@ -18,9 +17,10 @@ import org.apache.spark.sql.functions._
   * reply inbox carrying `$JS.ACK.*` reply subjects to ack into.
   *
   * Input shape: a background reader thread feeds MSG payloads into the
-  * MemoryStream envelope (the driver-side ingestion edge, like
-  * [[HttpInput]]/[[WebSocketInput]]); the output publishes from executors
-  * with one connection per partition.
+  * [[PushStream]] envelope (the driver-side ingestion edge, like
+  * [[HttpInput]]/[[WebSocketInput]]): one offset per message, at most one
+  * contiguous partition per core per micro-batch. The output publishes
+  * from executors with one connection per partition.
   */
 object Nats {
 
@@ -128,13 +128,14 @@ object Nats {
 
   /** Streaming subject input: `MSG <subject> <sid> [reply] <#bytes>`
     * frames land as envelope rows tagged with `__meta_subject`
-    * (input/nats.rs Regular mode, optional queue group + auth). */
+    * (input/nats.rs Regular mode, optional queue group + auth). Each MSG
+    * is one offset of the [[PushStream]]; a micro-batch plans at most one
+    * contiguous partition per core. */
   final class NatsInput(spark: SparkSession, host: String, port: Int,
       subject: String, queueGroup: Option[String] = None,
       auth: Map[String, String] = Map.empty) {
-    private implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
     import spark.implicits._
-    private val stream = MemoryStream[(String, String)]
+    private val stream = new PushStream[(String, String)](spark)
     private val conn = new Conn(host, port, auth)
     conn.subscribe(subject, "1", queueGroup)
 

@@ -4,7 +4,6 @@ import java.io.{BufferedInputStream, BufferedOutputStream, ByteArrayOutputStream
 import java.nio.ByteBuffer
 import java.nio.charset.StandardCharsets.UTF_8
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 /** Pulsar input + output (SURVEY.md §2.1/§2.2; reference

@@ -3,15 +3,16 @@ package graft.streaming
 import java.net.http.{HttpClient, WebSocket}
 import java.util.concurrent.CompletionStage
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 /** WebSocket client input (SURVEY.md §2.1; reference input/websocket.rs:
   * 42-60: connect to a URL and stream frames into the pipeline). Built on
   * the JDK 11+ `java.net.http.WebSocket` client — no extra dependency —
-  * feeding the same MemoryStream envelope as [[HttpInput]]: the driver-
-  * side queue is the ingestion edge (the reference's bounded channel),
-  * all downstream processing is distributed.
+  * feeding the same [[PushStream]] envelope as [[HttpInput]]: the
+  * driver-side queue is the ingestion edge (the reference's bounded
+  * channel), all downstream processing is distributed. Each message is
+  * one offset; a micro-batch plans at most one contiguous partition per
+  * core.
   *
   * Text frames may arrive fragmented; fragments accumulate until the
   * final frame flag, then the whole message enqueues as one envelope row.
@@ -19,9 +20,8 @@ import org.apache.spark.sql.functions._
 final class WebSocketInput(spark: SparkSession, uri: String,
     headers: Map[String, String] = Map.empty) {
 
-  private implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
   import spark.implicits._
-  private val stream = MemoryStream[String]
+  private val stream = new PushStream[String](spark)
   @volatile private var closed = false
 
   private val listener = new WebSocket.Listener {
