@@ -1,5 +1,10 @@
 package graft.operators
 
+import java.nio.file.{Files, Path}
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.spark.SparkContext
+import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** q250 — one complete YAML stream config graded against the DuckDB
@@ -21,8 +26,36 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object ConfigPipeline {
 
+  /** One SparkContext's scratch root: each entry writes its files to a
+    * fresh directory under it ([[scratchDir]]). An entry's result is read
+    * lazily from those files, so nothing can be deleted when the entry
+    * returns; the whole root is deleted when the application ends. */
+  private[graft] final class ScratchRoot(sc: SparkContext) extends SparkListener {
+    val path: Path = Files.createTempDirectory("graft_config")
+    override def onApplicationEnd(end: SparkListenerApplicationEnd): Unit = {
+      scratchRoots.remove(sc, this)
+      if (Files.exists(path))
+        scala.util.Using.resource(Files.walk(path))(
+          _.sorted(java.util.Comparator.reverseOrder[Path]()).forEach(Files.delete(_)))
+    }
+  }
+
+  private val scratchRoots = new ConcurrentHashMap[SparkContext, ScratchRoot]()
+
+  /** The context's scratch root, created (and its cleanup registered) on
+    * first use. */
+  private[graft] def scratchRoot(sc: SparkContext): ScratchRoot =
+    scratchRoots.computeIfAbsent(sc, { (c: SparkContext) =>
+      val root = new ScratchRoot(c)
+      c.addSparkListener(root)
+      root
+    })
+
+  private def scratchDir(spark: SparkSession, entry: String): String =
+    Files.createTempDirectory(scratchRoot(spark.sparkContext).path, entry).toString
+
   private def q250(spark: SparkSession, dir: String): DataFrame = {
-    val base = java.nio.file.Files.createTempDirectory("graft_q250").toString
+    val base = scratchDir(spark, "q250")
     val out = s"$base/out"
     val yaml =
       s"""streams:
@@ -56,7 +89,7 @@ object ConfigPipeline {
     * only ScalaTest-graded (processor/vrl.rs; examples/vrl_example.yaml
     * dialect). */
   private def q251(spark: SparkSession, dir: String): DataFrame = {
-    val base = java.nio.file.Files.createTempDirectory("graft_q251").toString
+    val base = scratchDir(spark, "q251")
     val out = s"$base/out"
     val yaml =
       s"""streams:
@@ -94,7 +127,7 @@ object ConfigPipeline {
     * (processor/python.rs contract; worker = python3 + pyarrow over
     * Arrow IPC). */
   private def q252(spark: SparkSession, dir: String): DataFrame = {
-    val base = java.nio.file.Files.createTempDirectory("graft_q252").toString
+    val base = scratchDir(spark, "q252")
     val out = s"$base/out"
     val yaml =
       s"""streams:
@@ -132,7 +165,7 @@ object ConfigPipeline {
     * columns. A drift anywhere in the severity/facility keyword tables,
     * the 5424 regex, or the field extraction breaks the hash. */
   private def q253(spark: SparkSession, dir: String): DataFrame = {
-    val base = java.nio.file.Files.createTempDirectory("graft_q253").toString
+    val base = scratchDir(spark, "q253")
     val out = s"$base/out"
     val yaml =
       s"""streams:
@@ -166,7 +199,7 @@ object ConfigPipeline {
     * method/path/status/size/user fields against the oracle's direct
     * recomputation. */
   private def q254(spark: SparkSession, dir: String): DataFrame = {
-    val base = java.nio.file.Files.createTempDirectory("graft_q254").toString
+    val base = scratchDir(spark, "q254")
     val out = s"$base/out"
     val yaml =
       s"""streams:
@@ -201,7 +234,7 @@ object ConfigPipeline {
     * back, and summed; round(d*1000) pins the float path to the exact
     * integer the oracle computes. */
   private def q255(spark: SparkSession, dir: String): DataFrame = {
-    val base = java.nio.file.Files.createTempDirectory("graft_q255").toString
+    val base = scratchDir(spark, "q255")
     val out = s"$base/out"
     val yaml =
       s"""streams:
@@ -235,7 +268,7 @@ object ConfigPipeline {
     * recomputes the aggregates from the raw columns. Exercises exactly
     * the quoting corners a naive split() gets wrong. */
   private def q257(spark: SparkSession, dir: String): DataFrame = {
-    val base = java.nio.file.Files.createTempDirectory("graft_q257").toString
+    val base = scratchDir(spark, "q257")
     val out = s"$base/out"
     val yaml =
       s"""streams:
@@ -270,7 +303,7 @@ object ConfigPipeline {
     * selector. Pins the specificity ordering (Edge over its embedded
     * Chrome token, iOS over 'like Mac OS X') under the hash gate. */
   private def q258(spark: SparkSession, dir: String): DataFrame = {
-    val base = java.nio.file.Files.createTempDirectory("graft_q258").toString
+    val base = scratchDir(spark, "q258")
     val out = s"$base/out"
     val uas = Seq(
       "Mozilla/5.0 (Windows NT 10.0; Win64; x64) AppleWebKit/537.36 (KHTML, like Gecko) Chrome/120.0.0.0 Safari/537.36",
@@ -315,7 +348,7 @@ object ConfigPipeline {
     * (map_concat would throw; from wins). The oracle recomputes every
     * merged value straight from the source columns. */
   private def q259(spark: SparkSession, dir: String): DataFrame = {
-    val base = java.nio.file.Files.createTempDirectory("graft_q259").toString
+    val base = scratchDir(spark, "q259")
     val out = s"$base/out"
     val yaml =
       s"""streams:
@@ -362,7 +395,7 @@ object ConfigPipeline {
     * aggregates the decoded fields; the oracle recomputes them from the
     * raw table (codec/schema_registry.rs:37-260 as the contract). */
   private def q260(spark: SparkSession, dir: String): DataFrame = {
-    val base = java.nio.file.Files.createTempDirectory("graft_q260").toString
+    val base = scratchDir(spark, "q260")
     val wire = s"$base/wire"
     val out = s"$base/out"
     // delta is NEGATIVE for half the rows (the zigzag case) and flags a
@@ -443,7 +476,7 @@ object ConfigPipeline {
     * raw columns (vrl stdlib parse_cef semantics: header pipes with
     * escaping, extension keys only at ` token=` boundaries). */
   private def q262(spark: SparkSession, dir: String): DataFrame = {
-    val base = java.nio.file.Files.createTempDirectory("graft_q262").toString
+    val base = scratchDir(spark, "q262")
     val out = s"$base/out"
     val yaml =
       s"""streams:
@@ -481,7 +514,7 @@ object ConfigPipeline {
     * recomputes status/bytes/url/processing-time aggregates from the raw
     * columns. */
   private def q263(spark: SparkSession, dir: String): DataFrame = {
-    val base = java.nio.file.Files.createTempDirectory("graft_q263").toString
+    val base = scratchDir(spark, "q263")
     val out = s"$base/out"
     val render = "'http 2021-06-29T21:33:20.000000Z app/lb/1 10.0.0.' || " +
       "cast(user_id % 256 AS string) || ':' || cast(1024 + event_id % 1024 AS string) || " +
@@ -527,7 +560,7 @@ object ConfigPipeline {
     * shape a Vector remap migration carries. The oracle recomputes
     * every merged/routed value from the raw columns. */
   private def q264(spark: SparkSession, dir: String): DataFrame = {
-    val base = java.nio.file.Files.createTempDirectory("graft_q264").toString
+    val base = scratchDir(spark, "q264")
     val out = s"$base/out"
     val yaml =
       s"""streams:
@@ -566,7 +599,7 @@ object ConfigPipeline {
     * "@attr" keys, text-only elements as typed scalars, repeated
     * siblings as arrays). */
   private def q265(spark: SparkSession, dir: String): DataFrame = {
-    val base = java.nio.file.Files.createTempDirectory("graft_q265").toString
+    val base = scratchDir(spark, "q265")
     val out = s"$base/out"
     val render = "'<event id=\\\"' || cast(event_id AS string) || " +
       "'\\\" region=\\\"' || CASE CAST(user_id % 3 AS INT) WHEN 0 THEN 'eu' " +
@@ -611,7 +644,7 @@ object ConfigPipeline {
     * oracle recomputes suffix/registrable-domain/known from the same
     * cycle (PSL algorithm, embedded snapshot — functions/VrlEtld.scala). */
   private def q266(spark: SparkSession, dir: String): DataFrame = {
-    val base = java.nio.file.Files.createTempDirectory("graft_q266").toString
+    val base = scratchDir(spark, "q266")
     val out = s"$base/out"
     val yaml =
       s"""streams:
@@ -644,7 +677,7 @@ object ConfigPipeline {
     * float parse, and grouped number formatting, all recomputed by the
     * oracle from the raw columns. */
   private def q267(spark: SparkSession, dir: String): DataFrame = {
-    val base = java.nio.file.Files.createTempDirectory("graft_q267").toString
+    val base = scratchDir(spark, "q267")
     val out = s"$base/out"
     val yaml =
       s"""streams:
@@ -681,7 +714,7 @@ object ConfigPipeline {
     * the oracle recomputes the aggregate from the same table read
     * locally. Parquet footer seeks exercise the ranged-GET path. */
   private def q268(spark: SparkSession, dir: String): DataFrame = {
-    val base = java.nio.file.Files.createTempDirectory("graft_q268").toString
+    val base = scratchDir(spark, "q268")
     val out = s"$base/out"
     // serve a single-file copy (the source may be a multi-part dir —
     // the HTTP store serves objects by URL, it has no directory listing,
@@ -748,7 +781,7 @@ object ConfigPipeline {
     * and the oracle recomputes the exploded aggregate with its own
     * unnest. */
   private def q269(spark: SparkSession, dir: String): DataFrame = {
-    val base = java.nio.file.Files.createTempDirectory("graft_q269").toString
+    val base = scratchDir(spark, "q269")
     val out = s"$base/out"
     val yaml =
       s"""streams:
@@ -782,7 +815,7 @@ object ConfigPipeline {
     * against public vectors in StreamingSpec instead; DuckDB has no
     * SHA-3/SeaHash to recompute them with). */
   private def q270(spark: SparkSession, dir: String): DataFrame = {
-    val base = java.nio.file.Files.createTempDirectory("graft_q270").toString
+    val base = scratchDir(spark, "q270")
     val out = s"$base/out"
     val yaml =
       s"""streams:
@@ -822,7 +855,7 @@ object ConfigPipeline {
     * field, a timestamp), the remap parses it on the VARIANT path, and
     * the oracle recomputes every extracted value from the raw columns. */
   private def q271(spark: SparkSession, dir: String): DataFrame = {
-    val base = java.nio.file.Files.createTempDirectory("graft_q271").toString
+    val base = scratchDir(spark, "q271")
     val out = s"$base/out"
     val yaml =
       s"""streams:
@@ -859,7 +892,7 @@ object ConfigPipeline {
     * pattern's fields null). The oracle recomputes both shapes from the
     * raw columns. */
   private def q272(spark: SparkSession, dir: String): DataFrame = {
-    val base = java.nio.file.Files.createTempDirectory("graft_q272").toString
+    val base = scratchDir(spark, "q272")
     val out = s"$base/out"
     val yaml =
       s"""streams:
@@ -899,7 +932,7 @@ object ConfigPipeline {
     * the flagship 100 TB operator was library-only while the
     * reference's whole philosophy is YAML-configured pipelines. */
   private def q276(spark: SparkSession, dir: String): DataFrame = {
-    val base = java.nio.file.Files.createTempDirectory("graft_q276").toString
+    val base = scratchDir(spark, "q276")
     val out = s"$base/out"
     val yaml =
       s"""streams:

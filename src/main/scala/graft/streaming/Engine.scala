@@ -269,6 +269,44 @@ object Engine {
       case _ => false
     }
 
+  /** The pipeline fold, with the held-back short-circuit: when ANY
+    * processor returns the EXPLICIT held-back sentinel (the zero-column
+    * empty frame from [[heldBackSentinel]] — the accumulator holding a
+    * batch, or JsonToArrow's zero-row inference guard), the REMAINING
+    * processors are skipped and the result is None, so the caller skips
+    * the sink too — the reference's `None` short-circuits the whole
+    * pipeline (pipeline/mod.rs:57-85); a downstream aggregate would
+    * otherwise turn the empty frame into a spurious count=0 row. The
+    * sentinel is detected by its zero-column SCHEMA, not by plan
+    * emptiness: frames that merely COMPUTE to zero rows (even ones the
+    * optimizer folds to an empty LocalRelation, as MemoryStream batches
+    * are) still write, like the reference's empty batches — and the
+    * check costs one analysis, never an optimizer pass per step.
+    * [[BatchIdAware]] processors get `batchId` when one is given;
+    * otherwise every processor runs through its plain apply. */
+  private def fold(procs: Seq[Processors.BatchTransform], df: DataFrame,
+      batchId: Option[Long] = None): Option[DataFrame] =
+    procs.foldLeft(Option(df)) { (acc, p) =>
+      acc.map(out => (p, batchId) match {
+        case (b: BatchIdAware, Some(id)) => b(out, id)
+        case _ => p(out)
+      }).filter(_.schema.nonEmpty)
+    }
+
+  /** Flush every still-open session window through the processors
+    * DOWNSTREAM of its buffer into the sink, one id from `ids` per
+    * flushed session (held back or not). */
+  private def flushSessions(procs: Seq[Processors.BatchTransform],
+      sink: BatchSink, ids: Iterator[Long]): Unit =
+    procs.zipWithIndex.foreach {
+      case (b: Processors.SessionWindowBuffer, i) =>
+        b.flushPending().foreach { session =>
+          val id = ids.next()
+          fold(procs.drop(i + 1), session).foreach(sink.write(_, id))
+        }
+      case _ => ()
+    }
+
   /** A running stream: the pipeline folds over each micro-batch; a failed
     * batch routes whole to the error sink (stream/mod.rs:485-516
     * `ProcessorData::Err`) instead of killing the query.
@@ -293,31 +331,7 @@ object Engine {
         // aren't statically visible are handled by JsonToArrow's own
         // zero-row inference guard (Codecs.JsonCodec).
         if (!staticallyEmpty(batch)) {
-          // Fold with a held-back short-circuit: when ANY processor
-          // returns the EXPLICIT held-back sentinel (the zero-column
-          // empty frame from [[heldBackSentinel]] — the accumulator
-          // holding a batch, or JsonToArrow's zero-row inference guard),
-          // the REMAINING processors and the sink are skipped for this
-          // micro-batch — the reference's `None` short-circuits the
-          // whole pipeline (pipeline/mod.rs:57-85); a downstream
-          // aggregate would otherwise turn the empty frame into a
-          // spurious count=0 row. The sentinel is detected by its
-          // zero-column SCHEMA, not by plan emptiness: frames that
-          // merely COMPUTE to zero rows (even ones the optimizer folds
-          // to an empty LocalRelation, as MemoryStream batches are)
-          // still write, like the reference's empty batches — and the
-          // check costs one analysis, never an optimizer pass per step.
-          var out = batch
-          var heldBack = false
-          val it = processors.iterator
-          while (it.hasNext && !heldBack) {
-            out = it.next() match {
-              case b: BatchIdAware => b(out, batchId)
-              case p => p(out)
-            }
-            heldBack = out.schema.isEmpty
-          }
-          if (!heldBack) sink.write(out, batchId)
+          fold(processors, batch, Some(batchId)).foreach(sink.write(_, batchId))
           // the sink has consumed the release frame — any rate_cap
           // cache for THIS trigger can drop now instead of lingering
           // until (or past) the next trigger
@@ -350,31 +364,15 @@ object Engine {
     // reference drops pending sessions at close — read() returns None
     // once cancelled, session_window.rs:120-125; this is strictly more
     // durable.)
-    val sessions = processors.collect { case s: Processors.SessionWindowBuffer => s }
-    if (sessions.nonEmpty) {
+    if (processors.exists(_.isInstanceOf[Processors.SessionWindowBuffer])) {
       val spark = input.sparkSession
       // once-only guard: the terminated EVENT and the registration-time
       // catch-up check below can both observe the same termination — the
       // flush must run exactly once whichever wins
       val flushed = new java.util.concurrent.atomic.AtomicBoolean(false)
       def flushOnce(): Unit = if (flushed.compareAndSet(false, true)) {
-        try {
-          var flushId = -1L
-          sessions.foreach { s =>
-            val idx = processors.indexOf(s)
-            s.flushPending().foreach { session =>
-              var out = session
-              var held = false
-              val it = processors.drop(idx + 1).iterator
-              while (it.hasNext && !held) {
-                out = it.next()(out)
-                held = out.schema.isEmpty
-              }
-              if (!held) sink.write(out, flushId)
-              flushId -= 1
-            }
-          }
-        } catch {
+        try flushSessions(processors, sink, Iterator.iterate(-1L)(_ - 1))
+        catch {
           case scala.util.control.NonFatal(ex) =>
             System.err.println(
               s"[engine] session flush at query stop failed: ${ex.getMessage}")
@@ -470,8 +468,8 @@ object Engine {
       }
       c.options.get("query") match {
         case Some(q) =>
-          df.createOrReplaceTempView(c.options.getOrElse("table_name", "flow"))
-          spark.sql(q)
+          Sql.bind(spark, Sql.parse(q),
+            Map(c.options.getOrElse("table_name", "flow") -> df))
         case None => df
       }
     },
@@ -744,8 +742,8 @@ object Engine {
     *
     * A `join:` block (buffer/join.rs JoinConfig — parsed to dotted
     * `join.*` options) appends a [[Processors.WindowJoinProcessor]]: each
-    * fired window registers its per-source slices as views named by the
-    * `input` component's child input names and runs the join SQL.
+    * fired window runs the join SQL with its per-source slices bound
+    * under the `input` component's child input names.
     */
   /** Buffer dispatch TABLE — kind → core processors; the same
     * single-source-of-truth contract as [[inputBuilders]]/[[sinkBuilders]]
@@ -961,20 +959,11 @@ object Engine {
   def runBatch(in: DataFrame, procs: Seq[Processors.BatchTransform],
       sink: BatchSink, err: Option[BatchSink]): Unit =
     try {
-      // same held-back short-circuit as the streaming fold: a sentinel
-      // (e.g. JsonToArrow's zero-row inference guard) skips the sink.
       // Processors run through their PLAIN apply — a one-shot batch has
       // no meaningful batch id, and handing it a constant one would flip
       // a staged BatchAccumulator onto the cross-run staging path where
       // every run overwrites the same __acc_batch=0 partition.
-      var out = in
-      var heldBack = false
-      val it = procs.iterator
-      while (it.hasNext && !heldBack) {
-        out = it.next()(out)
-        heldBack = out.schema.isEmpty
-      }
-      if (!heldBack) sink.write(out, 0L)
+      fold(procs, in).foreach(sink.write(_, 0L))
       // EOF drain: a rate_cap carries overflow to "the next trigger",
       // but a one-shot batch has none — without this loop the held rows
       // would silently vanish at EOF. Feed empty batches until the carry
@@ -987,14 +976,7 @@ object Engine {
       // initial release
       var drainId = 1L
       while (remaining > 0) {
-        var drain = in.limit(0)
-        var held2 = false
-        val it2 = procs.iterator
-        while (it2.hasNext && !held2) {
-          drain = it2.next()(drain)
-          held2 = drain.schema.isEmpty
-        }
-        if (!held2) sink.write(drain, drainId)
+        fold(procs, in.limit(0)).foreach(sink.write(_, drainId))
         drainId += 1
         val now = caps.map(_.pendingRows).sum
         if (now >= remaining && now > 0)
@@ -1027,26 +1009,10 @@ object Engine {
       }
       caps.foreach(_.releaseCache()) // last drain pass's cache
       // EOF flush of still-open session windows (the reference's
-      // buffer.flush() + final read at stream end, stream/mod.rs:356-362):
-      // the flushed session runs through the processors DOWNSTREAM of its
-      // buffer (the window join + pipeline), then writes under a fresh
-      // drain id. Sliding windows intentionally drop partial windows at
-      // EOF, like the reference's close.
-      procs.zipWithIndex.collect {
-        case (b: Processors.SessionWindowBuffer, i) => (b, i)
-      }.foreach { case (b, i) =>
-        b.flushPending().foreach { session =>
-          var out = session
-          var held = false
-          val it3 = procs.drop(i + 1).iterator
-          while (it3.hasNext && !held) {
-            out = it3.next()(out)
-            held = out.schema.isEmpty
-          }
-          if (!held) sink.write(out, drainId)
-          drainId += 1
-        }
-      }
+      // buffer.flush() + final read at stream end, stream/mod.rs:356-362)
+      // under fresh drain ids. Sliding windows intentionally drop partial
+      // windows at EOF, like the reference's close.
+      flushSessions(procs, sink, Iterator.iterate(drainId)(_ + 1))
     } catch {
       case scala.util.control.NonFatal(e) =>
         err match {

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.plans.logical.{Command, InsertIntoStatement, LogicalPlan, ParsedStatement}
 import org.apache.spark.sql.functions._
 
 /** Processors (SURVEY.md §2.3): batch-in/batch-out transforms applied in
@@ -13,28 +12,26 @@ object Processors {
 
   type BatchTransform = DataFrame => DataFrame
 
-  /** `sql` processor (processor/sql.rs:39-201): registers the batch as
-    * `tableName` and runs one pre-validated statement. DDL/DML are
-    * rejected at build time like the reference's SQLOptions
-    * (sql.rs:185-201), by inspecting the parsed plan.
+  /** `sql` processor (processor/sql.rs:39-201): one statement, parsed and
+    * checked when the processor is built — DDL/DML and unparsable SQL
+    * fail at build like the reference's SQLOptions (sql.rs:185-201) —
+    * and run per batch with the batch bound as `tableName` by plan
+    * ([[Sql.bind]]): no catalog write, so streams sharing the session
+    * never read each other's batch or replace a session view. Every
+    * query also sees the graft function library.
     */
   final case class SqlProcessor(query: String, tableName: String = "flow")
       extends (DataFrame => DataFrame) {
-    def apply(batch: DataFrame): DataFrame = {
-      val spark = batch.sparkSession
+    private val parsed = Sql.parse(query)
+    def apply(batch: DataFrame): DataFrame = withViews(batch, Map.empty)
+    /** Run the query with `views` bound alongside the batch. */
+    private[streaming] def withViews(batch: DataFrame,
+        views: Map[String, DataFrame]): DataFrame = {
       // pipelines get the whole graft function library (minhash_sigs,
       // cdc_chunks, winnow_fps, ema, …) without per-function setup;
       // idempotent map puts, safe per micro-batch
-      graft.functions.Registry.registerAll(spark)
-      validate(spark.sessionState.sqlParser.parsePlan(query))
-      batch.createOrReplaceTempView(tableName)
-      spark.sql(query)
-    }
-    private def validate(plan: LogicalPlan): Unit = plan match {
-      case _: Command | _: ParsedStatement | _: InsertIntoStatement =>
-        throw new IllegalArgumentException(
-          s"sql processor only accepts queries, got: ${plan.getClass.getSimpleName}")
-      case _ => ()
+      graft.functions.Registry.registerAll(batch.sparkSession)
+      Sql.bind(batch.sparkSession, parsed, views + (tableName -> batch))
     }
   }
 
@@ -1914,31 +1911,25 @@ object Processors {
     * of processor/sql.rs:148-183. */
   final case class TemporaryLookup(name: String, provider: DataFrame => DataFrame)
 
-  /** `sql` processor with temporary lookup tables joined in. The views
-    * are DROPPED once the query is analyzed (spark.sql resolves views
-    * eagerly, so the returned frame's plan no longer needs them) — the
-    * reference deregisters its temporaries per pooled context, and a view
-    * that outlives the batch can leak into another stream sharing the
-    * session and a table_name. (Two streams registering the SAME name
-    * concurrently in one session still race — give them distinct
-    * table_names.) */
+  /** `sql` processor with temporary lookup tables joined in: each
+    * lookup's rows for the batch are broadcast and bound under its name
+    * together with the batch, by plan ([[Sql.bind]]) — like the
+    * reference's per-context temporaries, nothing outlives the batch or
+    * is visible to another stream, whatever names the streams share. */
   final case class LookupSqlProcessor(query: String, tableName: String,
       temporaries: Seq[TemporaryLookup]) extends (DataFrame => DataFrame) {
-    def apply(batch: DataFrame): DataFrame = {
-      val spark = batch.sparkSession
-      temporaries.foreach { t =>
-        broadcast(t.provider(batch)).createOrReplaceTempView(t.name)
-      }
-      try SqlProcessor(query, tableName)(batch)
-      finally temporaries.foreach(t => spark.catalog.dropTempView(t.name))
-    }
+    private val sql = SqlProcessor(query, tableName)
+    def apply(batch: DataFrame): DataFrame =
+      sql.withViews(batch,
+        temporaries.map(t => t.name -> broadcast(t.provider(batch))).toMap)
   }
 
   /** Cross-source window join processor (buffer/join.rs:62-130): the
     * batch arrives union-tagged with `__input_name` (multiple_inputs
-    * fan-in); each source's slice registers as a view named by its input
-    * and the join SQL runs across them. A missing expected source yields
-    * an empty window, like the reference's missing-source check.
+    * fan-in); the join SQL runs across the sources' slices, each bound
+    * under its input name ([[Windows.windowJoin]]). A missing expected
+    * source yields an empty window, like the reference's missing-source
+    * check.
     */
   final case class WindowJoinProcessor(joinSql: String, expected: Seq[String],
       decode: String => BatchTransform = _ => JsonToArrow())

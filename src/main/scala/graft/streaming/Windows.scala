@@ -24,18 +24,16 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   */
 object Windows {
 
-  /** Cross-source join within a fired window: register every source's
-    * accumulated batch as a view named by its input and run the join SQL.
-    * If an expected source is absent the window yields nothing — the
-    * reference's missing-source check (buffer/join.rs:101-116). */
+  /** Cross-source join within a fired window: the join SQL runs with
+    * every source's accumulated batch bound under its input name by plan
+    * ([[Sql.bind]] — no session views, so concurrent windows of other
+    * streams never see these slices). If an expected source is absent
+    * the window yields nothing — the reference's missing-source check
+    * (buffer/join.rs:101-116). */
   def windowJoin(spark: SparkSession, sources: Map[String, DataFrame],
-                 joinSql: String, expected: Seq[String]): DataFrame = {
+                 joinSql: String, expected: Seq[String]): DataFrame =
     if (expected.exists(e => !sources.contains(e))) spark.emptyDataFrame
-    else {
-      sources.foreach { case (name, df) => df.createOrReplaceTempView(name) }
-      spark.sql(joinSql)
-    }
-  }
+    else Sql.bind(spark, Sql.parse(joinSql), sources)
 
   /** Fan-in of several inputs with a source tag — the reference's
     * `multiple_inputs` (input/multiple_inputs.rs:30-110); batches keep
