@@ -62,7 +62,7 @@ object ScaleProbe {
     // measure under identical AQE/shuffle settings
     val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    graft.functions.Shims.register(spark)
+    graft.functions.Registry.install(spark)
     val docs = Tables.load(spark, sfDir, "documents").localCheckpoint(true)
     val big = perturb4x(docs).localCheckpoint(true)
     println(s"[probe] corpus 1x=${docs.count()} docs, 4x=${big.count()} docs")

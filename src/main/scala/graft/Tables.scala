@@ -22,26 +22,40 @@ object Tables {
     * table's file schema is metadata (this is exactly what a
     * catalog/metastore persists so scans never infer); caching it is
     * NOT result caching — every query still reads its data from the
-    * parquet files. One entry per path, stamped with the files the
-    * read resolved to ([[listing]]): a path rewritten with another
+    * parquet files. One entry per path and conf setting, stamped with
+    * the files the read resolved to ([[listing]]): a path rewritten with another
     * schema (the streaming `file` input reads user paths through here)
     * lists other files, so its schema is inferred again instead of
-    * served stale. The first load of a path still pays one inference
-    * (fresh JVMs start cold). */
+    * served stale. The key also carries the session's values of the
+    * confs that change what inference yields ([[inferenceConfs]]), so
+    * sessions that read a path under other settings do not share a
+    * schema. The first load of a path still pays one inference (fresh
+    * JVMs start cold). */
   private val schemaCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (Seq[(String, Long, Long)], org.apache.spark.sql.types.StructType)]()
+    (String, Seq[String]),
+    (Seq[(String, Long, Long)], org.apache.spark.sql.types.StructType)]()
+
+  /** The parquet schema-inference confs: each changes the type inferred
+    * for some physical column. */
+  private val inferenceConfs = Seq(
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.legacy.parquet.nanosAsLong")
 
   /** Schema-cached parquet read (no reader options). Shared with the
     * streaming file input for its plain parquet case. */
-  def cachedParquet(spark: SparkSession, path: String): DataFrame =
-    Option(schemaCache.get(path))
+  def cachedParquet(spark: SparkSession, path: String): DataFrame = {
+    val key = (path, inferenceConfs.map(spark.conf.get(_)))
+    Option(schemaCache.get(key))
       .map { case (files, schema) => (files, spark.read.schema(schema).parquet(path)) }
       .collect { case (files, df) if listing(df) == files => df }
       .getOrElse {
         val inferred = spark.read.parquet(path)
-        schemaCache.put(path, (listing(inferred), inferred.schema))
+        schemaCache.put(key, (listing(inferred), inferred.schema))
         spark.read.schema(inferred.schema).parquet(path)
       }
+  }
 
   /** Name, size and modification time of each file a parquet read
     * resolved to, sorted — taken from the file index Spark listed on the

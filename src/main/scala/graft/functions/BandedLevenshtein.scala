@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, IntegerType}
@@ -93,9 +92,4 @@ object BandedLevenshtein {
     }
     if (prev(n) <= threshold) prev(n) else -1
   }
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "banded_levenshtein",
-      exprs => BandedLevenshtein(exprs(0), exprs(1), exprs(2)), "scala_udf")
 }

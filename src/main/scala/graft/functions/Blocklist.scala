@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -134,9 +133,4 @@ object BlocklistHits {
     new Automaton(goto.toArray, fail, outB.map(_.toArray.sorted).toArray,
       phrases.size)
   }
-
-  /** Expose as SQL function `blocklist_hits(text, phrases)`. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "blocklist_hits", exprs => BlocklistHits(exprs(0), exprs(1)), "scala_udf")
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -90,9 +89,4 @@ object Bpe {
     }
     new GenericArrayData(syms.map(UTF8String.fromString(_)))
   }
-
-  /** Expose as SQL function `bpe_encode(symbols, merges)`. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bpe_encode", exprs => BpeEncode(exprs(0), exprs(1)), "scala_udf")
 }

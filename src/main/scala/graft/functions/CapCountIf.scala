@@ -123,16 +123,14 @@ object CapCountIf {
 
   /** `graft_cap_count_if(pred, 'label')` — the SQL surface, resolved at
     * analysis time on the driver (where the accumulator registry lives). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_cap_count_if", { exprs =>
-        require(exprs.size == 2,
-          "graft_cap_count_if(pred, label) takes 2 arguments")
-        val label = exprs(1) match {
-          case Literal(s: UTF8String, StringType) => s.toString
-          case other => throw new IllegalArgumentException(
-            s"graft_cap_count_if: label must be a string literal, got $other")
-        }
-        CapCountIf(exprs.head, accumulator(SparkSession.active, label))
-      }, "scala_udf")
+  def builder(exprs: Seq[Expression]): Expression = {
+    require(exprs.size == 2,
+      "graft_cap_count_if(pred, label) takes 2 arguments")
+    val label = exprs(1) match {
+      case Literal(s: UTF8String, StringType) => s.toString
+      case other => throw new IllegalArgumentException(
+        s"graft_cap_count_if: label must be a string literal, got $other")
+    }
+    CapCountIf(exprs.head, accumulator(SparkSession.active, label))
+  }
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -88,9 +87,4 @@ object CdcChunks {
     if (start < n) out += UTF8String.fromString(s.substring(cu(start), s.length))
     new GenericArrayData(out.toArray)
   }
-
-  /** Expose as SQL function `cdc_chunks(text, k, d)`. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cdc_chunks", exprs => CdcChunks(exprs(0), exprs(1), exprs(2)), "scala_udf")
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, DoubleType}
@@ -70,9 +69,4 @@ object CharEntropy {
     }
     (math.log(n.toDouble) - acc / n) / Ln2
   }
-
-  /** Expose as SQL function `char_entropy(s)`. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "char_entropy", exprs => CharEntropy(exprs(0)), "scala_udf")
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, IntegerType}
@@ -82,9 +81,4 @@ object DamerauLevenshtein {
     }
     h((la + 1) * w + lb + 1)
   }
-
-  /** Expose as SQL function `damerau_levenshtein(a, b)`. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "damerau_levenshtein", exprs => DamerauLevenshtein(exprs(0), exprs(1)), "scala_udf")
 }

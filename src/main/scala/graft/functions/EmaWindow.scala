@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.dsl.expressions._
 import org.apache.spark.sql.catalyst.expressions.{AggregateWindowFunction, AttributeReference, Expression, If, IsNull, Literal}
 import org.apache.spark.sql.types.{DataType, DoubleType}
@@ -91,13 +90,4 @@ case class EmaWindow(child: Expression, alpha: Expression)
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): EmaWindow =
     copy(child = newChildren(0), alpha = newChildren(1))
-}
-
-object EmaWindow {
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "ema", { exprs =>
-        require(exprs.length == 2, s"ema(x, alpha) takes 2 args, got ${exprs.length}")
-        EmaWindow(exprs(0), exprs(1))
-      }, "scala_udf")
 }

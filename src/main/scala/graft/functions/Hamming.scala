@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, IntegerType}
@@ -47,9 +46,4 @@ object HammingDistance {
     }
     d
   }
-
-  /** Expose as SQL function `hamming_distance(a, b)`. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "hamming_distance", exprs => HammingDistance(exprs(0), exprs(1)), "scala_udf")
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, DoubleType}
@@ -93,9 +92,4 @@ object JaroWinkler {
     while (p < maxP && s.charAt(p) == t.charAt(p)) p += 1
     jaro + p * 0.1 * (1.0 - jaro)
   }
-
-  /** Expose as SQL function `jaro_winkler(a, b)`. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "jaro_winkler", exprs => JaroWinkler(exprs(0), exprs(1)), "scala_udf")
 }

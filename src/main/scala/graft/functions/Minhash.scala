@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -58,9 +57,4 @@ object MinhashSigs {
     new GenericArrayData(mins.map(m =>
       if (m == null) null else UTF8String.fromString(m)))
   }
-
-  /** Expose as SQL function `minhash_sigs(shingles, num_hashes)`. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "minhash_sigs", exprs => MinhashSigs(exprs(0), exprs(1)), "scala_udf")
 }

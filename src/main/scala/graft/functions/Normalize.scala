@@ -2,7 +2,6 @@ package graft.functions
 
 import java.text.Normalizer
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, StringType}
@@ -85,14 +84,4 @@ object NormalizeOps {
       val nfd = Normalizer.normalize(s.toString, Normalizer.Form.NFD)
       UTF8String.fromString(CombiningMarks.matcher(nfd).replaceAll(""))
     }
-
-  /** Live-session registration of `nfc_normalize(s)` / `strip_accents(s)`
-    * (the [[graft.plans.GraftExtensions]] path needs no register call). */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction(
-      "nfc_normalize", exprs => NfcNormalize(exprs.head), "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "strip_accents", exprs => StripAccents(exprs.head), "scala_udf")
-  }
 }

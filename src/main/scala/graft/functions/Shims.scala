@@ -1,13 +1,12 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.types._
 
 /** Compatibility shims for DataFusion-only SQL functions the reference's
   * SQL surface exposes (SURVEY.md §7.3: date_bin, array_resize /
-  * array_pop_* tail, substr_index, iszero) — registered as temp functions
-  * that expand into trees of existing codegen'd Catalyst expressions, so
+  * array_pop_* tail, substr_index, iszero) — entries of the [[Registry]]
+  * table that expand into trees of existing codegen'd Catalyst expressions, so
   * they cost nothing at runtime versus hand-written SQL.
   *
   * Reference inventory: docs/docs/sql/7-scalar_functions.md (date_bin,
@@ -15,10 +14,9 @@ import org.apache.spark.sql.types._
   */
 object Shims {
 
-  /** Name -> expression-tree builder for every shim, shared by the live
-    * [[register]] path and [[graft.plans.GraftExtensions]]'s
-    * `injectFunction` path (config-enabled sessions). */
-  val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
+  /** Name -> expression-tree builder for every shim; part of
+    * [[Registry.functions]]. */
+  val builders: Seq[(String, Registry.Builder)] = Seq(
     // date_bin(stride_seconds, ts, origin_ts): origin-aligned bucketing —
     // origin + floor((ts - origin) / stride) * stride, in whole seconds.
     "date_bin_s" -> { exprs =>
@@ -75,12 +73,4 @@ object Shims {
     "bloom_might_contain" -> { exprs =>
       BloomFilterMightContain(exprs(0), new XxHash64(Seq(exprs(1))))
     })
-
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    builders.foreach { case (name, b) =>
-      reg.createOrReplaceTempFunction(name, b, "scala_udf")
-    }
-    HammingDistance.register(spark)
-  }
 }

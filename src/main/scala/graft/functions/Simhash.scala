@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -79,9 +78,4 @@ object SimhashBits {
     }
     UTF8String.fromBytes(out)
   }
-
-  /** Expose as SQL function `simhash_bits(words, bits)`. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "simhash_bits", exprs => SimhashBits(exprs(0), exprs(1)), "scala_udf")
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{ConditionalExpression, Expression, GenericInternalRow, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodeGenerator, ExprCode}
@@ -20,14 +19,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * evaluate it unprotected — the error would escape the try/catch. A
   * single struct-producing expression keeps the child inside its own
   * catch no matter how CSE rearranges, and evaluates it once.
-  */
-object TryOps {
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "try_pair", exprs => TryPair(exprs(0)), "scala_udf")
-}
-
-/** `struct(value: <child type>, err: string)` — child's value and null
+  *
+  * `struct(value: <child type>, err: string)` — child's value and null
   * err when it evaluates; null value and the exception message when it
   * throws. Codegen wraps the child's generated code in try/catch (no
   * interpreted UDF), so fallible remap programs stay inside

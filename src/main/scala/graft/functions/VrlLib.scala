@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -13,7 +12,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * here adds an interpreted call to the hot path.
   */
 object VrlLib {
-  def register(spark: SparkSession): Unit = {
+  /** Name -> builder of every `graft_vrl_*` function the remap processor
+    * compiles VRL calls onto; part of [[Registry.functions]]. */
+  val builders: Seq[(String, Registry.Builder)] = {
+    val b = Seq.newBuilder[(String, Registry.Builder)]
+    def add(name: String, build: Registry.Builder): Unit = b += name -> build
     /** the base64 `charset:` option — "standard" | "url_safe" → urlSafe */
     def base64Charset(e: Expression, what: String): Boolean = e match {
       case Literal(s: UTF8String, StringType) => s.toString match {
@@ -25,629 +28,556 @@ object VrlLib {
       case _ => throw new IllegalArgumentException(
         s"$what: the charset argument must be a string literal")
     }
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_vrl_length", { exprs =>
-        require(exprs.size == 1, "length(value) takes 1 argument")
-        VrlLength(exprs.head)
-      }, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_vrl_strptime", { exprs =>
-        require(exprs.size == 2,
-          "parse_timestamp(value, format) takes 2 arguments")
-        VrlStrptime(exprs.head, exprs(1))
-      }, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_vrl_parse_url", { exprs =>
-        // VRL's 1-arg parse_url(u) → the full parts struct; a 2-arg call
-        // falls through to Spark's own parse_url(u, part) untouched
-        if (exprs.size == 2) new ParseUrl(exprs.toSeq)
-        else {
-          require(exprs.size == 1, "parse_url(url) takes 1 argument")
-          VrlLib.parseUrlStruct(exprs.head)
-        }
-      }, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_vrl_parse_regex", { exprs =>
-        require(exprs.size == 2, "parse_regex(value, pattern) takes 2 arguments")
-        VrlLib.parseRegexStruct(exprs.head, exprs(1))
-      }, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_vrl_parse_kv", { exprs =>
-        require(exprs.size >= 1 && exprs.size <= 3,
-          "parse_key_value(value[, key_value_delimiter[, field_delimiter]]) " +
-            "takes 1-3 arguments")
-        VrlParseKeyValue(exprs.head,
-          exprs.lift(1).getOrElse(Literal("=")),
-          exprs.lift(2).getOrElse(Literal(" ")))
-      }, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_vrl_parse_syslog", { exprs =>
-        require(exprs.size == 1, "parse_syslog(value) takes 1 argument")
-        VrlLib.parseSyslogStruct(exprs.head)
-      }, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_vrl_ip_cidr_contains", { exprs =>
-        require(exprs.size == 2, "ip_cidr_contains(cidr, ip) takes 2 arguments")
-        // round 13: byte-wise kernel covering BOTH families (the earlier
-        // v4 mask arithmetic answered null for v6 — a documented
-        // divergence now closed); malformed input throws like VRL's
-        // fallible form
-        VrlCidrContains(exprs.head, exprs(1))
-      }, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_vrl_is_ipv4", { exprs =>
-        require(exprs.size == 1, "is_ipv4(value) takes 1 argument")
-        RLike(exprs.head, Literal(VrlLib.Ipv4Pattern))
-      }, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_vrl_is_ipv6", { exprs =>
-        require(exprs.size == 1, "is_ipv6(value) takes 1 argument")
-        RLike(exprs.head, Literal(VrlLib.Ipv6Pattern))
-      }, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_vrl_parse_grok", { exprs =>
-        require(exprs.size == 2, "parse_grok(value, pattern) takes 2 arguments")
-        VrlLib.parseGrokStruct(exprs.head, exprs(1))
-      }, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_vrl_parse_common_log", { exprs =>
-        require(exprs.size == 1, "parse_common_log(value) takes 1 argument")
-        VrlLib.parseCommonLogStruct(exprs.head, combined = false)
-      }, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_vrl_parse_apache_log", { exprs =>
-        require(exprs.size == 2,
-          "parse_apache_log(value, format) takes 2 arguments")
-        VrlLib.parseApacheLogStruct(exprs.head, exprs(1))
-      }, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_vrl_parse_nginx_log", { exprs =>
-        require(exprs.size == 2,
-          "parse_nginx_log(value, format) takes 2 arguments")
-        VrlLib.parseNginxLogStruct(exprs.head, exprs(1))
-      }, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_vrl_parse_duration", { exprs =>
-        require(exprs.size == 2,
-          "parse_duration(value, unit) takes 2 arguments")
-        VrlLib.parseDuration(exprs.head, exprs(1))
-      }, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_vrl_encode_base64", { exprs =>
-        require(exprs.size >= 1 && exprs.size <= 3,
-          "encode_base64(value[, padding[, charset]]) takes 1-3 arguments")
-        // VRL options: padding (bool) and charset "standard"|"url_safe";
-        // the optionless form stays on Spark's own codegen'd Base64.
-        // VRL named args are ORDER-FREE and the generic label strip keeps
-        // positions, so either option can land in either slot — a string
-        // literal in slot 1 is unambiguously the charset, and a boolean
-        // literal after it is then the padding option (only two string
-        // literals are actually "charset given twice").
-        val (padding, slot1Charset) = exprs.lift(1) match {
-          case None => (true, None)
-          case Some(Literal(b: Boolean, BooleanType)) => (b, None)
-          case Some(e @ Literal(_: UTF8String, StringType)) =>
-            val pad = exprs.lift(2) match {
-              case None => true
-              case Some(Literal(b: Boolean, BooleanType)) => b
-              case Some(_) => throw new IllegalArgumentException(
-                "encode_base64: charset given twice")
-            }
-            (pad, Some(base64Charset(e, "encode_base64")))
-          case _ => throw new IllegalArgumentException(
-            "encode_base64: padding must be a boolean literal")
-        }
-        val urlSafe = slot1Charset.getOrElse(exprs.lift(2) match {
-          case None => false
-          case Some(e) => base64Charset(e, "encode_base64")
-        })
-        if (padding && !urlSafe) Base64(Cast(exprs.head, BinaryType))
-        else VrlBase64(Cast(exprs.head, BinaryType), urlSafe, padding,
-          encode = true)
-      }, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_vrl_decode_base64", { exprs =>
-        require(exprs.size == 1 || exprs.size == 2,
-          "decode_base64(value[, charset]) takes 1-2 arguments")
-        exprs.lift(1) match {
-          case None => Cast(new UnBase64(exprs.head), StringType)
-          case Some(e) =>
-            VrlBase64(Cast(exprs.head, StringType), base64Charset(e, "decode_base64"),
-              padding = true, encode = false)
-        }
-      }, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_vrl_strip_ansi", { exprs =>
-        require(exprs.size == 1,
-          "strip_ansi_escape_codes(value) takes 1 argument")
-        // CSI sequences (ESC [ params intermediates final) plus bare
-        // two-char ESC sequences — the forms real terminal output emits
-        RegExpReplace(exprs.head,
-          Literal("\u001B(?:\\[[0-9;?]*[ -/]*[@-~]|[@-_])"), Literal(""))
-      }, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_vrl_ip_aton", { exprs =>
-        require(exprs.size == 1, "ip_aton(value) takes 1 argument")
-        VrlLib.ipv4ToLong(exprs.head)
-      }, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_vrl_ip_ntoa", { exprs =>
-        require(exprs.size == 1, "ip_ntoa(value) takes 1 argument")
-        VrlLib.longToIpv4(exprs.head)
-      }, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_vrl_to_syslog_severity", { exprs =>
-        require(exprs.size == 1, "to_syslog_severity(value) takes 1 argument")
-        VrlLib.toSyslogSeverity(exprs.head)
-      }, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_vrl_to_syslog_level", { exprs =>
-        require(exprs.size == 1, "to_syslog_level(value) takes 1 argument")
-        VrlLib.toSyslogLevel(exprs.head)
-      }, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_vrl_parse_user_agent", { exprs =>
-        require(exprs.size == 1, "parse_user_agent(value) takes 1 argument")
-        VrlLib.parseUserAgentStruct(exprs.head)
-      }, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_vrl_parse_query_string", { exprs =>
-        require(exprs.size == 1, "parse_query_string(value) takes 1 argument")
-        // URL-decoding kernel (str_to_map decodes nothing) —
-        // [[graft.functions.VrlParseQueryString]]
-        VrlParseQueryString(exprs.head)
-      }, "scala_udf")
+    add("graft_vrl_length", { exprs =>
+      require(exprs.size == 1, "length(value) takes 1 argument")
+      VrlLength(exprs.head)
+    })
+    add("graft_vrl_strptime", { exprs =>
+      require(exprs.size == 2,
+        "parse_timestamp(value, format) takes 2 arguments")
+      VrlStrptime(exprs.head, exprs(1))
+    })
+    add("graft_vrl_parse_url", { exprs =>
+      // VRL's 1-arg parse_url(u) → the full parts struct; a 2-arg call
+      // falls through to Spark's own parse_url(u, part) untouched
+      if (exprs.size == 2) new ParseUrl(exprs.toSeq)
+      else {
+        require(exprs.size == 1, "parse_url(url) takes 1 argument")
+        VrlLib.parseUrlStruct(exprs.head)
+      }
+    })
+    add("graft_vrl_parse_regex", { exprs =>
+      require(exprs.size == 2, "parse_regex(value, pattern) takes 2 arguments")
+      VrlLib.parseRegexStruct(exprs.head, exprs(1))
+    })
+    add("graft_vrl_parse_kv", { exprs =>
+      require(exprs.size >= 1 && exprs.size <= 3,
+        "parse_key_value(value[, key_value_delimiter[, field_delimiter]]) " +
+          "takes 1-3 arguments")
+      VrlParseKeyValue(exprs.head,
+        exprs.lift(1).getOrElse(Literal("=")),
+        exprs.lift(2).getOrElse(Literal(" ")))
+    })
+    add("graft_vrl_parse_syslog", { exprs =>
+      require(exprs.size == 1, "parse_syslog(value) takes 1 argument")
+      VrlLib.parseSyslogStruct(exprs.head)
+    })
+    add("graft_vrl_ip_cidr_contains", { exprs =>
+      require(exprs.size == 2, "ip_cidr_contains(cidr, ip) takes 2 arguments")
+      // round 13: byte-wise kernel covering BOTH families (the earlier
+      // v4 mask arithmetic answered null for v6 — a documented
+      // divergence now closed); malformed input throws like VRL's
+      // fallible form
+      VrlCidrContains(exprs.head, exprs(1))
+    })
+    add("graft_vrl_is_ipv4", { exprs =>
+      require(exprs.size == 1, "is_ipv4(value) takes 1 argument")
+      RLike(exprs.head, Literal(VrlLib.Ipv4Pattern))
+    })
+    add("graft_vrl_is_ipv6", { exprs =>
+      require(exprs.size == 1, "is_ipv6(value) takes 1 argument")
+      RLike(exprs.head, Literal(VrlLib.Ipv6Pattern))
+    })
+    add("graft_vrl_parse_grok", { exprs =>
+      require(exprs.size == 2, "parse_grok(value, pattern) takes 2 arguments")
+      VrlLib.parseGrokStruct(exprs.head, exprs(1))
+    })
+    add("graft_vrl_parse_common_log", { exprs =>
+      require(exprs.size == 1, "parse_common_log(value) takes 1 argument")
+      VrlLib.parseCommonLogStruct(exprs.head, combined = false)
+    })
+    add("graft_vrl_parse_apache_log", { exprs =>
+      require(exprs.size == 2,
+        "parse_apache_log(value, format) takes 2 arguments")
+      VrlLib.parseApacheLogStruct(exprs.head, exprs(1))
+    })
+    add("graft_vrl_parse_nginx_log", { exprs =>
+      require(exprs.size == 2,
+        "parse_nginx_log(value, format) takes 2 arguments")
+      VrlLib.parseNginxLogStruct(exprs.head, exprs(1))
+    })
+    add("graft_vrl_parse_duration", { exprs =>
+      require(exprs.size == 2,
+        "parse_duration(value, unit) takes 2 arguments")
+      VrlLib.parseDuration(exprs.head, exprs(1))
+    })
+    add("graft_vrl_encode_base64", { exprs =>
+      require(exprs.size >= 1 && exprs.size <= 3,
+        "encode_base64(value[, padding[, charset]]) takes 1-3 arguments")
+      // VRL options: padding (bool) and charset "standard"|"url_safe";
+      // the optionless form stays on Spark's own codegen'd Base64.
+      // VRL named args are ORDER-FREE and the generic label strip keeps
+      // positions, so either option can land in either slot — a string
+      // literal in slot 1 is unambiguously the charset, and a boolean
+      // literal after it is then the padding option (only two string
+      // literals are actually "charset given twice").
+      val (padding, slot1Charset) = exprs.lift(1) match {
+        case None => (true, None)
+        case Some(Literal(b: Boolean, BooleanType)) => (b, None)
+        case Some(e @ Literal(_: UTF8String, StringType)) =>
+          val pad = exprs.lift(2) match {
+            case None => true
+            case Some(Literal(b: Boolean, BooleanType)) => b
+            case Some(_) => throw new IllegalArgumentException(
+              "encode_base64: charset given twice")
+          }
+          (pad, Some(base64Charset(e, "encode_base64")))
+        case _ => throw new IllegalArgumentException(
+          "encode_base64: padding must be a boolean literal")
+      }
+      val urlSafe = slot1Charset.getOrElse(exprs.lift(2) match {
+        case None => false
+        case Some(e) => base64Charset(e, "encode_base64")
+      })
+      if (padding && !urlSafe) Base64(Cast(exprs.head, BinaryType))
+      else VrlBase64(Cast(exprs.head, BinaryType), urlSafe, padding,
+        encode = true)
+    })
+    add("graft_vrl_decode_base64", { exprs =>
+      require(exprs.size == 1 || exprs.size == 2,
+        "decode_base64(value[, charset]) takes 1-2 arguments")
+      exprs.lift(1) match {
+        case None => Cast(new UnBase64(exprs.head), StringType)
+        case Some(e) =>
+          VrlBase64(Cast(exprs.head, StringType), base64Charset(e, "decode_base64"),
+            padding = true, encode = false)
+      }
+    })
+    add("graft_vrl_strip_ansi", { exprs =>
+      require(exprs.size == 1,
+        "strip_ansi_escape_codes(value) takes 1 argument")
+      // CSI sequences (ESC [ params intermediates final) plus bare
+      // two-char ESC sequences — the forms real terminal output emits
+      RegExpReplace(exprs.head,
+        Literal("\u001B(?:\\[[0-9;?]*[ -/]*[@-~]|[@-_])"), Literal(""))
+    })
+    add("graft_vrl_ip_aton", { exprs =>
+      require(exprs.size == 1, "ip_aton(value) takes 1 argument")
+      VrlLib.ipv4ToLong(exprs.head)
+    })
+    add("graft_vrl_ip_ntoa", { exprs =>
+      require(exprs.size == 1, "ip_ntoa(value) takes 1 argument")
+      VrlLib.longToIpv4(exprs.head)
+    })
+    add("graft_vrl_to_syslog_severity", { exprs =>
+      require(exprs.size == 1, "to_syslog_severity(value) takes 1 argument")
+      VrlLib.toSyslogSeverity(exprs.head)
+    })
+    add("graft_vrl_to_syslog_level", { exprs =>
+      require(exprs.size == 1, "to_syslog_level(value) takes 1 argument")
+      VrlLib.toSyslogLevel(exprs.head)
+    })
+    add("graft_vrl_parse_user_agent", { exprs =>
+      require(exprs.size == 1, "parse_user_agent(value) takes 1 argument")
+      VrlLib.parseUserAgentStruct(exprs.head)
+    })
+    add("graft_vrl_parse_query_string", { exprs =>
+      require(exprs.size == 1, "parse_query_string(value) takes 1 argument")
+      // URL-decoding kernel (str_to_map decodes nothing) —
+      // [[graft.functions.VrlParseQueryString]]
+      VrlParseQueryString(exprs.head)
+    })
     def literalString(e: Expression, what: String): String = e match {
       case Literal(s: UTF8String, StringType) => s.toString
       case _ => throw new IllegalArgumentException(
         s"$what must be a string literal")
     }
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_vrl_parse_csv", { exprs =>
-        require(exprs.size == 1 || exprs.size == 2,
-          "parse_csv(value[, delimiter]) takes 1-2 arguments")
-        // config argument validated at BUILD (the sha2-variant pattern):
-        // a bad delimiter fails analysis naming the culprit instead of
-        // killing the micro-batch row-by-row inside the kernel
-        val delim = exprs.lift(1)
-          .map(literalString(_, "parse_csv: the delimiter argument"))
-          .getOrElse(",")
-        require(delim.length == 1,
-          s"parse_csv: delimiter must be one character, got `$delim`")
-        VrlParseCsv(exprs.head, Literal(delim))
-      }, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_vrl_encode_csv", { exprs =>
-        require(exprs.size == 1 || exprs.size == 2,
-          "encode_csv(array[, delimiter]) takes 1-2 arguments")
-        val delim = exprs.lift(1)
-          .map(literalString(_, "encode_csv: the delimiter argument"))
-          .getOrElse(",")
-        require(delim.length == 1,
-          s"encode_csv: delimiter must be one character, got `$delim`")
-        VrlEncodeCsv(exprs.head, Literal(delim))
-      }, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_vrl_parse_int", { exprs =>
-        require(exprs.size == 1 || exprs.size == 2,
-          "parse_int(value[, base]) takes 1-2 arguments")
-        val base = exprs.lift(1).map {
-          case Literal(b: Int, IntegerType) => b
-          case Literal(b: Long, LongType) => b.toInt
-          case _ => throw new IllegalArgumentException(
-            "parse_int: the base argument must be an integer literal")
-        }.getOrElse(0)
-        require(base == 0 || (base >= 2 && base <= 36),
-          s"parse_int: base must be 2-36, got $base")
-        VrlParseInt(exprs.head, base)
-      }, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_vrl_to_timestamp", { exprs =>
-        require(exprs.size == 1 || exprs.size == 2,
-          "to_timestamp/from_unix_timestamp(value[, unit]) takes 1-2 arguments")
-        val unit = exprs.lift(1)
-          .map(literalString(_, "to_timestamp: the unit argument"))
-          .getOrElse("seconds")
-        require(Seq("seconds", "milliseconds", "nanoseconds").contains(unit),
-          s"to_timestamp: unit must be seconds|milliseconds|nanoseconds, got `$unit`")
-        VrlToTimestamp(exprs.head, unit)
-      }, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_vrl_parse_cef", { exprs =>
-        require(exprs.size == 1, "parse_cef(value) takes 1 argument")
-        VrlParseCef(exprs.head)
-      }, "scala_udf")
+    add("graft_vrl_parse_csv", { exprs =>
+      require(exprs.size == 1 || exprs.size == 2,
+        "parse_csv(value[, delimiter]) takes 1-2 arguments")
+      // config argument validated at BUILD (the sha2-variant pattern):
+      // a bad delimiter fails analysis naming the culprit instead of
+      // killing the micro-batch row-by-row inside the kernel
+      val delim = exprs.lift(1)
+        .map(literalString(_, "parse_csv: the delimiter argument"))
+        .getOrElse(",")
+      require(delim.length == 1,
+        s"parse_csv: delimiter must be one character, got `$delim`")
+      VrlParseCsv(exprs.head, Literal(delim))
+    })
+    add("graft_vrl_encode_csv", { exprs =>
+      require(exprs.size == 1 || exprs.size == 2,
+        "encode_csv(array[, delimiter]) takes 1-2 arguments")
+      val delim = exprs.lift(1)
+        .map(literalString(_, "encode_csv: the delimiter argument"))
+        .getOrElse(",")
+      require(delim.length == 1,
+        s"encode_csv: delimiter must be one character, got `$delim`")
+      VrlEncodeCsv(exprs.head, Literal(delim))
+    })
+    add("graft_vrl_parse_int", { exprs =>
+      require(exprs.size == 1 || exprs.size == 2,
+        "parse_int(value[, base]) takes 1-2 arguments")
+      val base = exprs.lift(1).map {
+        case Literal(b: Int, IntegerType) => b
+        case Literal(b: Long, LongType) => b.toInt
+        case _ => throw new IllegalArgumentException(
+          "parse_int: the base argument must be an integer literal")
+      }.getOrElse(0)
+      require(base == 0 || (base >= 2 && base <= 36),
+        s"parse_int: base must be 2-36, got $base")
+      VrlParseInt(exprs.head, base)
+    })
+    add("graft_vrl_to_timestamp", { exprs =>
+      require(exprs.size == 1 || exprs.size == 2,
+        "to_timestamp/from_unix_timestamp(value[, unit]) takes 1-2 arguments")
+      val unit = exprs.lift(1)
+        .map(literalString(_, "to_timestamp: the unit argument"))
+        .getOrElse("seconds")
+      require(Seq("seconds", "milliseconds", "nanoseconds").contains(unit),
+        s"to_timestamp: unit must be seconds|milliseconds|nanoseconds, got `$unit`")
+      VrlToTimestamp(exprs.head, unit)
+    })
+    add("graft_vrl_parse_cef", { exprs =>
+      require(exprs.size == 1, "parse_cef(value) takes 1 argument")
+      VrlParseCef(exprs.head)
+    })
     Seq("camel", "pascal", "snake", "screaming_snake", "kebab").foreach { style =>
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        s"graft_vrl_${style}case", { exprs =>
-          require(exprs.size == 1, s"${style}case(value) takes 1 argument")
-          VrlCaseConvert(exprs.head, style)
-        }, "scala_udf")
+      add(s"graft_vrl_${style}case", { exprs =>
+        require(exprs.size == 1, s"${style}case(value) takes 1 argument")
+        VrlCaseConvert(exprs.head, style)
+      })
     }
     Seq(("encrypt", true), ("decrypt", false)).foreach { case (name, enc) =>
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        s"graft_vrl_$name", { exprs =>
-          require(exprs.size == 4,
-            s"$name(value, algorithm, key, iv: ...) takes 4 arguments")
-          // spelling is case-insensitive (docs and programs mix
-          // "ChaCha20-Poly1305" / "CHACHA20-POLY1305")
-          val algo = literalString(exprs(1), s"$name: the algorithm argument")
-            .toUpperCase(java.util.Locale.ROOT)
-          val (transform, keyLen) = VrlCipher.Variants.getOrElse(algo,
-            throw new IllegalArgumentException(
-              s"$name: unknown algorithm `$algo`; supported: " +
-                VrlCipher.Variants.keys.toSeq.sorted.mkString(" ")))
-          val value = if (enc) exprs.head else Cast(exprs.head, BinaryType)
-          VrlCipher(value, exprs(2), exprs(3), s"$transform;$keyLen", enc)
-        }, "scala_udf")
+      add(s"graft_vrl_$name", { exprs =>
+        require(exprs.size == 4,
+          s"$name(value, algorithm, key, iv: ...) takes 4 arguments")
+        // spelling is case-insensitive (docs and programs mix
+        // "ChaCha20-Poly1305" / "CHACHA20-POLY1305")
+        val algo = literalString(exprs(1), s"$name: the algorithm argument")
+          .toUpperCase(java.util.Locale.ROOT)
+        val (transform, keyLen) = VrlCipher.Variants.getOrElse(algo,
+          throw new IllegalArgumentException(
+            s"$name: unknown algorithm `$algo`; supported: " +
+              VrlCipher.Variants.keys.toSeq.sorted.mkString(" ")))
+        val value = if (enc) exprs.head else Cast(exprs.head, BinaryType)
+        VrlCipher(value, exprs(2), exprs(3), s"$transform;$keyLen", enc)
+      })
     }
     Seq("encodePercent" -> "encode_percent", "decodePercent" -> "decode_percent",
       "encodePunycode" -> "encode_punycode",
       "decodePunycode" -> "decode_punycode").foreach { case (method, name) =>
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        s"graft_vrl_$name", { exprs =>
-          require(exprs.size == 1, s"$name(value) takes 1 argument")
-          VrlStringKernel1(exprs.head, method, StringType)
-        }, "scala_udf")
+      add(s"graft_vrl_$name", { exprs =>
+        require(exprs.size == 1, s"$name(value) takes 1 argument")
+        VrlStringKernel1(exprs.head, method, StringType)
+      })
     }
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_vrl_format_int", { exprs =>
-        require(exprs.size == 1 || exprs.size == 2,
-          "format_int(value[, base]) takes 1-2 arguments")
-        val base = exprs.lift(1).map {
-          case Literal(b: Int, IntegerType) => b
-          case Literal(b: Long, LongType) => b.toInt
+    add("graft_vrl_format_int", { exprs =>
+      require(exprs.size == 1 || exprs.size == 2,
+        "format_int(value[, base]) takes 1-2 arguments")
+      val base = exprs.lift(1).map {
+        case Literal(b: Int, IntegerType) => b
+        case Literal(b: Long, LongType) => b.toInt
+        case _ => throw new IllegalArgumentException(
+          "format_int: the base argument must be an integer literal")
+      }.getOrElse(10)
+      require(base >= 2 && base <= 36,
+        s"format_int: base must be 2-36, got $base")
+      VrlFormatInt(Cast(exprs.head, LongType), base)
+    })
+    add("graft_vrl_parse_aws_alb_log", { exprs =>
+      require(exprs.size == 1, "parse_aws_alb_log(value) takes 1 argument")
+      VrlParseAlbLog(exprs.head)
+    })
+    add("graft_vrl_parse_aws_vpc_flow_log", { exprs =>
+      require(exprs.size == 1 || exprs.size == 2,
+        "parse_aws_vpc_flow_log(value[, format]) takes 1-2 arguments")
+      val format = exprs.lift(1)
+        .map(literalString(_, "parse_aws_vpc_flow_log: the format argument"))
+        .getOrElse(VrlParseVpcFlow.DefaultFormat)
+      VrlParseVpcFlow(exprs.head, format)
+    })
+    add("graft_vrl_redact", { exprs =>
+      require(exprs.size == 2, "redact(value, filters: [...]) takes 2 arguments")
+      // filters resolve at BUILD: each array element is a regex string
+      // literal or a named filter; the result is a codegen
+      // RegExpReplace chain, nothing interpreted per row
+      val patterns = exprs(1) match {
+        case CreateArray(children, _) => children.map {
+          case Literal(s: UTF8String, StringType) =>
+            VrlRedact.Named.getOrElse(s.toString, s.toString)
           case _ => throw new IllegalArgumentException(
-            "format_int: the base argument must be an integer literal")
-        }.getOrElse(10)
-        require(base >= 2 && base <= 36,
-          s"format_int: base must be 2-36, got $base")
-        VrlFormatInt(Cast(exprs.head, LongType), base)
-      }, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_vrl_parse_aws_alb_log", { exprs =>
-        require(exprs.size == 1, "parse_aws_alb_log(value) takes 1 argument")
-        VrlParseAlbLog(exprs.head)
-      }, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_vrl_parse_aws_vpc_flow_log", { exprs =>
-        require(exprs.size == 1 || exprs.size == 2,
-          "parse_aws_vpc_flow_log(value[, format]) takes 1-2 arguments")
-        val format = exprs.lift(1)
-          .map(literalString(_, "parse_aws_vpc_flow_log: the format argument"))
-          .getOrElse(VrlParseVpcFlow.DefaultFormat)
-        VrlParseVpcFlow(exprs.head, format)
-      }, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_vrl_redact", { exprs =>
-        require(exprs.size == 2, "redact(value, filters: [...]) takes 2 arguments")
-        // filters resolve at BUILD: each array element is a regex string
-        // literal or a named filter; the result is a codegen
-        // RegExpReplace chain, nothing interpreted per row
-        val patterns = exprs(1) match {
-          case CreateArray(children, _) => children.map {
-            case Literal(s: UTF8String, StringType) =>
-              VrlRedact.Named.getOrElse(s.toString, s.toString)
-            case _ => throw new IllegalArgumentException(
-              "redact: each filter must be a (raw) string literal or a " +
-                s"named filter (${VrlRedact.Named.keys.mkString(", ")})")
-          }
-          case _ => throw new IllegalArgumentException(
-            "redact: the filters argument must be an array literal")
+            "redact: each filter must be a (raw) string literal or a " +
+              s"named filter (${VrlRedact.Named.keys.mkString(", ")})")
         }
-        require(patterns.nonEmpty, "redact: the filters array is empty")
-        patterns.foldLeft(exprs.head) { (acc, p) =>
-          RegExpReplace(acc, Literal(p), Literal("[REDACTED]"))
-        }
-      }, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_vrl_parse_glog", { exprs =>
-        require(exprs.size == 1, "parse_glog(value) takes 1 argument")
-        VrlLib.parseGlogStruct(exprs.head)
-      }, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_vrl_parse_xml", { exprs =>
-        require(exprs.size == 1 || exprs.size == 2,
-          "parse_xml(value[, options]) takes 1-2 arguments")
-        // schemaless XML rides the same VARIANT path as parse_json: the
-        // kernel converts XML to the equivalent JSON text (VRL's
-        // element/attribute/text conversion) and Spark's own codegen'd
-        // ParseJson builds the variant. The optional second argument is
-        // the compiler-packed canonical option literal (the label-aware
-        // rewrite in Processors — named-option subsets misbind under
-        // positional stripping).
-        val opts = exprs.lift(1)
-          .map(e => VrlXmlToJson.parseOpts(
-            literalString(e, "parse_xml: the options argument")))
-          .getOrElse(VrlXmlToJson.Opts())
-        new org.apache.spark.sql.catalyst.expressions.variant.ParseJson(
-          VrlXmlToJson(exprs.head, opts), true)
-      }, "scala_udf")
+        case _ => throw new IllegalArgumentException(
+          "redact: the filters argument must be an array literal")
+      }
+      require(patterns.nonEmpty, "redact: the filters array is empty")
+      patterns.foldLeft(exprs.head) { (acc, p) =>
+        RegExpReplace(acc, Literal(p), Literal("[REDACTED]"))
+      }
+    })
+    add("graft_vrl_parse_glog", { exprs =>
+      require(exprs.size == 1, "parse_glog(value) takes 1 argument")
+      VrlLib.parseGlogStruct(exprs.head)
+    })
+    add("graft_vrl_parse_xml", { exprs =>
+      require(exprs.size == 1 || exprs.size == 2,
+        "parse_xml(value[, options]) takes 1-2 arguments")
+      // schemaless XML rides the same VARIANT path as parse_json: the
+      // kernel converts XML to the equivalent JSON text (VRL's
+      // element/attribute/text conversion) and Spark's own codegen'd
+      // ParseJson builds the variant. The optional second argument is
+      // the compiler-packed canonical option literal (the label-aware
+      // rewrite in Processors — named-option subsets misbind under
+      // positional stripping).
+      val opts = exprs.lift(1)
+        .map(e => VrlXmlToJson.parseOpts(
+          literalString(e, "parse_xml: the options argument")))
+        .getOrElse(VrlXmlToJson.Opts())
+      new org.apache.spark.sql.catalyst.expressions.variant.ParseJson(
+        VrlXmlToJson(exprs.head, opts), true)
+    })
     // random_* — nondeterministic like VRL's, composed on Spark's own
     // Rand (a fresh seed per call site, fixed at analysis like rand())
     def freshRand() = new Rand(Literal(scala.util.Random.nextLong()), true)
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_vrl_random_bool", { exprs =>
-        require(exprs.isEmpty, "random_bool() takes no arguments")
-        LessThan(freshRand(), Literal(0.5))
-      }, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_vrl_random_int", { exprs =>
-        require(exprs.size == 2, "random_int(min, max) takes 2 arguments")
-        // [min, max) like VRL
-        val min = Cast(exprs.head, LongType)
-        val span = Cast(Subtract(Cast(exprs(1), LongType), min), DoubleType)
-        Add(Cast(Floor(Multiply(freshRand(), span)), LongType), min)
-      }, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_vrl_random_float", { exprs =>
-        require(exprs.size == 2, "random_float(min, max) takes 2 arguments")
-        val min = Cast(exprs.head, DoubleType)
-        Add(Multiply(freshRand(), Subtract(Cast(exprs(1), DoubleType), min)), min)
-      }, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_vrl_assert", { exprs =>
-        require(exprs.size == 1 || exprs.size == 2,
-          "assert(condition[, message]) takes 1-2 arguments")
-        VrlAssert(exprs.head,
-          exprs.lift(1).getOrElse(Literal("assertion failed")))
-      }, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_vrl_assert_eq", { exprs =>
-        require(exprs.size == 2 || exprs.size == 3,
-          "assert_eq(left, right[, message]) takes 2-3 arguments")
-        VrlAssert(EqualNullSafe(exprs.head, exprs(1)),
-          exprs.lift(2).getOrElse(Literal("assertion failed: values differ")))
-      }, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_vrl_get_env_var", { exprs =>
-        require(exprs.size == 1, "get_env_var(name) takes 1 argument")
-        VrlEnvVar(exprs.head)
-      }, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_vrl_get_hostname", { exprs =>
-        require(exprs.isEmpty, "get_hostname() takes no arguments")
-        VrlHostname()
-      }, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_vrl_tally", { exprs =>
-        require(exprs.size == 1, "tally(array) takes 1 argument")
-        VrlTally(exprs.head)
-      }, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_vrl_tally_value", { exprs =>
-        require(exprs.size == 2, "tally_value(array, value) takes 2 arguments")
-        VrlTallyValue(exprs.head, exprs(1))
-      }, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_vrl_contains_all", { exprs =>
-        require(exprs.size == 2,
-          "contains_all(value, substrings) takes 2 arguments")
-        VrlContainsAll(exprs.head, exprs(1))
-      }, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_vrl_find", { exprs =>
-        require(exprs.size == 2, "find(value, substring) takes 2 arguments")
-        // 0-based index, -1 when absent (instr is 1-based, 0 when absent).
-        // Divergence, stated: the index counts CHARACTERS (VRL counts
-        // bytes) — identical for ASCII, off by the multi-byte surplus
-        // otherwise; and the pattern is a plain substring (VRL also
-        // accepts a regex literal).
-        Subtract(StringInstr(exprs.head, exprs(1)), Literal(1))
-      }, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_vrl_parse_ruby_hash", { exprs =>
-        require(exprs.size == 1, "parse_ruby_hash(value) takes 1 argument")
-        // schemaless like parse_json/parse_xml → the VARIANT path
-        new org.apache.spark.sql.catalyst.expressions.variant.ParseJson(
-          VrlRubyHashToJson(exprs.head), true)
-      }, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_vrl_parse_aws_cloudwatch", { exprs =>
-        require(exprs.size == 1,
-          "parse_aws_cloudwatch_log_subscription_message(value) takes 1 argument")
-        VrlLib.parseCloudwatchStruct(exprs.head)
-      }, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_vrl_parse_bytes", { exprs =>
-        require(exprs.size == 2 || exprs.size == 3,
-          "parse_bytes(value, unit[, base]) takes 2-3 arguments")
-        val unit = literalString(exprs(1), "parse_bytes: the unit argument")
-        val base = exprs.lift(2)
-          .map(literalString(_, "parse_bytes: the base argument"))
-          .getOrElse("10")
-        require(base == "2" || base == "10",
-          s"parse_bytes: base must be '2' or '10', got '$base'")
-        VrlParseBytes(exprs.head, unit, base)
-      }, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_vrl_parse_float", { exprs =>
-        require(exprs.size == 1, "parse_float(value) takes 1 argument")
-        // fallible like VRL's: the ANSI cast throws on garbage, which
-        // `??` / `, err =` catch
-        Cast(exprs.head, DoubleType)
-      }, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_vrl_format_number", { exprs =>
-        require(exprs.size >= 2 && exprs.size <= 4,
-          "format_number(value, scale[, decimal_separator[, grouping_separator]]) " +
-            "takes 2-4 arguments")
-        val scale = exprs(1) match {
-          case Literal(i: Int, IntegerType) => i
-          case Literal(l: Long, LongType) => l.toInt
-          case _ => throw new IllegalArgumentException(
-            "format_number: scale must be an integer literal")
-        }
-        VrlFormatNumber(Cast(exprs.head, DoubleType), scale,
-          exprs.lift(2).map(literalString(_, "format_number: decimal_separator"))
-            .getOrElse("."),
-          exprs.lift(3).map(literalString(_, "format_number: grouping_separator"))
-            .getOrElse(","))
-      }, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_vrl_parse_regex_all", { exprs =>
-        require(exprs.size == 2,
-          "parse_regex_all(value, pattern) takes 2 arguments")
-        val pat = literalString(exprs(1), "parse_regex_all: the pattern argument")
-        val javaPat = pat.replace("(?P<", "(?<")
-        val groups = namedGroups(javaPat)
-        require(groups.nonEmpty,
-          s"parse_regex_all: pattern has no named capture groups: `$pat`")
-        VrlParseRegexAll(exprs.head, javaPat, groups.map(_._1))
-      }, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_vrl_community_id", { exprs =>
-        // VRL parameter order: source_ip, destination_ip, protocol,
-        // source_port, destination_port, seed
-        require(exprs.size == 5 || exprs.size == 6,
-          "community_id(source_ip, destination_ip, protocol, source_port, " +
-            "destination_port[, seed]) takes 5-6 arguments")
-        val ints = Seq(exprs(3), exprs(4), exprs(2)).map(Cast(_, IntegerType)) ++
-          exprs.lift(5).map(Cast(_, IntegerType)).toSeq
-        VrlCommunityId(Seq(exprs(0), exprs(1)) ++ ints)
-      }, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_vrl_ip_pton", { exprs =>
-        require(exprs.size == 1, "ip_pton(value) takes 1 argument")
-        VrlIpKernel1(exprs.head, "pton")
-      }, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_vrl_ip_ntop", { exprs =>
-        require(exprs.size == 1, "ip_ntop(value) takes 1 argument")
-        VrlIpKernel1(Cast(exprs.head, BinaryType), "ntop")
-      }, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_vrl_ip_to_ipv6", { exprs =>
-        require(exprs.size == 1, "ip_to_ipv6(value) takes 1 argument")
-        VrlIpKernel1(exprs.head, "to_v6")
-      }, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_vrl_ip_subnet", { exprs =>
-        require(exprs.size == 2, "ip_subnet(value, mask) takes 2 arguments")
-        VrlIpSubnet(exprs.head, exprs(1))
-      }, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_vrl_decode_mime_q", { exprs =>
-        require(exprs.size == 1, "decode_mime_q(value) takes 1 argument")
-        VrlDecodeMimeQ(exprs.head)
-      }, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_vrl_uuid_v7", { exprs =>
-        require(exprs.isEmpty, "uuid_v7() takes no arguments")
-        VrlUuidV7()
-      }, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_vrl_parse_etld", { exprs =>
-        require(exprs.size == 1 || exprs.size == 2,
-          "parse_etld(value[, plus_parts]) takes 1-2 arguments")
-        val plus = exprs.lift(1).map {
-          case Literal(i: Int, IntegerType) => i
-          case Literal(l: Long, LongType) => l.toInt
-          case _ => throw new IllegalArgumentException(
-            "parse_etld: plus_parts must be an integer literal")
-        }.getOrElse(0)
-        require(plus >= 0, "parse_etld: plus_parts must be >= 0")
-        VrlParseEtld(exprs.head, plus)
-      }, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_vrl_parse_tokens", { exprs =>
-        require(exprs.size == 1, "parse_tokens(value) takes 1 argument")
-        VrlParseTokens(exprs.head)
-      }, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_vrl_sieve", { exprs =>
-        require(exprs.size == 2, "sieve(value, permitted) takes 2 arguments")
-        val pat = literalString(exprs(1), "sieve: the permitted argument")
-        try java.util.regex.Pattern.compile(pat)
-        catch { case e: java.util.regex.PatternSyntaxException =>
-          throw new IllegalArgumentException(
-            s"sieve: bad permitted pattern `$pat`: ${e.getMessage}") }
-        VrlSieve(exprs.head, pat)
-      }, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_vrl_merge", { exprs =>
-        require(exprs.size == 2 || exprs.size == 3,
-          "merge(to, from[, deep: true]) takes 2-3 arguments")
-        val deep = exprs.lift(2).map {
-          case Literal(b: Boolean, BooleanType) => b
-          case _ => throw new IllegalArgumentException(
-            "merge: the deep argument must be a boolean literal")
-        }.getOrElse(false)
-        VrlMerge(exprs.head, exprs(1), deep)
-      }, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_vrl_sha2", { exprs =>
-        require(exprs.size == 1 || exprs.size == 2,
-          "sha2(value[, variant]) takes 1-2 arguments")
-        // VRL's DEFAULT variant is SHA-512/224 — which Spark's own
-        // sha2(expr, bits) cannot express, hence the kernel
-        val variant = exprs.lift(1)
-          .map(literalString(_, "sha2: the variant argument"))
-          .getOrElse("SHA-512/224")
-        val algo = VrlDigest.Variants.getOrElse(variant,
-          throw new IllegalArgumentException(
-            s"sha2: unknown variant `$variant`; supported: " +
-              VrlDigest.Variants.keys.toSeq.sorted.mkString(" ")))
-        VrlDigest(exprs.head, algo)
-      }, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_vrl_hmac", { exprs =>
-        require(exprs.size == 2 || exprs.size == 3,
-          "hmac(value, key[, algorithm]) takes 2-3 arguments")
-        val name = exprs.lift(2)
-          .map(literalString(_, "hmac: the algorithm argument"))
-          .getOrElse("SHA-256")
-        val algo = VrlHmac.Variants.getOrElse(name,
-          throw new IllegalArgumentException(
-            s"hmac: unknown algorithm `$name`; supported: " +
-              VrlHmac.Variants.keys.toSeq.sorted.mkString(" ")))
-        VrlHmac(exprs.head, exprs(1), algo)
-      }, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_vrl_encode_base16", { exprs =>
-        require(exprs.size == 1, "encode_base16(value) takes 1 argument")
-        // VRL base16 is lowercase; Spark's hex uppercases
-        Lower(Hex(Cast(exprs.head, BinaryType)))
-      }, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_vrl_decode_base16", { exprs =>
-        require(exprs.size == 1, "decode_base16(value) takes 1 argument")
-        Cast(Unhex(exprs.head), StringType)
-      }, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_vrl_encode_kv", { exprs =>
-        require(exprs.size >= 1 && exprs.size <= 3,
-          "encode_key_value(object[, key_value_delimiter[, field_delimiter]]) " +
-            "takes 1-3 arguments")
-        VrlEncodeKeyValue(exprs.head,
-          exprs.lift(1).getOrElse(Literal("=")),
-          exprs.lift(2).getOrElse(Literal(" ")))
-      }, "scala_udf")
+    add("graft_vrl_random_bool", { exprs =>
+      require(exprs.isEmpty, "random_bool() takes no arguments")
+      LessThan(freshRand(), Literal(0.5))
+    })
+    add("graft_vrl_random_int", { exprs =>
+      require(exprs.size == 2, "random_int(min, max) takes 2 arguments")
+      // [min, max) like VRL
+      val min = Cast(exprs.head, LongType)
+      val span = Cast(Subtract(Cast(exprs(1), LongType), min), DoubleType)
+      Add(Cast(Floor(Multiply(freshRand(), span)), LongType), min)
+    })
+    add("graft_vrl_random_float", { exprs =>
+      require(exprs.size == 2, "random_float(min, max) takes 2 arguments")
+      val min = Cast(exprs.head, DoubleType)
+      Add(Multiply(freshRand(), Subtract(Cast(exprs(1), DoubleType), min)), min)
+    })
+    add("graft_vrl_assert", { exprs =>
+      require(exprs.size == 1 || exprs.size == 2,
+        "assert(condition[, message]) takes 1-2 arguments")
+      VrlAssert(exprs.head,
+        exprs.lift(1).getOrElse(Literal("assertion failed")))
+    })
+    add("graft_vrl_assert_eq", { exprs =>
+      require(exprs.size == 2 || exprs.size == 3,
+        "assert_eq(left, right[, message]) takes 2-3 arguments")
+      VrlAssert(EqualNullSafe(exprs.head, exprs(1)),
+        exprs.lift(2).getOrElse(Literal("assertion failed: values differ")))
+    })
+    add("graft_vrl_get_env_var", { exprs =>
+      require(exprs.size == 1, "get_env_var(name) takes 1 argument")
+      VrlEnvVar(exprs.head)
+    })
+    add("graft_vrl_get_hostname", { exprs =>
+      require(exprs.isEmpty, "get_hostname() takes no arguments")
+      VrlHostname()
+    })
+    add("graft_vrl_tally", { exprs =>
+      require(exprs.size == 1, "tally(array) takes 1 argument")
+      VrlTally(exprs.head)
+    })
+    add("graft_vrl_tally_value", { exprs =>
+      require(exprs.size == 2, "tally_value(array, value) takes 2 arguments")
+      VrlTallyValue(exprs.head, exprs(1))
+    })
+    add("graft_vrl_contains_all", { exprs =>
+      require(exprs.size == 2,
+        "contains_all(value, substrings) takes 2 arguments")
+      VrlContainsAll(exprs.head, exprs(1))
+    })
+    add("graft_vrl_find", { exprs =>
+      require(exprs.size == 2, "find(value, substring) takes 2 arguments")
+      // 0-based index, -1 when absent (instr is 1-based, 0 when absent).
+      // Divergence, stated: the index counts CHARACTERS (VRL counts
+      // bytes) — identical for ASCII, off by the multi-byte surplus
+      // otherwise; and the pattern is a plain substring (VRL also
+      // accepts a regex literal).
+      Subtract(StringInstr(exprs.head, exprs(1)), Literal(1))
+    })
+    add("graft_vrl_parse_ruby_hash", { exprs =>
+      require(exprs.size == 1, "parse_ruby_hash(value) takes 1 argument")
+      // schemaless like parse_json/parse_xml → the VARIANT path
+      new org.apache.spark.sql.catalyst.expressions.variant.ParseJson(
+        VrlRubyHashToJson(exprs.head), true)
+    })
+    add("graft_vrl_parse_aws_cloudwatch", { exprs =>
+      require(exprs.size == 1,
+        "parse_aws_cloudwatch_log_subscription_message(value) takes 1 argument")
+      VrlLib.parseCloudwatchStruct(exprs.head)
+    })
+    add("graft_vrl_parse_bytes", { exprs =>
+      require(exprs.size == 2 || exprs.size == 3,
+        "parse_bytes(value, unit[, base]) takes 2-3 arguments")
+      val unit = literalString(exprs(1), "parse_bytes: the unit argument")
+      val base = exprs.lift(2)
+        .map(literalString(_, "parse_bytes: the base argument"))
+        .getOrElse("10")
+      require(base == "2" || base == "10",
+        s"parse_bytes: base must be '2' or '10', got '$base'")
+      VrlParseBytes(exprs.head, unit, base)
+    })
+    add("graft_vrl_parse_float", { exprs =>
+      require(exprs.size == 1, "parse_float(value) takes 1 argument")
+      // fallible like VRL's: the ANSI cast throws on garbage, which
+      // `??` / `, err =` catch
+      Cast(exprs.head, DoubleType)
+    })
+    add("graft_vrl_format_number", { exprs =>
+      require(exprs.size >= 2 && exprs.size <= 4,
+        "format_number(value, scale[, decimal_separator[, grouping_separator]]) " +
+          "takes 2-4 arguments")
+      val scale = exprs(1) match {
+        case Literal(i: Int, IntegerType) => i
+        case Literal(l: Long, LongType) => l.toInt
+        case _ => throw new IllegalArgumentException(
+          "format_number: scale must be an integer literal")
+      }
+      VrlFormatNumber(Cast(exprs.head, DoubleType), scale,
+        exprs.lift(2).map(literalString(_, "format_number: decimal_separator"))
+          .getOrElse("."),
+        exprs.lift(3).map(literalString(_, "format_number: grouping_separator"))
+          .getOrElse(","))
+    })
+    add("graft_vrl_parse_regex_all", { exprs =>
+      require(exprs.size == 2,
+        "parse_regex_all(value, pattern) takes 2 arguments")
+      val pat = literalString(exprs(1), "parse_regex_all: the pattern argument")
+      val javaPat = pat.replace("(?P<", "(?<")
+      val groups = namedGroups(javaPat)
+      require(groups.nonEmpty,
+        s"parse_regex_all: pattern has no named capture groups: `$pat`")
+      VrlParseRegexAll(exprs.head, javaPat, groups.map(_._1))
+    })
+    add("graft_vrl_community_id", { exprs =>
+      // VRL parameter order: source_ip, destination_ip, protocol,
+      // source_port, destination_port, seed
+      require(exprs.size == 5 || exprs.size == 6,
+        "community_id(source_ip, destination_ip, protocol, source_port, " +
+          "destination_port[, seed]) takes 5-6 arguments")
+      val ints = Seq(exprs(3), exprs(4), exprs(2)).map(Cast(_, IntegerType)) ++
+        exprs.lift(5).map(Cast(_, IntegerType)).toSeq
+      VrlCommunityId(Seq(exprs(0), exprs(1)) ++ ints)
+    })
+    add("graft_vrl_ip_pton", { exprs =>
+      require(exprs.size == 1, "ip_pton(value) takes 1 argument")
+      VrlIpKernel1(exprs.head, "pton")
+    })
+    add("graft_vrl_ip_ntop", { exprs =>
+      require(exprs.size == 1, "ip_ntop(value) takes 1 argument")
+      VrlIpKernel1(Cast(exprs.head, BinaryType), "ntop")
+    })
+    add("graft_vrl_ip_to_ipv6", { exprs =>
+      require(exprs.size == 1, "ip_to_ipv6(value) takes 1 argument")
+      VrlIpKernel1(exprs.head, "to_v6")
+    })
+    add("graft_vrl_ip_subnet", { exprs =>
+      require(exprs.size == 2, "ip_subnet(value, mask) takes 2 arguments")
+      VrlIpSubnet(exprs.head, exprs(1))
+    })
+    add("graft_vrl_decode_mime_q", { exprs =>
+      require(exprs.size == 1, "decode_mime_q(value) takes 1 argument")
+      VrlDecodeMimeQ(exprs.head)
+    })
+    add("graft_vrl_uuid_v7", { exprs =>
+      require(exprs.isEmpty, "uuid_v7() takes no arguments")
+      VrlUuidV7()
+    })
+    add("graft_vrl_parse_etld", { exprs =>
+      require(exprs.size == 1 || exprs.size == 2,
+        "parse_etld(value[, plus_parts]) takes 1-2 arguments")
+      val plus = exprs.lift(1).map {
+        case Literal(i: Int, IntegerType) => i
+        case Literal(l: Long, LongType) => l.toInt
+        case _ => throw new IllegalArgumentException(
+          "parse_etld: plus_parts must be an integer literal")
+      }.getOrElse(0)
+      require(plus >= 0, "parse_etld: plus_parts must be >= 0")
+      VrlParseEtld(exprs.head, plus)
+    })
+    add("graft_vrl_parse_tokens", { exprs =>
+      require(exprs.size == 1, "parse_tokens(value) takes 1 argument")
+      VrlParseTokens(exprs.head)
+    })
+    add("graft_vrl_sieve", { exprs =>
+      require(exprs.size == 2, "sieve(value, permitted) takes 2 arguments")
+      val pat = literalString(exprs(1), "sieve: the permitted argument")
+      try java.util.regex.Pattern.compile(pat)
+      catch { case e: java.util.regex.PatternSyntaxException =>
+        throw new IllegalArgumentException(
+          s"sieve: bad permitted pattern `$pat`: ${e.getMessage}") }
+      VrlSieve(exprs.head, pat)
+    })
+    add("graft_vrl_merge", { exprs =>
+      require(exprs.size == 2 || exprs.size == 3,
+        "merge(to, from[, deep: true]) takes 2-3 arguments")
+      val deep = exprs.lift(2).map {
+        case Literal(b: Boolean, BooleanType) => b
+        case _ => throw new IllegalArgumentException(
+          "merge: the deep argument must be a boolean literal")
+      }.getOrElse(false)
+      VrlMerge(exprs.head, exprs(1), deep)
+    })
+    add("graft_vrl_sha2", { exprs =>
+      require(exprs.size == 1 || exprs.size == 2,
+        "sha2(value[, variant]) takes 1-2 arguments")
+      // VRL's DEFAULT variant is SHA-512/224 — which Spark's own
+      // sha2(expr, bits) cannot express, hence the kernel
+      val variant = exprs.lift(1)
+        .map(literalString(_, "sha2: the variant argument"))
+        .getOrElse("SHA-512/224")
+      val algo = VrlDigest.Variants.getOrElse(variant,
+        throw new IllegalArgumentException(
+          s"sha2: unknown variant `$variant`; supported: " +
+            VrlDigest.Variants.keys.toSeq.sorted.mkString(" ")))
+      VrlDigest(exprs.head, algo)
+    })
+    add("graft_vrl_hmac", { exprs =>
+      require(exprs.size == 2 || exprs.size == 3,
+        "hmac(value, key[, algorithm]) takes 2-3 arguments")
+      val name = exprs.lift(2)
+        .map(literalString(_, "hmac: the algorithm argument"))
+        .getOrElse("SHA-256")
+      val algo = VrlHmac.Variants.getOrElse(name,
+        throw new IllegalArgumentException(
+          s"hmac: unknown algorithm `$name`; supported: " +
+            VrlHmac.Variants.keys.toSeq.sorted.mkString(" ")))
+      VrlHmac(exprs.head, exprs(1), algo)
+    })
+    add("graft_vrl_encode_base16", { exprs =>
+      require(exprs.size == 1, "encode_base16(value) takes 1 argument")
+      // VRL base16 is lowercase; Spark's hex uppercases
+      Lower(Hex(Cast(exprs.head, BinaryType)))
+    })
+    add("graft_vrl_decode_base16", { exprs =>
+      require(exprs.size == 1, "decode_base16(value) takes 1 argument")
+      Cast(Unhex(exprs.head), StringType)
+    })
+    add("graft_vrl_encode_kv", { exprs =>
+      require(exprs.size >= 1 && exprs.size <= 3,
+        "encode_key_value(object[, key_value_delimiter[, field_delimiter]]) " +
+          "takes 1-3 arguments")
+      VrlEncodeKeyValue(exprs.head,
+        exprs.lift(1).getOrElse(Literal("=")),
+        exprs.lift(2).getOrElse(Literal(" ")))
+    })
     Seq("gzip", "zlib", "zstd", "snappy").foreach { algo =>
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        s"graft_vrl_encode_$algo", { exprs =>
-          require(exprs.size == 1, s"encode_$algo(value) takes 1 argument")
-          VrlCompress(Cast(exprs.head, BinaryType), algo, encode = true)
-        }, "scala_udf")
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        s"graft_vrl_decode_$algo", { exprs =>
-          require(exprs.size == 1, s"decode_$algo(value) takes 1 argument")
-          // VRL strings are byte strings: the inflated payload surfaces
-          // as a string like VRL's decode_* (binary → string cast is a
-          // reinterpret, not a conversion)
-          Cast(VrlCompress(Cast(exprs.head, BinaryType), algo,
-            encode = false), StringType)
-        }, "scala_udf")
+      add(s"graft_vrl_encode_$algo", { exprs =>
+        require(exprs.size == 1, s"encode_$algo(value) takes 1 argument")
+        VrlCompress(Cast(exprs.head, BinaryType), algo, encode = true)
+      })
+      add(s"graft_vrl_decode_$algo", { exprs =>
+        require(exprs.size == 1, s"decode_$algo(value) takes 1 argument")
+        // VRL strings are byte strings: the inflated payload surfaces
+        // as a string like VRL's decode_* (binary → string cast is a
+        // reinterpret, not a conversion)
+        Cast(VrlCompress(Cast(exprs.head, BinaryType), algo,
+          encode = false), StringType)
+      })
     }
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_vrl_is_nullish", { exprs =>
-        require(exprs.size == 1, "is_nullish(value) takes 1 argument")
-        // VRL: null, "", "-", or whitespace-only count as nullish
-        val e = exprs.head
-        Or(IsNull(e),
-          In(StringTrim(Cast(e, StringType), None),
-            Seq(Literal(""), Literal("-"))))
-      }, "scala_udf")
+    add("graft_vrl_is_nullish", { exprs =>
+      require(exprs.size == 1, "is_nullish(value) takes 1 argument")
+      // VRL: null, "", "-", or whitespace-only count as nullish
+      val e = exprs.head
+      Or(IsNull(e),
+        In(StringTrim(Cast(e, StringType), None),
+          Seq(Literal(""), Literal("-"))))
+    })
 
     // ---- round-13 tranche 4 (vrl 0.30 stdlib) ----
     /** literal regex patterns out of an array-literal argument — the
@@ -676,175 +606,158 @@ object VrlLib {
       }
     }
     val sha3Variants = Set("SHA3-224", "SHA3-256", "SHA3-384", "SHA3-512")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_vrl_sha3", { exprs =>
-        require(exprs.size == 1 || exprs.size == 2,
-          "sha3(value[, variant]) takes 1-2 arguments")
-        // VRL's default variant is SHA3-512; JDK algorithm names match
-        // VRL's spellings exactly
-        val variant = exprs.lift(1)
-          .map(literalString(_, "sha3: the variant argument"))
-          .getOrElse("SHA3-512")
-        require(sha3Variants.contains(variant),
-          s"sha3: unknown variant `$variant`; supported: " +
-            sha3Variants.toSeq.sorted.mkString(" "))
-        VrlDigest(exprs.head, variant)
-      }, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_vrl_seahash", { exprs =>
-        require(exprs.size == 1, "seahash(value) takes 1 argument")
-        VrlSeaHash(Cast(exprs.head, StringType))
-      }, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_vrl_chunks", { exprs =>
-        require(exprs.size == 2, "chunks(value, chunk_size) takes 2 arguments")
-        VrlChunks(Cast(exprs.head, StringType), Cast(exprs(1), IntegerType))
-      }, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_vrl_truncate", { exprs =>
-        require(exprs.size == 2 || exprs.size == 3,
-          "truncate(value, limit[, suffix]) takes 2-3 arguments")
-        // the third argument is VRL's `suffix:` string; the legacy
-        // boolean `ellipsis:` spelling maps to the literal "..."
-        val s = exprs.head
-        val lim = Cast(exprs(1), IntegerType)
-        val suffix: Expression = exprs.lift(2) match {
-          case None => Literal("")
-          case Some(Literal(true, BooleanType)) => Literal("...")
-          case Some(Literal(false, BooleanType)) => Literal("")
-          case Some(e) => e
-        }
-        If(GreaterThan(Length(s), lim),
-          Concat(Seq(Substring(s, Literal(1), lim), suffix)), s)
-      }, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_vrl_to_syslog_facility", { exprs =>
-        require(exprs.size == 1, "to_syslog_facility(code) takes 1 argument")
-        VrlSyslogFacilityKernel(Cast(exprs.head, LongType), toName = true)
-      }, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_vrl_to_syslog_facility_code", { exprs =>
-        require(exprs.size == 1, "to_syslog_facility_code(name) takes 1 argument")
-        VrlSyslogFacilityKernel(Cast(exprs.head, StringType), toName = false)
-      }, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_vrl_zip", { exprs =>
-        // VRL zips to the SHORTER length (Spark's zip_with pads to the
-        // longer with nulls — both sides are sliced first so the pad
-        // branch never runs); each pair surfaces as a 2-element array,
-        // VRL's shape. The 1-arg transpose form needs a heterogeneous
-        // outer array and is rejected with the fix.
-        require(exprs.size == 2,
-          "zip(array_0, array_1) takes 2 arrays (the 1-arg transpose form " +
-            "is not supported — pass the two arrays directly)")
-        val a = exprs.head
-        val b = exprs(1)
-        val n = Least(Seq(Size(a), Size(b)))
-        val x = UnresolvedNamedLambdaVariable(Seq("__zip_l"))
-        val y = UnresolvedNamedLambdaVariable(Seq("__zip_r"))
-        ZipWith(Slice(a, Literal(1), n), Slice(b, Literal(1), n),
-          LambdaFunction(CreateArray(Seq(x, y)), Seq(x, y)))
-      }, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_vrl_object_from_array", { exprs =>
-        require(exprs.size == 1 || exprs.size == 2,
-          "object_from_array(values[, keys]) takes 1-2 arguments")
-        if (exprs.size == 1) VrlObjectFromPairs(exprs.head)
-        else VrlObjectFromKv(exprs.head, exprs(1))
-      }, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_vrl_match_any", { exprs =>
-        require(exprs.size == 2, "match_any(value, patterns) takes 2 arguments")
-        VrlMatchAny(Cast(exprs.head, StringType),
-          literalPatterns(exprs(1), "match_any: the patterns argument"))
-      }, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_vrl_match_array", { exprs =>
-        require(exprs.size == 2 || exprs.size == 3,
-          "match_array(array, pattern[, all]) takes 2-3 arguments")
-        val pat = literalString(exprs(1), "match_array: the pattern argument")
-        try java.util.regex.Pattern.compile(pat)
-        catch { case ex: java.util.regex.PatternSyntaxException =>
-          throw new IllegalArgumentException(
-            s"match_array: bad pattern `$pat`: ${ex.getMessage}") }
-        val all = exprs.lift(2) match {
-          case None => false
-          case Some(Literal(b: Boolean, BooleanType)) => b
-          case _ => throw new IllegalArgumentException(
-            "match_array: the all argument must be a boolean literal")
-        }
-        val x = UnresolvedNamedLambdaVariable(Seq("__ma_e"))
-        // RLike is a full-string-anywhere test (Java find semantics via
-        // unanchored rlike), matching VRL's regex `match`
-        val lam = LambdaFunction(RLike(x, Literal(pat)), Seq(x))
-        if (all) ArrayForAll(exprs.head, lam) else ArrayExists(exprs.head, lam)
-      }, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_vrl_is_empty", { exprs =>
-        require(exprs.size == 1, "is_empty(value) takes 1 argument")
-        VrlIsEmpty(exprs.head)
-      }, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_vrl_log", { exprs =>
-        require(exprs.size >= 1 && exprs.size <= 3,
-          "log(value[, level[, rate_limit_secs]]) takes 1-3 arguments")
-        val level = exprs.lift(1)
-          .map(literalString(_, "log: the level argument"))
-          .getOrElse("info")
-        require(Set("trace", "debug", "info", "warn", "error").contains(level),
-          s"log: unknown level `$level` (trace debug info warn error)")
-        val rate = exprs.lift(2) match {
-          case None => 1
-          case Some(Literal(i: Int, IntegerType)) => i
-          case Some(Literal(l: Long, LongType)) => l.toInt
-          case _ => throw new IllegalArgumentException(
-            "log: rate_limit_secs must be an integer literal")
-        }
-        VrlLog(exprs.head, level, rate)
-      }, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_vrl_decode_charset", { exprs =>
-        require(exprs.size == 2,
-          "decode_charset(value, from_charset) takes 2 arguments")
-        val cs = literalString(exprs(1), "decode_charset: the charset argument")
-        try java.nio.charset.Charset.forName(cs)
-        catch { case _: Exception => throw new IllegalArgumentException(
-          s"decode_charset: unknown charset `$cs`") }
-        VrlCharset(Cast(exprs.head, BinaryType), cs, encode = false)
-      }, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_vrl_encode_charset", { exprs =>
-        require(exprs.size == 2,
-          "encode_charset(value, to_charset) takes 2 arguments")
-        val cs = literalString(exprs(1), "encode_charset: the charset argument")
-        try java.nio.charset.Charset.forName(cs)
-        catch { case _: Exception => throw new IllegalArgumentException(
-          s"encode_charset: unknown charset `$cs`") }
-        VrlCharset(Cast(exprs.head, StringType), cs, encode = true)
-      }, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_vrl_parse_influxdb", { exprs =>
-        require(exprs.size == 1,
-          "parse_influxdb_line_protocol(value) takes 1 argument")
-        // mixed-type field objects → the VARIANT path like parse_json
-        new org.apache.spark.sql.catalyst.expressions.variant.ParseJson(
-          VrlInfluxToJson(Cast(exprs.head, StringType)), true)
-      }, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_vrl_parse_cbor", { exprs =>
-        require(exprs.size == 1, "parse_cbor(value) takes 1 argument")
-        new org.apache.spark.sql.catalyst.expressions.variant.ParseJson(
-          VrlCborToJson(Cast(exprs.head, BinaryType)), true)
-      }, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_vrl_parse_groks", { exprs =>
-        require(exprs.size == 2,
-          "parse_groks(value, patterns) takes 2 arguments (the aliases " +
-            "option is not supported — inline the subpattern instead)")
-        VrlLib.parseGroksStruct(exprs.head,
-          literalPatterns(exprs(1), "parse_groks: the patterns argument",
-            regexCheck = false))
-      }, "scala_udf")
+    add("graft_vrl_sha3", { exprs =>
+      require(exprs.size == 1 || exprs.size == 2,
+        "sha3(value[, variant]) takes 1-2 arguments")
+      // VRL's default variant is SHA3-512; JDK algorithm names match
+      // VRL's spellings exactly
+      val variant = exprs.lift(1)
+        .map(literalString(_, "sha3: the variant argument"))
+        .getOrElse("SHA3-512")
+      require(sha3Variants.contains(variant),
+        s"sha3: unknown variant `$variant`; supported: " +
+          sha3Variants.toSeq.sorted.mkString(" "))
+      VrlDigest(exprs.head, variant)
+    })
+    add("graft_vrl_seahash", { exprs =>
+      require(exprs.size == 1, "seahash(value) takes 1 argument")
+      VrlSeaHash(Cast(exprs.head, StringType))
+    })
+    add("graft_vrl_chunks", { exprs =>
+      require(exprs.size == 2, "chunks(value, chunk_size) takes 2 arguments")
+      VrlChunks(Cast(exprs.head, StringType), Cast(exprs(1), IntegerType))
+    })
+    add("graft_vrl_truncate", { exprs =>
+      require(exprs.size == 2 || exprs.size == 3,
+        "truncate(value, limit[, suffix]) takes 2-3 arguments")
+      // the third argument is VRL's `suffix:` string; the legacy
+      // boolean `ellipsis:` spelling maps to the literal "..."
+      val s = exprs.head
+      val lim = Cast(exprs(1), IntegerType)
+      val suffix: Expression = exprs.lift(2) match {
+        case None => Literal("")
+        case Some(Literal(true, BooleanType)) => Literal("...")
+        case Some(Literal(false, BooleanType)) => Literal("")
+        case Some(e) => e
+      }
+      If(GreaterThan(Length(s), lim),
+        Concat(Seq(Substring(s, Literal(1), lim), suffix)), s)
+    })
+    add("graft_vrl_to_syslog_facility", { exprs =>
+      require(exprs.size == 1, "to_syslog_facility(code) takes 1 argument")
+      VrlSyslogFacilityKernel(Cast(exprs.head, LongType), toName = true)
+    })
+    add("graft_vrl_to_syslog_facility_code", { exprs =>
+      require(exprs.size == 1, "to_syslog_facility_code(name) takes 1 argument")
+      VrlSyslogFacilityKernel(Cast(exprs.head, StringType), toName = false)
+    })
+    add("graft_vrl_zip", { exprs =>
+      // VRL zips to the SHORTER length (Spark's zip_with pads to the
+      // longer with nulls — both sides are sliced first so the pad
+      // branch never runs); each pair surfaces as a 2-element array,
+      // VRL's shape. The 1-arg transpose form needs a heterogeneous
+      // outer array and is rejected with the fix.
+      require(exprs.size == 2,
+        "zip(array_0, array_1) takes 2 arrays (the 1-arg transpose form " +
+          "is not supported — pass the two arrays directly)")
+      val a = exprs.head
+      val b = exprs(1)
+      val n = Least(Seq(Size(a), Size(b)))
+      val x = UnresolvedNamedLambdaVariable(Seq("__zip_l"))
+      val y = UnresolvedNamedLambdaVariable(Seq("__zip_r"))
+      ZipWith(Slice(a, Literal(1), n), Slice(b, Literal(1), n),
+        LambdaFunction(CreateArray(Seq(x, y)), Seq(x, y)))
+    })
+    add("graft_vrl_object_from_array", { exprs =>
+      require(exprs.size == 1 || exprs.size == 2,
+        "object_from_array(values[, keys]) takes 1-2 arguments")
+      if (exprs.size == 1) VrlObjectFromPairs(exprs.head)
+      else VrlObjectFromKv(exprs.head, exprs(1))
+    })
+    add("graft_vrl_match_any", { exprs =>
+      require(exprs.size == 2, "match_any(value, patterns) takes 2 arguments")
+      VrlMatchAny(Cast(exprs.head, StringType),
+        literalPatterns(exprs(1), "match_any: the patterns argument"))
+    })
+    add("graft_vrl_match_array", { exprs =>
+      require(exprs.size == 2 || exprs.size == 3,
+        "match_array(array, pattern[, all]) takes 2-3 arguments")
+      val pat = literalString(exprs(1), "match_array: the pattern argument")
+      try java.util.regex.Pattern.compile(pat)
+      catch { case ex: java.util.regex.PatternSyntaxException =>
+        throw new IllegalArgumentException(
+          s"match_array: bad pattern `$pat`: ${ex.getMessage}") }
+      val all = exprs.lift(2) match {
+        case None => false
+        case Some(Literal(b: Boolean, BooleanType)) => b
+        case _ => throw new IllegalArgumentException(
+          "match_array: the all argument must be a boolean literal")
+      }
+      val x = UnresolvedNamedLambdaVariable(Seq("__ma_e"))
+      // RLike is a full-string-anywhere test (Java find semantics via
+      // unanchored rlike), matching VRL's regex `match`
+      val lam = LambdaFunction(RLike(x, Literal(pat)), Seq(x))
+      if (all) ArrayForAll(exprs.head, lam) else ArrayExists(exprs.head, lam)
+    })
+    add("graft_vrl_is_empty", { exprs =>
+      require(exprs.size == 1, "is_empty(value) takes 1 argument")
+      VrlIsEmpty(exprs.head)
+    })
+    add("graft_vrl_log", { exprs =>
+      require(exprs.size >= 1 && exprs.size <= 3,
+        "log(value[, level[, rate_limit_secs]]) takes 1-3 arguments")
+      val level = exprs.lift(1)
+        .map(literalString(_, "log: the level argument"))
+        .getOrElse("info")
+      require(Set("trace", "debug", "info", "warn", "error").contains(level),
+        s"log: unknown level `$level` (trace debug info warn error)")
+      val rate = exprs.lift(2) match {
+        case None => 1
+        case Some(Literal(i: Int, IntegerType)) => i
+        case Some(Literal(l: Long, LongType)) => l.toInt
+        case _ => throw new IllegalArgumentException(
+          "log: rate_limit_secs must be an integer literal")
+      }
+      VrlLog(exprs.head, level, rate)
+    })
+    add("graft_vrl_decode_charset", { exprs =>
+      require(exprs.size == 2,
+        "decode_charset(value, from_charset) takes 2 arguments")
+      val cs = literalString(exprs(1), "decode_charset: the charset argument")
+      try java.nio.charset.Charset.forName(cs)
+      catch { case _: Exception => throw new IllegalArgumentException(
+        s"decode_charset: unknown charset `$cs`") }
+      VrlCharset(Cast(exprs.head, BinaryType), cs, encode = false)
+    })
+    add("graft_vrl_encode_charset", { exprs =>
+      require(exprs.size == 2,
+        "encode_charset(value, to_charset) takes 2 arguments")
+      val cs = literalString(exprs(1), "encode_charset: the charset argument")
+      try java.nio.charset.Charset.forName(cs)
+      catch { case _: Exception => throw new IllegalArgumentException(
+        s"encode_charset: unknown charset `$cs`") }
+      VrlCharset(Cast(exprs.head, StringType), cs, encode = true)
+    })
+    add("graft_vrl_parse_influxdb", { exprs =>
+      require(exprs.size == 1,
+        "parse_influxdb_line_protocol(value) takes 1 argument")
+      // mixed-type field objects → the VARIANT path like parse_json
+      new org.apache.spark.sql.catalyst.expressions.variant.ParseJson(
+        VrlInfluxToJson(Cast(exprs.head, StringType)), true)
+    })
+    add("graft_vrl_parse_cbor", { exprs =>
+      require(exprs.size == 1, "parse_cbor(value) takes 1 argument")
+      new org.apache.spark.sql.catalyst.expressions.variant.ParseJson(
+        VrlCborToJson(Cast(exprs.head, BinaryType)), true)
+    })
+    add("graft_vrl_parse_groks", { exprs =>
+      require(exprs.size == 2,
+        "parse_groks(value, patterns) takes 2 arguments (the aliases " +
+          "option is not supported — inline the subpattern instead)")
+      VrlLib.parseGroksStruct(exprs.head,
+        literalPatterns(exprs(1), "parse_groks: the patterns argument",
+          regexCheck = false))
+    })
     /** parse_proto/encode_proto message schema: a `.proto` SOURCE file
       * compiles through the built-in proto3 source parser (the
       * schema-registry route); anything else is read as a compiled
@@ -898,156 +811,142 @@ object VrlLib {
       if (cs) build(exprs.head, exprs(1))
       else build(Lower(exprs.head), Lower(exprs(1)))
     }
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_vrl_starts_with", { exprs =>
-        caseForm(exprs, "starts_with", StartsWith(_, _))
-      }, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_vrl_ends_with", { exprs =>
-        caseForm(exprs, "ends_with", EndsWith(_, _))
-      }, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_vrl_contains", { exprs =>
-        caseForm(exprs, "contains", Contains(_, _))
-      }, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_vrl_join", { exprs =>
-        require(exprs.size == 1 || exprs.size == 2,
-          "join(value[, separator]) takes 1-2 arguments")
-        // VRL's separator defaults to "" — Spark's array_join requires it
-        ArrayJoin(exprs.head, exprs.lift(1).getOrElse(Literal("")), None)
-      }, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_vrl_to_unix_timestamp", { exprs =>
-        require(exprs.size == 1 || exprs.size == 2,
-          "to_unix_timestamp(value[, unit]) takes 1-2 arguments")
-        // VRL's second argument is a UNIT (seconds/milliseconds/
-        // nanoseconds) — NOT Spark unix_timestamp's format string; the
-        // bare alias used to misroute `unit: 'milliseconds'` into a
-        // pattern parse
-        val ts = Cast(exprs.head, TimestampType)
-        exprs.lift(1).map(literalString(_, "to_unix_timestamp: the unit argument"))
-          .getOrElse("seconds") match {
-          case "seconds" => UnixSeconds(ts)
-          case "milliseconds" => UnixMillis(ts)
-          case "nanoseconds" => Multiply(UnixMicros(ts), Literal(1000L))
-          case other => throw new IllegalArgumentException(
-            s"to_unix_timestamp: unknown unit `$other` " +
-              "(seconds milliseconds nanoseconds)")
-        }
-      }, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_vrl_ipv6_to_ipv4", { exprs =>
-        require(exprs.size == 1, "ipv6_to_ipv4(value) takes 1 argument")
-        VrlIpKernel1(exprs.head, "to_v4")
-      }, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_vrl_random_bytes", { exprs =>
-        require(exprs.size == 1, "random_bytes(length) takes 1 argument")
-        VrlRandomBytes(Cast(exprs.head, IntegerType))
-      }, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_vrl_get_timezone", { exprs =>
-        require(exprs.isEmpty, "get_timezone() takes no arguments")
-        // the engine's configured zone — resolved once at analysis, the
-        // session-wide contract the vrl processor's timezone: option
-        // also enforces
-        Literal(org.apache.spark.sql.internal.SQLConf.get.sessionLocalTimeZone)
-      }, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_vrl_is_json", { exprs =>
-        require(exprs.size == 1 || exprs.size == 2,
-          "is_json(value[, variant]) takes 1-2 arguments")
-        // validity via Spark's own try-parse (null on malformed); the
-        // variant option narrows by the first significant character,
-        // which JSON's grammar makes unambiguous
-        val valid = IsNotNull(
-          new org.apache.spark.sql.catalyst.expressions.variant.ParseJson(
-            exprs.head, false))
-        exprs.lift(1) match {
-          case None => valid
-          case Some(e) =>
-            val variant = literalString(e, "is_json: the variant argument")
-            val prefix = variant match {
-              case "object" => "\\{"
-              case "array" => "\\["
-              case "string" => "\""
-              case "number" => "[-0-9]"
-              case "bool" => "[tf]"
-              case "null" => "n"
-              case other => throw new IllegalArgumentException(
-                s"is_json: unknown variant `$other` " +
-                  "(object array string number bool null)")
-            }
-            And(valid, RLike(exprs.head, Literal(s"^\\s*$prefix")))
-        }
-      }, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_vrl_compact", { exprs =>
-        require(exprs.size == 1,
-          "compact(value) takes 1 argument (the recursive/per-kind " +
-            "options are not supported)")
-        VrlCompact(exprs.head)
-      }, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_vrl_format_timestamp", { exprs =>
-        require(exprs.size == 2 || exprs.size == 3,
-          "format_timestamp(value, format[, timezone]) takes 2-3 arguments")
-        // dual dialect: a `%` format is VRL's strftime (translated by
-        // the parse_timestamp machinery — the same specifier table works
-        // for rendering); anything else passes through as a Java pattern
-        // (this engine's long-shipped spelling)
-        val fmt = literalString(exprs(1), "format_timestamp: the format argument")
-        val javaFmt = if (fmt.contains('%')) VrlStrptime.translate(fmt) else fmt
-        val tz = exprs.lift(2).map { e =>
-          val z = literalString(e, "format_timestamp: the timezone argument")
-          try java.time.ZoneId.of(z)
-          catch { case _: Exception => throw new IllegalArgumentException(
-            s"format_timestamp: unknown timezone `$z`") }
-          z
-        }
-        DateFormatClass(Cast(exprs.head, TimestampType), Literal(javaFmt),
-          tz.orElse(Some(
-            org.apache.spark.sql.internal.SQLConf.get.sessionLocalTimeZone)))
-      }, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_vrl_flatten", { exprs =>
-        require(exprs.size == 1 || exprs.size == 2,
-          "flatten(value[, separator]) takes 1-2 arguments")
-        val sep = exprs.lift(1)
-          .map(literalString(_, "flatten: the separator argument"))
-          .getOrElse(".")
-        VrlFlatten(exprs.head, sep)
-      }, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_vrl_unflatten", { exprs =>
-        require(exprs.size == 1 || exprs.size == 2,
-          "unflatten(value[, separator]) takes 1-2 arguments")
-        val sep = exprs.lift(1)
-          .map(literalString(_, "unflatten: the separator argument"))
-          .getOrElse(".")
-        VrlUnflatten(exprs.head, sep)
-      }, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_vrl_parse_proto", { exprs =>
-        require(exprs.size == 3,
-          "parse_proto(value, desc_file, message_type) takes 3 arguments")
-        graft.streaming.ProtoDecode(Cast(exprs.head, BinaryType),
-          protoFileFields(exprs(1), exprs(2), "parse_proto"))
-      }, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_vrl_encode_proto", { exprs =>
-        require(exprs.size == 3,
-          "encode_proto(value, desc_file, message_type) takes 3 arguments")
-        val fields = protoFileFields(exprs(1), exprs(2), "encode_proto")
-        // the wire encoder reads its struct POSITIONALLY in declared
-        // field order — reshape the caller's object by NAME (a missing
-        // field fails analysis naming it) and cast to the wire types
-        val shaped = CreateNamedStruct(fields.flatMap(f => Seq(Literal(f.name),
-          Cast(org.apache.spark.sql.catalyst.analysis.UnresolvedExtractValue(
-            exprs.head, Literal(f.name)), f.sparkType))))
-        graft.streaming.ProtoEncode(shaped, fields)
-      }, "scala_udf")
+    add("graft_vrl_starts_with", { exprs =>
+      caseForm(exprs, "starts_with", StartsWith(_, _))
+    })
+    add("graft_vrl_ends_with", { exprs =>
+      caseForm(exprs, "ends_with", EndsWith(_, _))
+    })
+    add("graft_vrl_contains", { exprs =>
+      caseForm(exprs, "contains", Contains(_, _))
+    })
+    add("graft_vrl_join", { exprs =>
+      require(exprs.size == 1 || exprs.size == 2,
+        "join(value[, separator]) takes 1-2 arguments")
+      // VRL's separator defaults to "" — Spark's array_join requires it
+      ArrayJoin(exprs.head, exprs.lift(1).getOrElse(Literal("")), None)
+    })
+    add("graft_vrl_to_unix_timestamp", { exprs =>
+      require(exprs.size == 1 || exprs.size == 2,
+        "to_unix_timestamp(value[, unit]) takes 1-2 arguments")
+      // VRL's second argument is a UNIT (seconds/milliseconds/
+      // nanoseconds) — NOT Spark unix_timestamp's format string; the
+      // bare alias used to misroute `unit: 'milliseconds'` into a
+      // pattern parse
+      val ts = Cast(exprs.head, TimestampType)
+      exprs.lift(1).map(literalString(_, "to_unix_timestamp: the unit argument"))
+        .getOrElse("seconds") match {
+        case "seconds" => UnixSeconds(ts)
+        case "milliseconds" => UnixMillis(ts)
+        case "nanoseconds" => Multiply(UnixMicros(ts), Literal(1000L))
+        case other => throw new IllegalArgumentException(
+          s"to_unix_timestamp: unknown unit `$other` " +
+            "(seconds milliseconds nanoseconds)")
+      }
+    })
+    add("graft_vrl_ipv6_to_ipv4", { exprs =>
+      require(exprs.size == 1, "ipv6_to_ipv4(value) takes 1 argument")
+      VrlIpKernel1(exprs.head, "to_v4")
+    })
+    add("graft_vrl_random_bytes", { exprs =>
+      require(exprs.size == 1, "random_bytes(length) takes 1 argument")
+      VrlRandomBytes(Cast(exprs.head, IntegerType))
+    })
+    add("graft_vrl_get_timezone", { exprs =>
+      require(exprs.isEmpty, "get_timezone() takes no arguments")
+      // the engine's configured zone — resolved once at analysis, the
+      // session-wide contract the vrl processor's timezone: option
+      // also enforces
+      Literal(org.apache.spark.sql.internal.SQLConf.get.sessionLocalTimeZone)
+    })
+    add("graft_vrl_is_json", { exprs =>
+      require(exprs.size == 1 || exprs.size == 2,
+        "is_json(value[, variant]) takes 1-2 arguments")
+      // validity via Spark's own try-parse (null on malformed); the
+      // variant option narrows by the first significant character,
+      // which JSON's grammar makes unambiguous
+      val valid = IsNotNull(
+        new org.apache.spark.sql.catalyst.expressions.variant.ParseJson(
+          exprs.head, false))
+      exprs.lift(1) match {
+        case None => valid
+        case Some(e) =>
+          val variant = literalString(e, "is_json: the variant argument")
+          val prefix = variant match {
+            case "object" => "\\{"
+            case "array" => "\\["
+            case "string" => "\""
+            case "number" => "[-0-9]"
+            case "bool" => "[tf]"
+            case "null" => "n"
+            case other => throw new IllegalArgumentException(
+              s"is_json: unknown variant `$other` " +
+                "(object array string number bool null)")
+          }
+          And(valid, RLike(exprs.head, Literal(s"^\\s*$prefix")))
+      }
+    })
+    add("graft_vrl_compact", { exprs =>
+      require(exprs.size == 1,
+        "compact(value) takes 1 argument (the recursive/per-kind " +
+          "options are not supported)")
+      VrlCompact(exprs.head)
+    })
+    add("graft_vrl_format_timestamp", { exprs =>
+      require(exprs.size == 2 || exprs.size == 3,
+        "format_timestamp(value, format[, timezone]) takes 2-3 arguments")
+      // dual dialect: a `%` format is VRL's strftime (translated by
+      // the parse_timestamp machinery — the same specifier table works
+      // for rendering); anything else passes through as a Java pattern
+      // (this engine's long-shipped spelling)
+      val fmt = literalString(exprs(1), "format_timestamp: the format argument")
+      val javaFmt = if (fmt.contains('%')) VrlStrptime.translate(fmt) else fmt
+      val tz = exprs.lift(2).map { e =>
+        val z = literalString(e, "format_timestamp: the timezone argument")
+        try java.time.ZoneId.of(z)
+        catch { case _: Exception => throw new IllegalArgumentException(
+          s"format_timestamp: unknown timezone `$z`") }
+        z
+      }
+      DateFormatClass(Cast(exprs.head, TimestampType), Literal(javaFmt),
+        tz.orElse(Some(
+          org.apache.spark.sql.internal.SQLConf.get.sessionLocalTimeZone)))
+    })
+    add("graft_vrl_flatten", { exprs =>
+      require(exprs.size == 1 || exprs.size == 2,
+        "flatten(value[, separator]) takes 1-2 arguments")
+      val sep = exprs.lift(1)
+        .map(literalString(_, "flatten: the separator argument"))
+        .getOrElse(".")
+      VrlFlatten(exprs.head, sep)
+    })
+    add("graft_vrl_unflatten", { exprs =>
+      require(exprs.size == 1 || exprs.size == 2,
+        "unflatten(value[, separator]) takes 1-2 arguments")
+      val sep = exprs.lift(1)
+        .map(literalString(_, "unflatten: the separator argument"))
+        .getOrElse(".")
+      VrlUnflatten(exprs.head, sep)
+    })
+    add("graft_vrl_parse_proto", { exprs =>
+      require(exprs.size == 3,
+        "parse_proto(value, desc_file, message_type) takes 3 arguments")
+      graft.streaming.ProtoDecode(Cast(exprs.head, BinaryType),
+        protoFileFields(exprs(1), exprs(2), "parse_proto"))
+    })
+    add("graft_vrl_encode_proto", { exprs =>
+      require(exprs.size == 3,
+        "encode_proto(value, desc_file, message_type) takes 3 arguments")
+      val fields = protoFileFields(exprs(1), exprs(2), "encode_proto")
+      // the wire encoder reads its struct POSITIONALLY in declared
+      // field order — reshape the caller's object by NAME (a missing
+      // field fails analysis naming it) and cast to the wire types
+      val shaped = CreateNamedStruct(fields.flatMap(f => Seq(Literal(f.name),
+        Cast(org.apache.spark.sql.catalyst.analysis.UnresolvedExtractValue(
+          exprs.head, Literal(f.name)), f.sparkType))))
+      graft.streaming.ProtoEncode(shaped, fields)
+    })
+    b.result()
   }
 
   private[functions] val Ipv4Pattern =

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.types.{ArrayType, BinaryType, IntegerType, StringType}
 
@@ -53,11 +52,9 @@ case class VrlSliceExpr(value: Expression, start: Expression,
 }
 
 object VrlSlice {
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_vrl_slice", { exprs =>
-        require(exprs.size == 2 || exprs.size == 3,
-          "slice(value, start[, end]) takes 2 or 3 arguments")
-        VrlSliceExpr(exprs.head, exprs(1), exprs.lift(2))
-      }, "scala_udf")
+  def builder(exprs: Seq[Expression]): Expression = {
+    require(exprs.size == 2 || exprs.size == 3,
+      "slice(value, start[, end]) takes 2 or 3 arguments")
+    VrlSliceExpr(exprs.head, exprs(1), exprs.lift(2))
+  }
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -89,9 +88,4 @@ object WinnowFps {
     while (it.hasNext) { out(p) = it.next().longValue(); p += 1 }
     new GenericArrayData(out)
   }
-
-  /** Expose as SQL function `winnow_fps(text, k, w)`. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "winnow_fps", exprs => WinnowFps(exprs(0), exprs(1), exprs(2)), "scala_udf")
 }

@@ -246,7 +246,7 @@ object BpeTokenizer {
       base.select(col("doc_id"),
         flatten(transform(col("ws"), w => element_at(enc, w))).as("tokens"))
     } else {
-      graft.functions.Bpe.register(docs.sparkSession)
+      graft.functions.Registry.install(docs.sparkSession)
       // typedLit, never SQL-string interpolation: learned symbols are
       // corpus-derived text and must not be parsed as SQL
       val mergeArr = typedLit(sorted.map(m => m.left + " " + m.right))

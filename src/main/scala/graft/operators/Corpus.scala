@@ -831,7 +831,7 @@ object Corpus {
   def decontaminateBloom(training: DataFrame, benchmark: DataFrame,
       idCol: String, textCol: String, n: Int = 5,
       numBits: Long = 1L << 26): DataFrame = {
-    graft.functions.Shims.register(training.sparkSession)
+    graft.functions.Registry.install(training.sparkSession)
     val train = shingleRows(training, idCol, textCol, n, "doc_id")
     val bench = shingleRows(benchmark, idCol, textCol, n, "bench_id")
     val bloom = bench

@@ -50,7 +50,7 @@ object Dedup {
       .filter(size(col("ws")) >= 3)
       .withColumn("shingles", expr(
         "transform(sequence(1, size(ws) - 2), i -> concat_ws(' ', element_at(ws, i), element_at(ws, i + 1), element_at(ws, i + 2)))"))
-    graft.functions.MinhashSigs.register(docs.sparkSession)
+    graft.functions.Registry.install(docs.sparkSession)
     val mh = w.select(col("doc_id"),
       expr(s"minhash_sigs(shingles, $numHashes)").as("ms"))
     val nBands = numHashes / rowsPerBand
@@ -184,7 +184,7 @@ object Dedup {
     /** `frame.filter(keepSql)` with the dropped rows counted under `label`. */
     private[operators] def countingFilter(frame: DataFrame, keepSql: String,
         label: String): DataFrame = {
-      graft.functions.CapCountIf.register(frame.sparkSession)
+      graft.functions.Registry.install(frame.sparkSession)
       frame.filter(expr(s"graft_cap_count_if($keepSql, '$label')"))
     }
   }
@@ -226,7 +226,7 @@ object Dedup {
     * oracle convention). */
   private def distinctShingleSigs(docs: DataFrame, idCol: String,
       textCol: String, numHashes: Int): DataFrame = {
-    graft.functions.MinhashSigs.register(docs.sparkSession)
+    graft.functions.Registry.install(docs.sparkSession)
     docs.select(col(idCol).as("doc_id"), split(col(textCol), " ").as("ws"))
       .filter(size(col("ws")) >= 3)
       .withColumn("sh", expr(
@@ -341,7 +341,7 @@ object Dedup {
     */
   def winnowingPairs(docs: DataFrame, idCol: String, textCol: String,
       k: Int = 8, w: Int = 4, dfCap: Int = 50, threshold: Double = 0.5): DataFrame = {
-    graft.functions.WinnowFps.register(docs.sparkSession)
+    graft.functions.Registry.install(docs.sparkSession)
     val fps = docs.select(col(idCol).as("doc_id"), col(textCol).as("text"))
       .select(col("doc_id"), explode(expr(s"winnow_fps(text, $k, $w)")).as("fp"))
     val freq = fps.groupBy(col("fp")).agg(count(lit(1)).as("df"))
@@ -681,7 +681,7 @@ object Dedup {
     // expression computes every bit in ONE md5-per-word loop — no
     // explode, no groupBy, ZERO shuffle, no intermediate hash array.
     // Identical output to the exploded ±1 vote sum the oracle computes.
-    graft.functions.SimhashBits.register(docs.sparkSession)
+    graft.functions.Registry.install(docs.sparkSession)
     docs.select(col(idCol).as("doc_id"), split(col(textCol), " ").as("ws"))
       // null text -> null ws: the exploded formulation (and the oracle's
       // unnest) emit NO row for such docs; an unfiltered row here would
@@ -911,7 +911,7 @@ object Dedup {
     */
   def editDistanceConfirm(docs: DataFrame, idCol: String, textCol: String,
                           maxRel: Double): DataFrame = {
-    graft.functions.BandedLevenshtein.register(docs.sparkSession)
+    graft.functions.Registry.install(docs.sparkSession)
     val cc = contentCollapse(docs, idCol, textCol)
     val reps = cc.reps(idCol, textCol)
     val t = reps.select(col(idCol), col(textCol))
@@ -1097,7 +1097,7 @@ object Dedup {
     */
   def jaroWinklerConfirm(docs: DataFrame, idCol: String, textCol: String,
                          minSim: Double): DataFrame = {
-    graft.functions.JaroWinkler.register(docs.sparkSession)
+    graft.functions.Registry.install(docs.sparkSession)
     // same exact-copy collapse as [[editDistanceConfirm]] ([[contentCollapse]]
     // has the proof): jw(t, t) = 1.0 for any text long enough to be an
     // LSH candidate (>= 3 words, hence non-empty), so within-group pairs
@@ -1128,7 +1128,7 @@ object Dedup {
   def typoPairs(items: DataFrame, idCol: String, nameCol: String,
       blockCol: String, maxDist: Int): DataFrame = {
     require(maxDist >= 0, s"maxDist must be non-negative, got $maxDist")
-    graft.functions.DamerauLevenshtein.register(items.sparkSession)
+    graft.functions.Registry.install(items.sparkSession)
     val t = items.select(col(idCol).as("id"), col(nameCol).as("nm"),
       col(blockCol).as("block"))
     val a = t.select(col("block"), col("id").as("id_a"), col("nm").as("na"))
@@ -1271,7 +1271,7 @@ object Dedup {
     // exact copies first, then near-dup the residue with full-width
     // simhash; on exact-copy-dense corpora the bucket caps stay silent.
     "q273_dedup_recipe" -> ((s, dir) => {
-      graft.functions.Shims.register(s)
+      graft.functions.Registry.install(s)
       dedupRecipePairs(Tables.load(s, dir, "documents"), "doc_id", "text",
         maxDist = 2)
         .orderBy(col("doc_a"), col("doc_b"))
@@ -1285,7 +1285,7 @@ object Dedup {
     // signature matches the narrow one byte-for-byte, so persisted
     // 32-bit pair tables stay valid under widening.
     "q275_simhash_wide" -> ((s, dir) => {
-      graft.functions.Shims.register(s)
+      graft.functions.Registry.install(s)
       simhashBandedPairs(
         simhash(Tables.load(s, dir, "documents"), "doc_id", "text", bits = 64),
         maxDist = 2, bits = 64)

@@ -81,7 +81,7 @@ object Extensions {
     }),
     // DataFusion array-function shims expanded to native expression trees.
     "q47_shim_arrays" -> ((s, dir) => {
-      graft.functions.Shims.register(s)
+      graft.functions.Registry.install(s)
       Tables.register(s, dir)
       s.sql(
         """SELECT doc_id,
@@ -97,7 +97,7 @@ object Extensions {
 
     // date_bin with an explicit origin (DataFusion date_bin semantics).
     "q48_date_bin_origin" -> ((s, dir) => {
-      graft.functions.Shims.register(s)
+      graft.functions.Registry.install(s)
       Tables.register(s, dir)
       s.sql(
         """SELECT CAST(unix_timestamp(date_bin_s(900, timestamp_micros(ts DIV 1000),
@@ -114,7 +114,7 @@ object Extensions {
     // exact codegen'd hamming_distance filter. Same rows as all-pairs,
     // linear-ish cost; unbounded-safe, so no doc-id clamp.
     "q58_simhash_hamming" -> ((s, dir) => {
-      graft.functions.Shims.register(s)
+      graft.functions.Registry.install(s)
       // bits = 16 pinned: the oracle's recorded signatures are 16-bit
       // (library default is 32 — SCALING.md saturation measurements).
       val sh = Dedup.simhash(Tables.load(s, dir, "documents"), "doc_id", "text", bits = 16)
@@ -130,7 +130,7 @@ object Extensions {
     // full 32-digit signature — narrower signatures are prefixes by
     // construction.
     "q244_simhash_autopairs" -> ((s, dir) => {
-      graft.functions.Shims.register(s)
+      graft.functions.Registry.install(s)
       Dedup.simhashNearDupPairs(Tables.load(s, dir, "documents"),
         "doc_id", "text", maxDist = 2)
         .orderBy(col("doc_a"), col("doc_b"))

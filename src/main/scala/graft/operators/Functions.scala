@@ -283,7 +283,7 @@ object Functions {
     "q31_struct_map" -> Q.fromSql(q31Spark),
     "q32_hash_funcs" -> Q.fromSql(q32Spark),
     "q119_ema" -> ((s, dir) => {
-      graft.functions.EmaWindow.register(s)
+      graft.functions.Registry.install(s)
       graft.Tables.register(s, dir)
       s.sql(q119Spark)
     })

@@ -164,7 +164,7 @@ object Selection {
   def cdcChunkStats(docs: DataFrame, idCol: String, textCol: String,
       k: Int = 8, d: Int = 32): DataFrame = {
     require(k > 0 && d > 0, s"window/divisor must be positive, got k=$k d=$d")
-    graft.functions.CdcChunks.register(docs.sparkSession)
+    graft.functions.Registry.install(docs.sparkSession)
     val t = docs.select(col(idCol).as("doc_id"), col(textCol).as("text"))
       .withColumn("chunks", expr(s"cdc_chunks(text, $k, $d)"))
     val ch = t.select(col("doc_id"),

@@ -28,7 +28,7 @@ object Similarity {
 
   /** vectors with double-cast embedding and L2 norm. */
   private def prepared(emb: DataFrame): DataFrame = {
-    graft.functions.DotProduct.register(emb.sparkSession)
+    graft.functions.Registry.install(emb.sparkSession)
     emb.select(col("vec_id"),
         expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("vd"))
       .withColumn("nrm", expr("sqrt(dot_product(vd, vd))"))
@@ -483,7 +483,7 @@ object Similarity {
       .toDF("vec_id", "features")
     val model = new KMeans().setK(nList).setSeed(seed).setMaxIter(20)
       .setFeaturesCol("features").fit(vecs)
-    graft.functions.DotProduct.register(spark)
+    graft.functions.Registry.install(spark)
     val cents = model.clusterCenters.toSeq.zipWithIndex
       .map { case (c, i) => (i.toLong, c.toArray.toSeq) }
       .toDF("centroid_id", "qv")
@@ -812,7 +812,7 @@ object Similarity {
   def probeIvfIndex(queries: DataFrame, dir: String, k: Int,
       nProbe: Int): DataFrame = {
     val spark = queries.sparkSession
-    graft.functions.DotProduct.register(spark)
+    graft.functions.Registry.install(spark)
     val cents = spark.read.parquet(s"$dir/centroids")
       .withColumnRenamed("qv", "centv").withColumnRenamed("qn", "centn")
     val q = queries.select(col("qid"),
@@ -852,7 +852,7 @@ object Similarity {
     */
   def cosineLshPairs(emb: DataFrame, bands: Int, bitsPerBand: Int,
       threshold: Double, dim: Int = 64, bucketCap: Int = 1024): DataFrame = {
-    graft.functions.DotProduct.register(emb.sparkSession)
+    graft.functions.Registry.install(emb.sparkSession)
     val v = prepared(emb)
     def sign(k: Int, i: Int): Double = {
       val hex = java.security.MessageDigest.getInstance("MD5")
@@ -913,7 +913,7 @@ object Similarity {
       dim: Int = 64): DataFrame = {
     require(dim % m == 0, s"dim $dim must split evenly into $m subspaces")
     val dsub = dim / m
-    graft.functions.DotProduct.register(emb.sparkSession)
+    graft.functions.Registry.install(emb.sparkSession)
     val v = emb.select(col("vec_id"),
       expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("vd"))
     val subs = v.withColumn("j", explode(sequence(lit(0), lit(m - 1))))
@@ -964,7 +964,7 @@ object Similarity {
     * q60 broadcast-anchor shape with the algebraic-identity distance,
     * rounded like the ADC side so rankings compare on equal terms. */
   def l2Knn(emb: DataFrame, nQueries: Int, k: Int): DataFrame = {
-    graft.functions.DotProduct.register(emb.sparkSession)
+    graft.functions.Registry.install(emb.sparkSession)
     val v = emb.select(col("vec_id"),
         expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("vd"))
       .withColumn("n2", expr("dot_product(vd, vd)"))
@@ -1111,7 +1111,7 @@ object Similarity {
     */
   def pqRecallAudit(emb: DataFrame, m: Int, ksub: Int, nQueries: Int,
       k: Int, dim: Int = 64): DataFrame = {
-    graft.functions.DotProduct.register(emb.sparkSession)
+    graft.functions.Registry.install(emb.sparkSession)
     val approx = pqKnn(emb, m, ksub, nQueries, k, dim).select(col("qid"), col("cid"))
     // self-dots precomputed per ROW (the prepared() pattern) — inside
     // the pair join they'd be recomputed once per (candidate, query)

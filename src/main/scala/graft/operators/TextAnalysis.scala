@@ -827,7 +827,7 @@ object TextAnalysis {
     // Aho-Corasick pass counts distinct blocklist phrases per doc —
     // the policy-filter/decontamination primitive (vs m contains scans).
     "q180_blocklist" -> ((s, dir) => {
-      graft.functions.BlocklistHits.register(s)
+      graft.functions.Registry.install(s)
       val phrases = BlocklistPhrases.map(p => s"'$p'").mkString(", ")
       Tables.load(s, dir, "documents")
         .select(col("doc_id"),
@@ -840,7 +840,7 @@ object TextAnalysis {
     // one-pass codegen expression vs the oracle's grouped form of the
     // same ln-based formula. Row-local — zero shuffle.
     "q172_char_entropy" -> ((s, dir) => {
-      graft.functions.CharEntropy.register(s)
+      graft.functions.Registry.install(s)
       Tables.load(s, dir, "documents")
         .select(col("doc_id"),
           length(col("text")).cast("long").as("n_chars_m"),
@@ -888,7 +888,7 @@ object TextAnalysis {
     // zero shuffle, scales with the scan; the ASCII fast path means real
     // corpora pay the Normalizer only on non-ASCII rows.
     "q95_nfc_normalize" -> ((s, dir) => {
-      graft.functions.NormalizeOps.register(s)
+      graft.functions.Registry.install(s)
       val docs = Tables.load(s, dir, "documents")
       val deco =
         expr("replace(replace(text, 'a', 'a\u0300'), 'e', 'e\u0301')")
@@ -911,7 +911,7 @@ object TextAnalysis {
     // plain per-group top-5 — the approximate regime's error bounds are
     // spec'd in OperatorsSpec instead.
     "q98_heavy_hitters" -> ((s, dir) => {
-      graft.functions.SpaceSavingTopK.register(s)
+      graft.functions.Registry.install(s)
       val docs = Tables.load(s, dir, "documents")
       docs.select(col("source"), explode(split(col("text"), " ")).as("w"))
         .groupBy(col("source"))

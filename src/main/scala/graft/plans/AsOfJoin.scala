@@ -135,13 +135,6 @@ object AsOfJoinStrategy extends SparkStrategy {
   }
 }
 
-/** Builder-time registration — `.withExtensions(new GraftExtensions)` or
-  * `spark.sql.extensions=graft.plans.GraftExtensions` — enables the FULL
-  * library surface with no per-session register() calls: the as-of join
-  * strategy plus every SQL function (dot_product, hamming_distance, the
-  * DataFusion shims). The [[AsOf]] API also injects the strategy into
-  * live sessions via experimental methods; `register()` on each function
-  * object remains the live-session path. */
 /** Algebraic simplification for the normalization expressions: NFC and
   * accent folding are idempotent, and NFC followed by accent folding is
   * just accent folding (strip_accents NFD-decomposes its input anyway) —
@@ -160,28 +153,22 @@ object NormalizeIdempotence
     }
 }
 
+/** Builder-time registration — `.withExtensions(new GraftExtensions)` or
+  * `spark.sql.extensions=graft.plans.GraftExtensions` — enables the FULL
+  * library surface in every session the builder makes: the as-of join
+  * strategy, the normalization rule above, and every SQL function of
+  * [[graft.functions.Registry.functions]] (the same table
+  * `Registry.install` registers into a live session, which is then a
+  * no-op). The [[AsOf]] API also injects the strategy into live sessions
+  * via experimental methods. */
 class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
   import org.apache.spark.sql.catalyst.FunctionIdentifier
-  import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-
-  private val functions: Seq[(String, Seq[Expression] => Expression)] =
-    graft.functions.Shims.builders ++ Seq[(String, Seq[Expression] => Expression)](
-      "dot_product" -> (exprs => graft.functions.DotProduct(exprs(0), exprs(1))),
-      "hamming_distance" -> (exprs => graft.functions.HammingDistance(exprs(0), exprs(1))),
-      "simhash_bits" -> (exprs => graft.functions.SimhashBits(exprs(0), exprs(1))),
-      "minhash_sigs" -> (exprs => graft.functions.MinhashSigs(exprs(0), exprs(1))),
-      "bpe_encode" -> (exprs => graft.functions.BpeEncode(exprs(0), exprs(1))),
-      "nfc_normalize" -> (exprs => graft.functions.NfcNormalize(exprs.head)),
-      "strip_accents" -> (exprs => graft.functions.StripAccents(exprs.head)),
-      "topk_sketch" -> (exprs => graft.functions.SpaceSavingTopK.builder(exprs)),
-      "jaro_winkler" -> (exprs => graft.functions.JaroWinkler(exprs(0), exprs(1))),
-      "damerau_levenshtein" -> (exprs => graft.functions.DamerauLevenshtein(exprs(0), exprs(1))),
-      "char_entropy" -> (exprs => graft.functions.CharEntropy(exprs.head)))
+  import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
   override def apply(e: org.apache.spark.sql.SparkSessionExtensions): Unit = {
     e.injectPlannerStrategy(_ => AsOfJoinStrategy)
     e.injectOptimizerRule(_ => NormalizeIdempotence)
-    functions.foreach { case (name, builder) =>
+    graft.functions.Registry.functions.foreach { case (name, builder) =>
       e.injectFunction((FunctionIdentifier(name),
         new ExpressionInfo("graft", name), builder))
     }

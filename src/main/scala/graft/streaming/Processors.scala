@@ -28,9 +28,9 @@ object Processors {
     private[streaming] def withViews(batch: DataFrame,
         views: Map[String, DataFrame]): DataFrame = {
       // pipelines get the whole graft function library (minhash_sigs,
-      // cdc_chunks, winnow_fps, ema, …) without per-function setup;
-      // idempotent map puts, safe per micro-batch
-      graft.functions.Registry.registerAll(batch.sparkSession)
+      // cdc_chunks, winnow_fps, ema, …) without per-function setup; one
+      // registry lookup once the session has it
+      graft.functions.Registry.install(batch.sparkSession)
       Sql.bind(batch.sparkSession, parsed, views + (tableName -> batch))
     }
   }
@@ -56,18 +56,13 @@ object Processors {
   /** `protobuf_to_arrow` / `arrow_to_protobuf` via the native wire-format
     * expressions in [[Protobuf]]. */
   final case class ProtobufToArrow(fields: Seq[ProtoField]) extends (DataFrame => DataFrame) {
-    def apply(batch: DataFrame): DataFrame = {
-      Protobuf.register(batch.sparkSession, "p", fields)
-      batch.selectExpr(s"proto_decode_p(${Codecs.ValueCol}) AS __m").select("__m.*")
-    }
+    def apply(batch: DataFrame): DataFrame =
+      batch.select(Protobuf.decode(col(Codecs.ValueCol), fields).as("__m")).select("__m.*")
   }
   final case class ArrowToProtobuf(fields: Seq[ProtoField]) extends (DataFrame => DataFrame) {
-    def apply(batch: DataFrame): DataFrame = {
-      Protobuf.register(batch.sparkSession, "p", fields)
-      val cols = fields.map(f => col(f.name)).toArray
-      batch.select(struct(cols: _*).as("__m"))
-        .selectExpr(s"proto_encode_p(__m) AS ${Codecs.ValueCol}")
-    }
+    def apply(batch: DataFrame): DataFrame =
+      batch.select(Protobuf.encode(struct(fields.map(f => col(f.name)): _*), fields)
+        .as(Codecs.ValueCol))
   }
 
   /** `batch` processor (processor/batch.rs:31-127): the reference merges
@@ -1869,7 +1864,6 @@ object Processors {
       * rhs reads the old value for both. */
     private def fallibleAssign(valueCol: String, errCol: String,
         sql: String): DataFrame => DataFrame = (df: DataFrame) => {
-      graft.functions.TryOps.register(df.sparkSession)
       val tmp = s"__vrl_try_$valueCol"
       df.withColumn(tmp, exprFor(df, s"try_pair($sql)"))
         .withColumn(valueCol, col(s"$tmp.value"))
@@ -1890,11 +1884,9 @@ object Processors {
             "the Spark engine resolves time zones session-wide; set " +
             s"spark.sql.session.timeZone to '$t' on the SparkSession instead")
       }
-      graft.functions.VrlSlice.register(batch.sparkSession)
-      graft.functions.VrlLib.register(batch.sparkSession)
-      // `??` error-coalescing compiles onto try_pair, so the carrier must
-      // exist for plain assignments too, not just `, err =` targets
-      graft.functions.TryOps.register(batch.sparkSession)
+      // the graft_vrl_* functions and try_pair (`, err =` targets and `??`
+      // error-coalescing compile onto it)
+      graft.functions.Registry.install(batch.sparkSession)
       val out = statements.foldLeft(batch)((df, stmt) => stmt(df))
       // VRL variables are program state, never event fields: the
       // reference's output for `.v2, err = .value * 2` carries v2 and NO
@@ -1929,11 +1921,13 @@ object Processors {
     * fan-in); the join SQL runs across the sources' slices, each bound
     * under its input name ([[Windows.windowJoin]]). A missing expected
     * source yields an empty window, like the reference's missing-source
-    * check.
+    * check. The join SQL is parsed and checked when the processor is
+    * built, like the `sql` processor's.
     */
   final case class WindowJoinProcessor(joinSql: String, expected: Seq[String],
       decode: String => BatchTransform = _ => JsonToArrow())
       extends (DataFrame => DataFrame) {
+    private val parsed = Sql.parse(joinSql)
     def apply(batch: DataFrame): DataFrame = {
       // a single un-tagged input (no multiple_inputs fan-in) is the one
       // expected source whole — the reference tags every batch with its
@@ -1950,7 +1944,7 @@ object Processors {
               batch.filter(col("__input_name") === name).drop("__input_name"))
           }.toMap
         }
-      Windows.windowJoin(batch.sparkSession, sources, joinSql, expected)
+      Windows.windowJoin(batch.sparkSession, sources, parsed, expected)
     }
   }
 
@@ -2070,7 +2064,7 @@ object Processors {
       val bits = c.options.get("bits").map(_.toInt)
       val ckpt = c.options.get("checkpoint_dir")
       batch => {
-        graft.functions.Shims.register(batch.sparkSession)
+        graft.functions.Registry.install(batch.sparkSession)
         graft.operators.Dedup.dedupRecipePairs(
           batch, idCol, textCol, maxDist, bits, ckpt)
       }

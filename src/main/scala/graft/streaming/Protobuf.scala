@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, GraftInternal}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
@@ -18,9 +18,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * string/bytes (length-delimited). Unknown fields are skipped per proto
   * semantics.
   *
-  * Registered as SQL functions so plans stay declarative:
-  *   Protobuf.register(spark, "sensor", schema)
-  *   df.selectExpr("proto_decode_sensor(__value__) AS m").select("m.*")
+  * Used as columns built for one message schema, so no per-schema name
+  * is written to the session's function registry:
+  *   df.select(Protobuf.decode(col("__value__"), schema).as("m")).select("m.*")
   */
 final case class ProtoField(number: Int, name: String, ftype: String) {
   def sparkType: DataType = ftype match {
@@ -315,12 +315,11 @@ case class ProtoEncode(child: Expression, fields: Seq[ProtoField])
 }
 
 object Protobuf {
-  /** Register proto_decode_<name> / proto_encode_<name> SQL functions for
-    * a message schema. */
-  def register(spark: SparkSession, name: String, fields: Seq[ProtoField]): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      s"proto_decode_$name", exprs => ProtoDecode(exprs.head, fields), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      s"proto_encode_$name", exprs => ProtoEncode(exprs.head, fields), "scala_udf")
-  }
+  /** `bytes` (a binary column) decoded into the message's struct. */
+  def decode(bytes: Column, fields: Seq[ProtoField]): Column =
+    GraftInternal.mapExpr(bytes)(ProtoDecode(_, fields))
+
+  /** `message` (a struct column in `fields` order) encoded to bytes. */
+  def encode(message: Column, fields: Seq[ProtoField]): Column =
+    GraftInternal.mapExpr(message)(ProtoEncode(_, fields))
 }

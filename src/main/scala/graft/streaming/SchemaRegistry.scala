@@ -262,10 +262,9 @@ object SchemaRegistry {
     }
     val ids = combos.map(_.getInt(1)).distinct.sorted
     val parts = ids.map { id =>
-      val fields = resolver.resolve(id)
-      Protobuf.register(batch.sparkSession, s"sr_$id", fields)
       withId.filter(col("__schema_id") === id)
-        .selectExpr("__schema_id", s"proto_decode_sr_$id(__payload) AS __m")
+        .select(col("__schema_id"),
+          Protobuf.decode(col("__payload"), resolver.resolve(id)).as("__m"))
         .select(col("__schema_id"), col("__m.*"))
     }
     parts.reduce(_.unionByName(_, allowMissingColumns = true))

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -29,11 +30,12 @@ object Windows {
     * ([[Sql.bind]] — no session views, so concurrent windows of other
     * streams never see these slices). If an expected source is absent
     * the window yields nothing — the reference's missing-source check
-    * (buffer/join.rs:101-116). */
+    * (buffer/join.rs:101-116). `joinSql` is the statement [[Sql.parse]]
+    * checked when the stream was built. */
   def windowJoin(spark: SparkSession, sources: Map[String, DataFrame],
-                 joinSql: String, expected: Seq[String]): DataFrame =
+                 joinSql: LogicalPlan, expected: Seq[String]): DataFrame =
     if (expected.exists(e => !sources.contains(e))) spark.emptyDataFrame
-    else Sql.bind(spark, Sql.parse(joinSql), sources)
+    else Sql.bind(spark, joinSql, sources)
 
   /** Fan-in of several inputs with a source tag — the reference's
     * `multiple_inputs` (input/multiple_inputs.rs:30-110); batches keep

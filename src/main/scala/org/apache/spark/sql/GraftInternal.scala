@@ -1,5 +1,6 @@
 package org.apache.spark.sql
 
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
 /** Bridge into `private[sql]` plan construction — the standard pattern
@@ -9,6 +10,13 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 object GraftInternal {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+
+  /** `c` wrapped in the Catalyst expression `f` builds — how an
+    * expression parameterized per call (a protobuf codec over one message
+    * schema) enters a plan without a named function in the session's
+    * registry. */
+  def mapExpr(c: Column)(f: Expression => Expression): Column =
+    classic.ExpressionUtils.column(f(classic.ExpressionUtils.expression(c)))
 
   /** Eager localCheckpoint that RETURNS THE ROW COUNT of the
     * materializing job. `Dataset.localCheckpoint(eager = true)` already

@@ -17,7 +17,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * dimensions: duplicate density, shared templates, tiny vocabularies
   * where signature collisions actually occur.
   */
-class DedupRecipePropertySpec extends AnyFunSuite {
+class DedupRecipePropertySpec extends AnyFunSuite with graft.TempDirs {
   lazy val spark = graft.streaming.SparkTestSession.spark
 
   private val vocab = Vector("alpha", "beta", "gamma", "delta", "epsilon",
@@ -66,7 +66,7 @@ class DedupRecipePropertySpec extends AnyFunSuite {
 
   test("dedupRecipePairs equals the from-scratch collapse + all-pairs " +
       "oracle on random copy-dense corpora (both checkpoint substrates)") {
-    graft.functions.Shims.register(spark)
+    graft.functions.Registry.install(spark)
     import spark.implicits._
     val corpora = samples(corpus, 8, 1600L)
     assert(corpora.nonEmpty)
@@ -84,7 +84,7 @@ class DedupRecipePropertySpec extends AnyFunSuite {
       // recipe under BOTH checkpoint substrates — results must not
       // depend on where the collapsed frame materializes
       val ckpt = if (i == 0)
-        Some(java.nio.file.Files.createTempDirectory("recipe-prop").toString)
+        Some(tempDir("recipe-prop").toString)
       else None
       val got = Dedup.dedupRecipePairs(df, "doc_id", "text", maxDist = 2,
           checkpointDir = ckpt)

@@ -31,7 +31,7 @@ class EvalSpec extends AnyFunSuite {
 
   test("jaro_winkler is symmetric and codegen matches interpreted eval") {
     import spark.implicits._
-    graft.functions.JaroWinkler.register(spark)
+    graft.functions.Registry.install(spark)
     val pairs = Seq(("MARTHA", "MARHTA"), ("DIXON", "DICKSONX"),
       ("hello world", "world hello"), ("same", "same"))
     val df = pairs.toDF("a", "b")
@@ -176,7 +176,7 @@ class EvalSpec extends AnyFunSuite {
 
   test("blocklist_hits rejects a non-foldable phrases argument at analysis time") {
     import spark.implicits._
-    graft.functions.BlocklistHits.register(spark)
+    graft.functions.Registry.install(spark)
     val df = Seq(("abc", Seq("a"))).toDF("t", "ps")
     val err = intercept[Exception] {
       df.select(expr("blocklist_hits(t, ps)")).collect()

@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Specs for the analytics-operator library over the sf0.001 fixtures. */
-class OperatorsSpec extends AnyFunSuite {
+class OperatorsSpec extends AnyFunSuite with graft.TempDirs {
   lazy val spark: SparkSession = graft.streaming.SparkTestSession.spark
   private val sf = "/root/testdata/sf0.001"
 
@@ -64,7 +64,7 @@ class OperatorsSpec extends AnyFunSuite {
   }
 
   test("dot_product codegen expression: fold parity, null, length mismatch") {
-    graft.functions.DotProduct.register(spark)
+    graft.functions.Registry.install(spark)
     val r = spark.sql(
       """SELECT dot_product(array(1.0D, 2.0D, 3.0D), array(4.0D, 5.0D, 6.0D)) AS d,
         |       dot_product(array(1.0D), CAST(NULL AS ARRAY<DOUBLE>)) AS n,
@@ -80,7 +80,7 @@ class OperatorsSpec extends AnyFunSuite {
   }
 
   test("nfc_normalize / strip_accents codegen expressions") {
-    graft.functions.NormalizeOps.register(spark)
+    graft.functions.Registry.install(spark)
     val r = spark.sql(
       """SELECT nfc_normalize('caf' || 'é') AS composed,
         |       length(nfc_normalize('é')) AS n1,
@@ -104,7 +104,7 @@ class OperatorsSpec extends AnyFunSuite {
   test("SpaceSaving sketch: exact regime matches groupBy, tiny capacity keeps the bounds") {
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    graft.functions.SpaceSavingTopK.register(spark)
+    graft.functions.Registry.install(spark)
     // skewed stream: item i appears ~1000/i times (zipf-ish), 40 distinct
     val rows = (1 to 40).flatMap(i => Seq.fill(1000 / i)(s"item$i"))
     val df = spark.sparkContext.parallelize(rows, 16).toDF("w")
@@ -148,7 +148,7 @@ class OperatorsSpec extends AnyFunSuite {
     val asExact = Similarity.pqKnn(emb, m = 8, ksub = n, nQueries = 5, k = 10)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(3)))
     // independent exact baseline: direct L2 on the full vectors
-    graft.functions.DotProduct.register(spark)
+    graft.functions.Registry.install(spark)
     val v = emb.select(col("vec_id"),
       expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("vd"))
     val q = v.filter(col("vec_id") < 5)
@@ -663,7 +663,7 @@ class OperatorsSpec extends AnyFunSuite {
 
   test("simhash library default is 32 bits and banded pairing matches brute force at that width") {
     import org.apache.spark.sql.functions._
-    graft.functions.Shims.register(spark)
+    graft.functions.Registry.install(spark)
     val docs = graft.Tables.load(spark, sf, "documents")
     val sh = Dedup.simhash(docs, "doc_id", "text") // library default: 32 bits
     assert(sh.select(length(col("simhash"))).distinct().collect()
@@ -920,7 +920,7 @@ class OperatorsSpec extends AnyFunSuite {
   test("persisted IVF index: full probe equals brute force; probing prunes cell partitions") {
     import org.apache.spark.sql.functions._
     val emb = graft.Tables.load(spark, sf, "embeddings")
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivf").toString
+    val dir = tempDir("graft_ivf").toString
     try {
       Similarity.buildIvfIndex(emb, nList = 4, dir)
       val queries = emb.filter(col("vec_id") < 3)
@@ -951,7 +951,7 @@ class OperatorsSpec extends AnyFunSuite {
   test("training shards land partitioned by shard with complete, ordered content") {
     import org.apache.spark.sql.functions._
     val docs = graft.Tables.load(spark, sf, "documents")
-    val dir = java.nio.file.Files.createTempDirectory("graft_shards").toString
+    val dir = tempDir("graft_shards").toString
     try {
       Corpus.writeShards(docs, "doc_id", "text", seqLen = 128L, seqsPerShard = 4L, dir)
       val back = spark.read.parquet(dir)
@@ -1323,7 +1323,7 @@ class OperatorsSpec extends AnyFunSuite {
   test("appendToIndex closes the loop: batch 2 collides with batch 1's survivors") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    val idx = java.nio.file.Files.createTempDirectory("append_idx").toString + "/band_index"
+    val idx = tempDir("append_idx").toString + "/band_index"
     val docs = graft.Tables.load(spark, sf, "documents")
     val day0 = docs.filter(col("doc_id") < 100)
     // bootstrap and increment are the same call
@@ -1366,7 +1366,7 @@ class OperatorsSpec extends AnyFunSuite {
 
   test("ingest lifecycle end-to-end: index -> increment -> splits -> epoch order -> shards") {
     import org.apache.spark.sql.functions._
-    val tmp = java.nio.file.Files.createTempDirectory("lifecycle").toString
+    val tmp = tempDir("lifecycle").toString
     val docs = graft.Tables.load(spark, sf, "documents")
     val day0 = docs.filter(col("doc_id") < 400)
     // day-1 batch: the genuinely-new tail plus one re-crawled copy of a
@@ -1854,7 +1854,7 @@ class OperatorsSpec extends AnyFunSuite {
 
   test("ema window function matches a reference fold, carries state over nulls, plans one Window") {
     import spark.implicits._
-    graft.functions.EmaWindow.register(spark)
+    graft.functions.Registry.install(spark)
     Seq((1L, "a", Some(10.0)), (2L, "a", None), (3L, "a", Some(20.0)),
       (4L, "a", Some(4.0)), (5L, "b", Some(5.0)), (6L, "b", Some(7.0)))
       .toDF("i", "k", "x").createOrReplaceTempView("ema_t")
@@ -2118,7 +2118,7 @@ class OperatorsSpec extends AnyFunSuite {
       "over the collapsed residue") {
     import spark.implicits._
     import org.apache.spark.sql.functions.{col, md5, min}
-    graft.functions.Shims.register(spark)
+    graft.functions.Registry.install(spark)
     // 10 templates × 20 EXACT copies, plus one near-dup variant each
     // (last word differs -> a handful of signature bits flip)
     val docs = ((for { t <- 0 until 10; c <- 0 until 20 } yield
@@ -2196,7 +2196,7 @@ class OperatorsSpec extends AnyFunSuite {
       "the default localCheckpoint path, and the checkpoint actually " +
       "lands on the filesystem") {
     import spark.implicits._
-    graft.functions.Shims.register(spark)
+    graft.functions.Registry.install(spark)
     val docs = ((for { t <- 0 until 5; c <- 0 until 4 } yield
       ((t * 100 + c).toLong,
         s"template $t alpha beta gamma delta epsilon zeta")) ++
@@ -2211,7 +2211,7 @@ class OperatorsSpec extends AnyFunSuite {
         .map(r => (r.getLong(0), r.getLong(1), r.getAs[Number](2).intValue))
         .sortBy(identity).toSeq
     val dflt = run(None)
-    val tmp = java.nio.file.Files.createTempDirectory("graft-ckpt")
+    val tmp = tempDir("graft-ckpt")
     val reliable = run(Some(tmp.toString))
     assert(reliable == dflt, "checkpoint substrate must not change results")
     assert(dflt.nonEmpty, "fixture must produce near-dup pairs")
@@ -2227,7 +2227,7 @@ class OperatorsSpec extends AnyFunSuite {
       "same-path request under a DIFFERENT scheme still re-points the " +
       "checkpoint dir (never silently lands on the wrong filesystem)") {
     import spark.implicits._
-    graft.functions.Shims.register(spark)
+    graft.functions.Registry.install(spark)
     val sc = spark.sparkContext
     // a second hadoop scheme backed by the local disk, so the
     // different-scheme case is drivable without a real HDFS/s3a
@@ -2236,7 +2236,7 @@ class OperatorsSpec extends AnyFunSuite {
     val docs = (for { t <- 0 until 3; c <- 0 until 3 } yield
       ((t * 10 + c).toLong, s"tpl $t alpha beta gamma delta"))
       .toDF("doc_id", "text")
-    val tmp = java.nio.file.Files.createTempDirectory("graft-scheme-ckpt")
+    val tmp = tempDir("graft-scheme-ckpt")
     // 1) file:-scheme checkpoint dir gets set
     Dedup.dedupRecipePairs(docs, "doc_id", "text",
       checkpointDir = Some(tmp.toString)).count()
@@ -2262,7 +2262,7 @@ class OperatorsSpec extends AnyFunSuite {
       "is byte-compatible, planes add independent bits, and the banded " +
       "pairing equals brute force at every width") {
     import spark.implicits._
-    graft.functions.Shims.register(spark)
+    graft.functions.Registry.install(spark)
     val docs = ((1 to 30).map(i =>
       (i.toLong, s"document number $i with some shared words alpha beta gamma")) ++
       Seq((31L, "document number 1 with some shared words alpha beta gamme")))
@@ -2307,7 +2307,7 @@ class OperatorsSpec extends AnyFunSuite {
   test("CapCountIf counts NULL predicates as drops — Filter discards a " +
       "NULL condition exactly like false, so both must tick the counter") {
     import spark.implicits._
-    graft.functions.CapCountIf.register(spark)
+    graft.functions.Registry.install(spark)
     val label = s"nulltest_${System.nanoTime()}" // fresh accumulator per run
     val df = Seq[(Long, java.lang.Long)]((1L, 5L), (2L, null), (3L, 1L))
       .toDF("id", "v")

@@ -112,7 +112,7 @@ class SelectionSpec extends AnyFunSuite {
 
   test("cdcChunkStats: chunks exactly reassemble the document (partition property)") {
     import spark.implicits._
-    graft.functions.CdcChunks.register(spark)
+    graft.functions.Registry.install(spark)
     val docs = Seq((1L, "x" * 5), (2L, ("abcdefgh" * 40) + "tail"),
       (3L, "unicode é你😀 mixed " * 20)).toDF("doc_id", "text")
     docs.select(col("text"), expr("array_join(cdc_chunks(text, 8, 32), '')").as("re"))
@@ -121,7 +121,7 @@ class SelectionSpec extends AnyFunSuite {
   }
 
   test("cdc_chunks rolling hash matches an independent WINDOWED-sum reference (incl. astral)") {
-    graft.functions.CdcChunks.register(spark)
+    graft.functions.Registry.install(spark)
     // the oracle computes the windowed sum Σ cp_j·(257^(7-j) mod M) per
     // position; the expression maintains it as a rolling hash — reimplement
     // the windowed form here and pin equality over codepoints

@@ -115,7 +115,7 @@ class AsOfJoinSpec extends AnyFunSuite {
   test("GraftExtensions wires the whole surface into a config-built session") {
     // what `spark.sql.extensions=graft.plans.GraftExtensions` produces:
     // a session where the strategy AND every SQL function exist with no
-    // register() calls
+    // Registry.install call
     val s = org.apache.spark.sql.GraftInternal
       .sessionWithExtensions(spark, new GraftExtensions()(_))
     assert(s.sessionState.planner.strategies.contains(AsOfJoinStrategy),

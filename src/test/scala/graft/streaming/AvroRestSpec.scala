@@ -12,7 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * datasource) and the schema-registry REST resolver (embedded JDK
   * HttpServer standing in for Confluent SR).
   */
-class AvroRestSpec extends AnyFunSuite {
+class AvroRestSpec extends AnyFunSuite with graft.TempDirs {
   lazy val spark: SparkSession = SparkTestSession.spark
   import spark.implicits._
 
@@ -34,7 +34,7 @@ class AvroRestSpec extends AnyFunSuite {
   }
 
   test("avro file input reads container files with schema mapping (input/file.rs register_avro)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_avro").toString
+    val dir = tempDir("graft_avro").toString
     writeAvroFixture(dir)
     val df = AvroInput.read(spark, s"$dir/*.avro")
     assert(df.schema.map(f => (f.name, f.dataType.typeName)).toSeq ==
@@ -45,7 +45,7 @@ class AvroRestSpec extends AnyFunSuite {
   }
 
   test("engine file input resolves format=avro incl. query-over-scan") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_avro2").toString
+    val dir = tempDir("graft_avro2").toString
     writeAvroFixture(dir)
     val out = Engine.inputFromConf(spark, ComponentConf("file", Map(
       "format" -> "avro", "path" -> s"$dir/*.avro",
@@ -61,7 +61,7 @@ class AvroRestSpec extends AnyFunSuite {
     import org.apache.arrow.vector.types.pojo.{ArrowType, Field, FieldType, Schema => ASchema}
     import scala.jdk.CollectionConverters._
 
-    val dir = java.nio.file.Files.createTempDirectory("graft_arrow").toString
+    val dir = tempDir("graft_arrow").toString
     val schema = new ASchema(Seq(
       new Field("id", FieldType.nullable(new ArrowType.Int(64, true)), null),
       new Field("v", FieldType.nullable(

@@ -49,15 +49,10 @@ class CodecPropertySpec extends AnyFunSuite {
     val spark = SparkTestSession.spark
     import spark.implicits._
     val fields = Seq(ProtoField(1, "u32", "uint32"), ProtoField(2, "u64", "uint64"))
-    Protobuf.register(spark, "unsigned", fields)
-    val encoded = spark.sql(
-      """SELECT proto_encode_unsigned(named_struct(
-        |  'u32', CAST(4000000000 AS BIGINT),
-        |  'u64', CAST('18446744073709551615' AS DECIMAL(20, 0)))) AS b""".stripMargin)
-    encoded.createOrReplaceTempView("enc_unsigned")
-    val r = spark.sql(
-      "SELECT proto_decode_unsigned(b).u32 AS u32, proto_decode_unsigned(b).u64 AS u64 FROM enc_unsigned")
-      .collect().head
+    val encoded = Processors.ArrowToProtobuf(fields)(spark.sql(
+      """SELECT CAST(4000000000 AS BIGINT) AS u32,
+        |  CAST('18446744073709551615' AS DECIMAL(20, 0)) AS u64""".stripMargin))
+    val r = Processors.ProtobufToArrow(fields)(encoded).collect().head
     assert(r.getLong(0) == 4000000000L, "uint32 above Int.MaxValue must not wrap")
     assert(r.getDecimal(1).toBigInteger.toString == "18446744073709551615",
       "uint64 max must not wrap")
@@ -70,7 +65,6 @@ class CodecPropertySpec extends AnyFunSuite {
       ProtoField(1, "s32", "sint32"), ProtoField(2, "s64", "sint64"),
       ProtoField(3, "f32", "fixed32"), ProtoField(4, "f64", "fixed64"),
       ProtoField(5, "sf32", "sfixed32"), ProtoField(6, "sf64", "sfixed64"))
-    Protobuf.register(spark, "zz", fields)
     val cases = Seq(
       (-1, -1L, 4000000000L, "18446744073709551615", -2147483648, Long.MinValue + 1),
       (2147483647, Long.MaxValue, 1L, "1", 2147483647, Long.MaxValue),
@@ -82,12 +76,11 @@ class CodecPropertySpec extends AnyFunSuite {
           .toString,
         rnd.nextInt(), rnd.nextLong()))
     cases.foreach { case (s32, s64, f32, f64, sf32, sf64) =>
-      val r = spark.sql(
-        s"""SELECT proto_decode_zz(proto_encode_zz(named_struct(
-           |  's32', $s32, 's64', CAST($s64 AS BIGINT),
-           |  'f32', CAST($f32 AS BIGINT), 'f64', CAST('$f64' AS DECIMAL(20, 0)),
-           |  'sf32', $sf32, 'sf64', CAST($sf64 AS BIGINT)))) AS m""".stripMargin)
-        .select("m.*").collect().head
+      val r = Processors.ProtobufToArrow(fields)(Processors.ArrowToProtobuf(fields)(
+        spark.sql(s"""SELECT $s32 AS s32, CAST($s64 AS BIGINT) AS s64,
+           |  CAST($f32 AS BIGINT) AS f32, CAST('$f64' AS DECIMAL(20, 0)) AS f64,
+           |  $sf32 AS sf32, CAST($sf64 AS BIGINT) AS sf64""".stripMargin)))
+        .collect().head
       assert(r.getInt(0) == s32, s"sint32 $s32 -> ${r.getInt(0)}")
       assert(r.getLong(1) == s64, s"sint64 $s64 -> ${r.getLong(1)}")
       assert(r.getLong(2) == f32, s"fixed32 $f32 -> ${r.getLong(2)}")

@@ -6,12 +6,12 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Coverage fill-ins: csv/orc file formats through the engine input,
   * metadata column stamping, MLlib-LSH ANN vs brute force. */
-class CoverageSpec extends AnyFunSuite {
+class CoverageSpec extends AnyFunSuite with graft.TempDirs {
   lazy val spark: SparkSession = SparkTestSession.spark
   import spark.implicits._
 
   test("file input reads csv with header and orc (input/file.rs formats enum)") {
-    val base = java.nio.file.Files.createTempDirectory("graft_fmt").toString
+    val base = tempDir("graft_fmt").toString
     val df = Seq((1L, "a"), (2L, "b")).toDF("id", "tag")
     df.write.option("header", "true").csv(s"$base/c")
     df.write.orc(s"$base/o")

@@ -11,12 +11,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * and the Confluent wire-format codec with a cached resolver
   * (codec/schema_registry.rs).
   */
-class DurabilitySpec extends AnyFunSuite {
+class DurabilitySpec extends AnyFunSuite with graft.TempDirs {
   lazy val spark: SparkSession = SparkTestSession.spark
   import spark.implicits._
 
   test("checkpoint recovery: restart resumes after processed offsets (WAL equivalence)") {
-    val base = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
+    val base = tempDir("graft_ckpt").toString
     val in = s"$base/in"; val ckpt = s"$base/ckpt"
     val schema = StructType(Seq(StructField("id", LongType), StructField("v", StringType)))
 
@@ -42,7 +42,7 @@ class DurabilitySpec extends AnyFunSuite {
     // store, which lives in the CHECKPOINT — so the corpus dedup
     // guarantee holds across engine restarts, the property the
     // reference's WAL provides for its pipeline state.
-    val base = java.nio.file.Files.createTempDirectory("graft_dedup_ckpt").toString
+    val base = tempDir("graft_dedup_ckpt").toString
     val in = s"$base/in"; val ckpt = s"$base/ckpt"
     val schema = StructType(Seq(StructField("text", StringType), StructField("ts", LongType)))
     def stream = spark.readStream.schema(schema).parquet(in)
@@ -105,7 +105,7 @@ class DurabilitySpec extends AnyFunSuite {
   }
 
   test("checkpoint + jdbc sink: restart resumes without duplicating rows") {
-    val base = java.nio.file.Files.createTempDirectory("graft_jdbc_ckpt").toString
+    val base = tempDir("graft_jdbc_ckpt").toString
     val in = s"$base/in"; val ckpt = s"$base/ckpt"
     val url = s"jdbc:derby:$base/db;create=true"
     Jdbc.execute(url, """CREATE TABLE sunk ("id" BIGINT, "batch_id" BIGINT)""")
@@ -128,7 +128,7 @@ class DurabilitySpec extends AnyFunSuite {
   }
 
   test("parquet sink is idempotent per batchId (replay overwrites, not duplicates)") {
-    val path = java.nio.file.Files.createTempDirectory("graft_psink").toString + "/out"
+    val path = tempDir("graft_psink").toString + "/out"
     val sink = Engine.ParquetSink(path)
     sink.write(Seq((1L, "a"), (2L, "b")).toDF("id", "v"), batchId = 0L)
     sink.write(Seq((3L, "c")).toDF("id", "v"), batchId = 1L)
@@ -166,7 +166,7 @@ class DurabilitySpec extends AnyFunSuite {
   }
 
   test("engine restart with a staged buffer loses no sub-threshold rows") {
-    val base = java.nio.file.Files.createTempDirectory("graft_buf_ckpt").toString
+    val base = tempDir("graft_buf_ckpt").toString
     val in = s"$base/in"; val ckpt = s"$base/ckpt"; val stage = s"$base/stage"
     val out = s"$base/out"
     val schema = StructType(Seq(StructField("id", LongType)))
@@ -191,7 +191,7 @@ class DurabilitySpec extends AnyFunSuite {
   }
 
   test("staged batch accumulator survives restart and dedupes replayed batches") {
-    val path = java.nio.file.Files.createTempDirectory("graft_acc").toString + "/stage"
+    val path = tempDir("graft_acc").toString + "/stage"
     val acc1 = new Processors.BatchAccumulator(minRows = 3, staging = Some(path))
     assert(acc1(Seq(1, 2).toDF("x"), batchId = 0L).count() == 0) // staged, held
     // "restart": a fresh accumulator over the same staging path must still
@@ -220,7 +220,7 @@ class DurabilitySpec extends AnyFunSuite {
   }
 
   test("staged accumulator flush checks are metadata-only: no data re-read per batch") {
-    val base = java.nio.file.Files.createTempDirectory("graft_acc_o1").toString
+    val base = tempDir("graft_acc_o1").toString
     val acc = new Processors.BatchAccumulator(minRows = 100, staging = Some(s"$base/stage"))
     def batchDf(ids: Int*) = ids.toDF("x")
     // baseline: the SAME dynamic-overwrite partitioned write, alone
@@ -337,7 +337,7 @@ class DurabilitySpec extends AnyFunSuite {
     // dropped — generate-with-count is one-shot batch semantics in this
     // engine (input/generate.rs EOF), and resume-from-offset is only
     // meaningful for an unbounded stream.
-    val base = java.nio.file.Files.createTempDirectory("graft_dur_e2e").toString
+    val base = tempDir("graft_dur_e2e").toString
     val wal = s"$base/wal"; val out = s"$base/out"
     val s = s0.copy(
       input = s0.input.copy(options =

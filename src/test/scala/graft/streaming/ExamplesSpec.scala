@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * checked file by file. (Inputs that dial endpoints at read time are
   * resolution-checked via their registry case, not connected.)
   */
-class ExamplesSpec extends AnyFunSuite {
+class ExamplesSpec extends AnyFunSuite with graft.TempDirs {
 
   private val exampleDir = new java.io.File("examples")
   private val inputKindsNeedingEndpoint =
@@ -45,7 +45,7 @@ class ExamplesSpec extends AnyFunSuite {
     val spark = SparkTestSession.spark
     val yaml = new String(java.nio.file.Files.readAllBytes(
       new java.io.File(exampleDir, "corpus_curation.yaml").toPath))
-    val outDir = java.nio.file.Files.createTempDirectory("graft_corpus_out").toString
+    val outDir = tempDir("graft_corpus_out").toString
     val conf = Config.fromYaml(yaml.replace("/tmp/graft/out/corpus", outDir))
     Engine.run(spark, conf) // batch input -> runBatch, EOF semantics
     val got = spark.read.parquet(outDir).drop("batch_id")
@@ -69,7 +69,7 @@ class ExamplesSpec extends AnyFunSuite {
     val spark = SparkTestSession.spark
     val yaml = new String(java.nio.file.Files.readAllBytes(
       new java.io.File(exampleDir, "log_enrichment.yaml").toPath))
-    val outDir = java.nio.file.Files.createTempDirectory("graft_logenrich_out").toString
+    val outDir = tempDir("graft_logenrich_out").toString
     Engine.run(spark, Config.fromYaml(
       yaml.replace("/tmp/graft/out/log_enrichment", outDir)))
     val rows = spark.read.parquet(outDir)
@@ -97,12 +97,12 @@ class ExamplesSpec extends AnyFunSuite {
     val spark = SparkTestSession.spark
     val yaml = new String(java.nio.file.Files.readAllBytes(
       new java.io.File(exampleDir, "near_dedup.yaml").toPath))
-    val outDir = java.nio.file.Files.createTempDirectory("graft_neardup_out").toString
+    val outDir = tempDir("graft_neardup_out").toString
     Engine.run(spark, Config.fromYaml(yaml.replace("/tmp/graft/out/near_dedup", outDir)))
     val got = spark.read.parquet(outDir)
       .select("doc_a", "doc_b").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
-    graft.functions.WinnowFps.register(spark)
+    graft.functions.Registry.install(spark)
     spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .createOrReplaceTempView("neardup_docs")
     val expected = spark.sql(
@@ -121,14 +121,14 @@ class ExamplesSpec extends AnyFunSuite {
     val spark = SparkTestSession.spark
     val yaml = new String(java.nio.file.Files.readAllBytes(
       new java.io.File(exampleDir, "dedup_recipe.yaml").toPath))
-    val outDir = java.nio.file.Files.createTempDirectory("graft_dedupr_out").toString
+    val outDir = tempDir("graft_dedupr_out").toString
     Engine.run(spark, Config.fromYaml(
       yaml.replace("/tmp/graft/out/dedup_recipe", outDir)))
     val got = spark.read.parquet(outDir)
       .select("doc_a", "doc_b", "dist").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getAs[Number](2).intValue))
       .sortBy(identity).toSeq
-    graft.functions.Shims.register(spark)
+    graft.functions.Registry.install(spark)
     val expected = graft.operators.Dedup.dedupRecipePairs(
       spark.read.parquet("/root/testdata/sf0.001/documents.parquet"),
       "doc_id", "text", maxDist = 2).collect()
@@ -142,8 +142,8 @@ class ExamplesSpec extends AnyFunSuite {
       "pinned width matches the library pin, and the reliable checkpoint " +
       "materializes under the configured dir") {
     val spark = SparkTestSession.spark
-    val outDir = java.nio.file.Files.createTempDirectory("graft_deduprb_out").toString
-    val ckptDir = java.nio.file.Files.createTempDirectory("graft_deduprb_ck").toString
+    val outDir = tempDir("graft_deduprb_out").toString
+    val ckptDir = tempDir("graft_deduprb_ck").toString
     val yaml =
       s"""streams:
          |  - input:
@@ -167,7 +167,7 @@ class ExamplesSpec extends AnyFunSuite {
       .select("doc_a", "doc_b", "dist").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getAs[Number](2).intValue))
       .sortBy(identity).toSeq
-    graft.functions.Shims.register(spark)
+    graft.functions.Registry.install(spark)
     val expected = graft.operators.Dedup.dedupRecipePairs(
       spark.read.parquet("/root/testdata/sf0.001/documents.parquet"),
       "doc_id", "text", maxDist = 2, bits = Some(64)).collect()
@@ -186,12 +186,12 @@ class ExamplesSpec extends AnyFunSuite {
     val spark = SparkTestSession.spark
     val yaml = new String(java.nio.file.Files.readAllBytes(
       new java.io.File(exampleDir, "record_linkage.yaml").toPath))
-    val outDir = java.nio.file.Files.createTempDirectory("graft_linkage_out").toString
+    val outDir = tempDir("graft_linkage_out").toString
     Engine.run(spark, Config.fromYaml(yaml.replace("/tmp/graft/out/record_linkage", outDir)))
     val got = spark.read.parquet(outDir)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> ((r.getInt(3), r.getDouble(4))))
       .toMap
-    graft.functions.Registry.registerAll(spark)
+    graft.functions.Registry.install(spark)
     spark.read.parquet("/root/testdata/sf0.001/part.parquet")
       .createOrReplaceTempView("linkage_parts")
     val expected = spark.sql(
@@ -215,7 +215,7 @@ class ExamplesSpec extends AnyFunSuite {
     val spark = SparkTestSession.spark
     val yaml = new String(java.nio.file.Files.readAllBytes(
       new java.io.File(exampleDir, "ingest_guardrails.yaml").toPath))
-    val outDir = java.nio.file.Files.createTempDirectory("graft_guard_out").toString
+    val outDir = tempDir("graft_guard_out").toString
     Engine.run(spark, Config.fromYaml(yaml.replace("/tmp/graft/out/ingest_guardrails", outDir)))
     val got = spark.read.parquet(outDir)
     // conform: declared columns only — extras (lang, n_chars) dropped,
@@ -236,7 +236,7 @@ class ExamplesSpec extends AnyFunSuite {
     val spark = SparkTestSession.spark
     val yaml = new String(java.nio.file.Files.readAllBytes(
       new java.io.File(exampleDir, "drift_monitor.yaml").toPath))
-    val outDir = java.nio.file.Files.createTempDirectory("graft_drift_out").toString
+    val outDir = tempDir("graft_drift_out").toString
     Engine.run(spark, Config.fromYaml(yaml.replace("/tmp/graft/out/drift_monitor", outDir)))
     val got = spark.read.parquet(outDir)
     assert(got.count() == 500)
@@ -257,7 +257,7 @@ class ExamplesSpec extends AnyFunSuite {
     val spark = SparkTestSession.spark
     val yaml = new String(java.nio.file.Files.readAllBytes(
       new java.io.File(exampleDir, "sessionize.yaml").toPath))
-    val outDir = java.nio.file.Files.createTempDirectory("graft_sess_out").toString
+    val outDir = tempDir("graft_sess_out").toString
     Engine.run(spark, Config.fromYaml(yaml.replace("/tmp/graft/out/sessionize", outDir)))
     val got = spark.read.parquet(outDir)
       .select("user_id", "event_id", "session_seq").collect()
@@ -340,7 +340,7 @@ class ExamplesSpec extends AnyFunSuite {
     val spark = SparkTestSession.spark
     val yaml = new String(java.nio.file.Files.readAllBytes(
       new java.io.File(exampleDir, "window_join.yaml").toPath))
-    val outDir = java.nio.file.Files.createTempDirectory("graft_wj_out").toString
+    val outDir = tempDir("graft_wj_out").toString
     Engine.run(spark, Config.fromYaml(
       yaml.replace("/tmp/graft/out/window_join", outDir)))
     val got = spark.read.parquet(outDir)
@@ -352,7 +352,7 @@ class ExamplesSpec extends AnyFunSuite {
   test("FULL config path e2e: Engine.run on a multiple_inputs + session " +
       "window + join YAML lands the joined window in the parquet sink") {
     val spark = SparkTestSession.spark
-    val outDir = java.nio.file.Files.createTempDirectory("graft_mi_join").toString
+    val outDir = tempDir("graft_mi_join").toString
     val conf = Config.fromYaml(
       s"""streams:
          |  - input:

@@ -11,12 +11,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * an embedded JDK HttpServer, and the kafka sink option mapping
   * (output/kafka.rs — broker-free, like the input-side mapping spec).
   */
-class JdbcHttpSpec extends AnyFunSuite {
+class JdbcHttpSpec extends AnyFunSuite with graft.TempDirs {
   lazy val spark: SparkSession = SparkTestSession.spark
   import spark.implicits._
 
   private def derbyUrl(): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_derby").toString
+    val dir = tempDir("graft_derby").toString
     s"jdbc:derby:$dir/db;create=true"
   }
 

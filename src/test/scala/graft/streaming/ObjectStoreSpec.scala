@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * pure-mapping specs, no live store needed (the sandbox has no
   * endpoints; the translation IS the deliverable, per README's table).
   */
-class ObjectStoreSpec extends AnyFunSuite {
+class ObjectStoreSpec extends AnyFunSuite with graft.TempDirs {
 
   test("s3 store maps to PER-BUCKET fs.s3a.bucket.<name>.* keys (two streams " +
       "with different credentials coexist); endpoint forces path-style, allow_http drops TLS") {
@@ -110,7 +110,7 @@ class ObjectStoreSpec extends AnyFunSuite {
     import spark.implicits._
     // a real parquet file served by a stub HTTP server that honors Range
     // (and HEAD) — parquet's footer-then-column reads exercise the seeks
-    val dir = java.nio.file.Files.createTempDirectory("graft_httpfs")
+    val dir = tempDir("graft_httpfs")
     Seq((1L, "a"), (2L, "b"), (3L, "c"), (4L, "d"))
       .toDF("id", "tag").coalesce(1).write.mode("overwrite")
       .parquet(s"$dir/t.parquet")
@@ -147,7 +147,7 @@ class ObjectStoreSpec extends AnyFunSuite {
     server.start()
     try {
       val base = s"http://127.0.0.1:${server.getAddress.getPort}"
-      val out = java.nio.file.Files.createTempDirectory("graft_httpfs_out")
+      val out = tempDir("graft_httpfs_out")
       val yaml =
         s"""streams:
            |  - input:

@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * real python3+pyarrow workers fed per-partition Arrow IPC streams.
   * Gated on the probe — hosts without pyarrow skip rather than fail.
   */
-class PythonPipeSpec extends AnyFunSuite {
+class PythonPipeSpec extends AnyFunSuite with graft.TempDirs {
   lazy val spark: SparkSession = SparkTestSession.spark
   import spark.implicits._
 
@@ -185,7 +185,7 @@ class PythonPipeSpec extends AnyFunSuite {
   test("`module:` + `python_path:` import the callable from a file on the " +
       "path, like the reference's sys.path setup (processor/python.rs:108-121)") {
     assume(GraftArrowPipe.pythonArrowAvailable, "no python3+pyarrow on this host")
-    val dir = java.nio.file.Files.createTempDirectory("graft_pymod")
+    val dir = tempDir("graft_pymod")
     java.nio.file.Files.write(dir.resolve("graft_example_mod.py"),
       """import pyarrow as pa
         |import pyarrow.compute as pc

@@ -13,7 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * batch even while other threads bind the same names in the same
   * session, the session catalog is left as it was, and the statement is
   * checked when the processor is built. */
-class SqlBindingSpec extends AnyFunSuite {
+class SqlBindingSpec extends AnyFunSuite with graft.TempDirs {
   lazy val spark: SparkSession = SparkTestSession.spark
   import spark.implicits._
 
@@ -75,7 +75,7 @@ class SqlBindingSpec extends AnyFunSuite {
 
   test("runBatch through a file query, sql on table_name orders, lookup sql " +
       "and a window join leaves the session's temp views as they were") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_bind").toString
+    val dir = tempDir("graft_bind").toString
     graft.Tables.names.foreach(n =>
       Seq(7L).toDF(s"${n}_id").write.parquet(s"$dir/$n.parquet"))
     graft.Tables.register(spark, dir)
@@ -101,10 +101,7 @@ class SqlBindingSpec extends AnyFunSuite {
       assert(tempViews() == before)
       // the fixture view named like the processor's table is untouched
       assert(spark.table("orders").collect().toSeq == Seq(Row(7L)))
-    } finally {
-      graft.Tables.names.foreach(spark.catalog.dropTempView)
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
-    }
+    } finally graft.Tables.names.foreach(spark.catalog.dropTempView)
   }
 
   private def sql(query: String, tableName: String = "flow") =
@@ -114,6 +111,15 @@ class SqlBindingSpec extends AnyFunSuite {
   test("fromConf rejects DDL and unparsable sql when the processor is built") {
     intercept[IllegalArgumentException](sql("DROP TABLE t"))
     intercept[IllegalArgumentException](sql("SELEC id FRM flow"))
+  }
+
+  test("a buffer's DDL or unparsable join.query fails when the stream is " +
+      "built, not when the first window fires") {
+    def build(query: String) = Engine.bufferProcessors(
+      Some(ComponentConf("memory", Map("join.query" -> query))))
+    intercept[IllegalArgumentException](build("DROP TABLE t"))
+    intercept[IllegalArgumentException](build("SELEC id FRM flow"))
+    assert(build("SELECT id FROM flow").size == 1)
   }
 
   private val ids = Seq(1L, 2L, 3L)

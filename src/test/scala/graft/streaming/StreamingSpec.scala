@@ -20,7 +20,7 @@ object SparkTestSession {
 /** Runtime specs mirroring the reference's own unit tests
   * (SURVEY.md §5.1: sql happy/invalid/custom-table, JSON inference &
   * filtering, codec round-trips, window semantics, error routing). */
-class StreamingSpec extends AnyFunSuite {
+class StreamingSpec extends AnyFunSuite with graft.TempDirs {
   lazy val spark: SparkSession = SparkTestSession.spark
   import spark.implicits._
 
@@ -161,8 +161,8 @@ class StreamingSpec extends AnyFunSuite {
 
   test("sql processor sees the whole graft function library without setup") {
     // a config-driven pipeline can run the dedup/selection expressions
-    // directly in its sql step — Registry.registerAll is wired into
-    // SqlProcessor, no per-function registration in user code
+    // directly in its sql step — SqlProcessor installs the
+    // graft.functions.Registry table, no per-function setup in user code
     val docs = Seq(
       (1L, "the same boilerplate text repeated across both documents here"),
       (2L, "the same boilerplate text repeated across both documents here"),
@@ -444,7 +444,7 @@ class StreamingSpec extends AnyFunSuite {
     assert(parsed("demo.Sensor.Inner") == Seq(ProtoField(1, "flag", "bool")))
 
     // config round-trip through descriptor_path + message_type
-    val path = java.nio.file.Files.createTempFile("fds", ".desc")
+    val path = tempFile("fds", ".desc")
     java.nio.file.Files.write(path, fds)
     val opts = Map("descriptor_path" -> path.toString,
       "message_type" -> "demo.Sensor")
@@ -1235,7 +1235,7 @@ class StreamingSpec extends AnyFunSuite {
       ".proto source and compiled .desc descriptors, round-trip, " +
       "zigzag + fixed-width fields (vrl stdlib)") {
     val frame = Processors.JsonToArrow()(envelope(sensorJson.head))
-    val proto = java.nio.file.Files.createTempFile("graft_vrl", ".proto")
+    val proto = tempFile("graft_vrl", ".proto")
     java.nio.file.Files.writeString(proto,
       """syntax = "proto3";
         |package demo;
@@ -1275,7 +1275,7 @@ class StreamingSpec extends AnyFunSuite {
       ld(2, ld(1, s("device")) ++ vi(3, 1) ++ vi(5, 9)) ++
       ld(2, ld(1, s("seq")) ++ vi(3, 3) ++ vi(5, 3))
     val fds = ld(1, ld(1, s("demo.proto")) ++ ld(2, s("demo")) ++ ld(4, m))
-    val desc = java.nio.file.Files.createTempFile("graft_vrl", ".desc")
+    val desc = tempFile("graft_vrl", ".desc")
     java.nio.file.Files.write(desc, fds)
     val out2 = Processors.RemapProcessor(
       s""".enc = encode_proto!({"device": 's7', "seq": 12345}, '${desc}', 'demo.M')
@@ -1286,7 +1286,7 @@ class StreamingSpec extends AnyFunSuite {
       "the .desc (FileDescriptorSet) route round-trips")
     // a MULTI-segment package still resolves against the source parser's
     // unqualified message names (each stripped prefix is retried)
-    val proto2 = java.nio.file.Files.createTempFile("graft_vrl2", ".proto")
+    val proto2 = tempFile("graft_vrl2", ".proto")
     java.nio.file.Files.writeString(proto2,
       """syntax = "proto3";
         |package com.example.telemetry;
@@ -2443,7 +2443,7 @@ class StreamingSpec extends AnyFunSuite {
         Thread.sleep(100)
       }
     }
-    val dir = java.nio.file.Files.createTempDirectory("cp_lifecycle").toString
+    val dir = tempDir("cp_lifecycle").toString
     val yaml =
       s"""streams:
          |  - id: gen-live
@@ -2540,7 +2540,7 @@ class StreamingSpec extends AnyFunSuite {
         Thread.sleep(100)
       }
     }
-    val dir = java.nio.file.Files.createTempDirectory("cp_config").toString
+    val dir = tempDir("cp_config").toString
     def yamlTo(out: String) =
       s"""streams:
          |  - id: gen-cfg
@@ -2620,7 +2620,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("config version store: 16-hex content ids; save verifies stored " +
       "bytes on id reuse so a collision fails loudly") {
-    val dir = java.nio.file.Files.createTempDirectory("cfgstore").toString
+    val dir = tempDir("cfgstore").toString
     val store = new ConfigVersionStore(dir, spark.sparkContext.hadoopConfiguration)
     val id = store.save("streams: []\n")
     assert(id.matches("cfg-[0-9a-f]{16}"), s"64-bit digest prefix: $id")
@@ -2691,7 +2691,7 @@ class StreamingSpec extends AnyFunSuite {
         Thread.sleep(100)
       }
     }
-    val dir = java.nio.file.Files.createTempDirectory("cp_ops").toString
+    val dir = tempDir("cp_ops").toString
     val yaml =
       s"""streams:
          |  - id: gen-ops
@@ -2900,7 +2900,7 @@ class StreamingSpec extends AnyFunSuite {
         Thread.sleep(100)
       }
     }
-    val dir = java.nio.file.Files.createTempDirectory("cp_status").toString
+    val dir = tempDir("cp_status").toString
     val yaml =
       s"""streams:
          |  - id: gen-status
@@ -3123,7 +3123,7 @@ class StreamingSpec extends AnyFunSuite {
         (code, new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8))
       } finally c.disconnect()
     }
-    val dir = java.nio.file.Files.createTempDirectory("cp_audit").toString
+    val dir = tempDir("cp_audit").toString
     val tok = "audit-tok"
     // the actor is the stable NON-SECRET token fingerprint
     val expectedActor = "bearer:" + java.security.MessageDigest
@@ -3302,7 +3302,7 @@ class StreamingSpec extends AnyFunSuite {
     // would make every run overwrite the same __acc_batch partition
     // (silent cross-run data loss). The batch path must use the plain
     // in-memory apply and never touch the staging directory.
-    val staging = java.nio.file.Files.createTempDirectory("graft_stage_batch").toString
+    val staging = tempDir("graft_stage_batch").toString
     val sink = new Engine.MemorySink
     Engine.runBatch(envelope(sensorJson: _*),
       Seq(Processors.JsonToArrow(),
@@ -3360,7 +3360,7 @@ class StreamingSpec extends AnyFunSuite {
   test("window join skips when an expected source is missing (buffer/join.rs:101-116)") {
     val s1 = Seq((1, "a")).toDF("id", "v")
     val out = Windows.windowJoin(spark, Map("in1" -> s1),
-      "SELECT * FROM in1 JOIN in2 USING (id)", expected = Seq("in1", "in2"))
+      Sql.parse("SELECT * FROM in1 JOIN in2 USING (id)"), expected = Seq("in1", "in2"))
     assert(out.isEmpty)
   }
 
@@ -3368,7 +3368,8 @@ class StreamingSpec extends AnyFunSuite {
     val s1 = Seq((1, "a"), (2, "b")).toDF("id", "v1")
     val s2 = Seq((1, "x")).toDF("id", "v2")
     val out = Windows.windowJoin(spark, Map("in1" -> s1, "in2" -> s2),
-      "SELECT in1.id, v1, v2 FROM in1 JOIN in2 ON in1.id = in2.id", Seq("in1", "in2"))
+      Sql.parse("SELECT in1.id, v1, v2 FROM in1 JOIN in2 ON in1.id = in2.id"),
+      Seq("in1", "in2"))
     assert(out.collect().toSeq == Seq(Row(1, "a", "x")))
   }
 
@@ -3568,7 +3569,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("batch file input with query runs EOF-style (input/file.rs:199-249)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_file").toString
+    val dir = tempDir("graft_file").toString
     Seq((1, "a"), (2, "b"), (3, "a")).toDF("id", "tag")
       .write.mode("overwrite").parquet(s"$dir/t")
     val sink = new Engine.MemorySink

@@ -22,6 +22,19 @@ export SBT_OPTS="${SBT_OPTS:--Dsbt.override.build.repos=true -Dsbt.repository.co
 export SPARK_GRAFT_CPUS="$(env -u OMP_NUM_THREADS nproc)"
 export SPARK_DRIVER_MEM="$(awk '/^MemTotal:/ {g = int($2 / 2097152)} END {print (g < 2 ? 2 : g > 8 ? 8 : g) "g"}' 2>/dev/null </proc/meminfo || echo 2g)"
 export SPARK_LOCAL_DIRS=/tmp/spark-local
+# Source guard, before sbt: a graft SQL function reaches a session only
+# through the graft.functions.Registry table (installed once per session),
+# and the streaming engine binds batches to SQL by plan, writing no
+# session temp view.
+stray="$(grep -rl createOrReplaceTempFunction src/main/scala |
+  grep -vxE 'src/main/scala/graft/functions/(Registry|WeightedPercentile)\.scala')"
+views="$(grep -rl createOrReplaceTempView src/main/scala/graft/streaming)"
+if [ -n "$stray$views" ]; then
+  echo "[gate] RED — source guard:" >&2
+  [ -n "$stray" ] && echo "  createOrReplaceTempFunction outside functions/Registry.scala: $stray" >&2
+  [ -n "$views" ] && echo "  createOrReplaceTempView under graft/streaming/: $views" >&2
+  exit 1
+fi
 LOG=/tmp/gate_sbt_test.log
 echo "[gate] running full sbt test suite (log: $LOG)..." >&2
 sbt --batch -Dsbt.log.noformat=true Test/compile "testOnly *" >"$LOG" 2>&1
