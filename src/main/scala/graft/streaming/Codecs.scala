@@ -1,7 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Codecs: bytes <-> columnar batches (SURVEY.md §2.5).
   *
@@ -32,10 +33,23 @@ object Codecs {
     b.toString
   }
 
+  /** Exactly the schema `spark.read.json` infers for `strings`, from one
+    * job that reads every record once but hands Spark's inference only the
+    * records that can change the schema ([[org.apache.spark.sql.GraftJson]]).
+    * The one place the engine infers a JSON schema. */
+  def inferJsonSchema(strings: Dataset[String]): StructType =
+    org.apache.spark.sql.GraftJson.inferSchema(strings)
+
   /** JSON codec (codec/json.rs:23-52): decode infers the schema from the
     * batch (per-batch inference is legal inside foreachBatch — SURVEY §1.3),
     * optionally keeping only `fieldsToInclude`; encode serializes every
     * column to one JSON object per row.
+    *
+    * Inference is exact: [[inferJsonSchema]] returns the schema
+    * `spark.read.json` infers, types, widening and `_corrupt_record`
+    * included, and the batch is then parsed with it. Records that cannot
+    * change the schema (same shape as the ones before them) skip Spark's
+    * per-record type building.
     *
     * Pass `declaredSchema` when the stream feeds a schema-sensitive sink
     * (parquet append, JDBC insert): inference then never runs, so empty
@@ -50,10 +64,8 @@ object Codecs {
       val spark = df.sparkSession
       import spark.implicits._
       val strings = df.select(col(ValueCol).cast("string")).as[String]
-      val parsed = declaredSchema match {
-        case Some(s) => spark.read.schema(s).json(strings)
-        case None => spark.read.json(strings)
-      }
+      val parsed = spark.read
+        .schema(declaredSchema.getOrElse(inferJsonSchema(strings))).json(strings)
       if (parsed.schema.isEmpty)
         // Inference saw zero rows. A made-up schema here (e.g. all-string)
         // would poison schema-sensitive sinks, so emit the engine's
@@ -84,10 +96,14 @@ object Codecs {
     * their field sets are unified (null-cast the missing fields) before
     * coalescing, mirroring how the reference's row-wise JSON re-inference
     * merges them.
+    *
+    * The envelope's schema is inferred exactly as `spark.read.json` infers
+    * it ([[inferJsonSchema]]); records that cannot change it skip Spark's
+    * per-record type building.
     */
   object DebeziumJsonCodec {
     import org.apache.spark.sql.Column
-    import org.apache.spark.sql.types.{DataType, StructType}
+    import org.apache.spark.sql.types.DataType
 
     /** Envelope columns the reference always (re)inserts at the top level
       * (codec/debezium.rs:118-124) — they win over same-named business
@@ -98,7 +114,8 @@ object Codecs {
     def decode(df: DataFrame): DataFrame = {
       val spark = df.sparkSession
       import spark.implicits._
-      val parsed = spark.read.json(df.select(col(ValueCol).cast("string")).as[String])
+      val strings = df.select(col(ValueCol).cast("string")).as[String]
+      val parsed = spark.read.schema(inferJsonSchema(strings)).json(strings)
       val fieldType: Map[String, DataType] =
         parsed.schema.map(f => f.name -> f.dataType).toMap
       def structSide(name: String): Option[StructType] =

@@ -18,7 +18,7 @@ object Processors {
     * and run per batch with the batch bound as `tableName` by plan
     * ([[Sql.bind]]): no catalog write, so streams sharing the session
     * never read each other's batch or replace a session view. Every
-    * query also sees the graft function library.
+    * query also sees the graft function library ([[Sql.bind]] installs it).
     */
   final case class SqlProcessor(query: String, tableName: String = "flow")
       extends (DataFrame => DataFrame) {
@@ -27,10 +27,6 @@ object Processors {
     /** Run the query with `views` bound alongside the batch. */
     private[streaming] def withViews(batch: DataFrame,
         views: Map[String, DataFrame]): DataFrame = {
-      // pipelines get the whole graft function library (minhash_sigs,
-      // cdc_chunks, winnow_fps, ema, …) without per-function setup; one
-      // registry lookup once the session has it
-      graft.functions.Registry.install(batch.sparkSession)
       Sql.bind(batch.sparkSession, parsed, views + (tableName -> batch))
     }
   }

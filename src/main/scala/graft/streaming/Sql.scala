@@ -40,9 +40,12 @@ object Sql {
     * subqueries included. A `WITH` name shadows a view of the same name
     * where SQL scopes it: in the main query and in the CTEs defined
     * after it (and in its own body under `WITH RECURSIVE`). Every other
-    * name resolves through the catalog as usual. */
+    * name resolves through the catalog as usual, and every statement sees
+    * the graft function library (minhash_sigs, cdc_chunks, ema, …):
+    * installed into the session here, one registry lookup once it is. */
   def bind(spark: SparkSession, parsed: LogicalPlan,
       views: Map[String, DataFrame]): DataFrame = {
+    graft.functions.Registry.install(spark)
     val resolver = spark.sessionState.conf.resolver
     def sub(plan: LogicalPlan, bound: Seq[(String, DataFrame)]): LogicalPlan = plan match {
       case UnresolvedRelation(Seq(name), _, _) =>

@@ -104,6 +104,21 @@ class SqlBindingSpec extends AnyFunSuite with graft.TempDirs {
     } finally graft.Tables.names.foreach(spark.catalog.dropTempView)
   }
 
+  test("a window join's join.query and a file input's query resolve graft " +
+      "functions on a fresh session") {
+    val sigs = "SELECT id, size(minhash_sigs(split(t, ' '), 4)) AS n FROM flow"
+    val join = Processors.WindowJoinProcessor(sigs, Seq("flow"),
+      _ => (df: DataFrame) => df)
+    val fresh = spark.newSession()
+    val batch = fresh.createDataFrame(Seq((1L, "a b"))).toDF("id", "t")
+    assert(join(batch).collect().toSeq == Seq(Row(1L, 4)))
+    val dir = tempDir("graft_bind_fn").toString
+    Seq((2L, "c d")).toDF("id", "t").write.parquet(s"$dir/in")
+    val in = Engine.inputFromConf(spark.newSession(), ComponentConf("file",
+      Map("path" -> s"$dir/in", "query" -> sigs)))
+    assert(in.collect().toSeq == Seq(Row(2L, 4)))
+  }
+
   private def sql(query: String, tableName: String = "flow") =
     Processors.fromConf(Seq(ComponentConf("sql",
       Map("query" -> query, "table_name" -> tableName)))).head

@@ -24,15 +24,21 @@ export SPARK_DRIVER_MEM="$(awk '/^MemTotal:/ {g = int($2 / 2097152)} END {print 
 export SPARK_LOCAL_DIRS=/tmp/spark-local
 # Source guard, before sbt: a graft SQL function reaches a session only
 # through the graft.functions.Registry table (installed once per session),
-# and the streaming engine binds batches to SQL by plan, writing no
-# session temp view.
+# the streaming engine binds batches to SQL by plan, writing no
+# session temp view, and JSON schemas are inferred in one place.
 stray="$(grep -rl createOrReplaceTempFunction src/main/scala |
   grep -vxE 'src/main/scala/graft/functions/(Registry|WeightedPercentile)\.scala')"
 views="$(grep -rl createOrReplaceTempView src/main/scala/graft/streaming)"
-if [ -n "$stray$views" ]; then
+# JSON schema inference has one helper (Codecs.inferJsonSchema over
+# org.apache.spark.sql.GraftJson); a schema-less `read.json(` elsewhere
+# would run Spark's full per-record inference beside it.
+jsonInfer="$(grep -rlE '\.read\.json\(' src/main/scala |
+  grep -vx 'src/main/scala/org/apache/spark/sql/GraftJson\.scala')"
+if [ -n "$stray$views$jsonInfer" ]; then
   echo "[gate] RED — source guard:" >&2
   [ -n "$stray" ] && echo "  createOrReplaceTempFunction outside functions/Registry.scala: $stray" >&2
   [ -n "$views" ] && echo "  createOrReplaceTempView under graft/streaming/: $views" >&2
+  [ -n "$jsonInfer" ] && echo "  schema-less read.json( outside sql/GraftJson.scala: $jsonInfer" >&2
   exit 1
 fi
 LOG=/tmp/gate_sbt_test.log
