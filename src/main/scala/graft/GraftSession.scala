@@ -3,15 +3,14 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The ONE place the engine's session config lives. Every local
-  * entrypoint (Bench, Verify, ProbeQ, ScaleProbe, Explain, streaming
-  * Main, ThroughputBench) builds its session here, so a fix that changes
-  * measured execution — the AQE coalescing floor, the tmpfs shuffle dir —
-  * reaches the engine a real consumer gets, not just the benchmark, and
-  * probe A/Bs run under the same config as the sweep (round-17's probes
+  * entrypoint (Bench, Verify, ScaleProbe, Explain, streaming Main) and
+  * perfbench build their session here, so a fix that changes measured
+  * execution — the AQE coalescing floor, the tmpfs shuffle dir — reaches
+  * the engine a real consumer gets, not just the benchmark, and probe
+  * A/Bs run under the same config as the sweep (round-17's probes
   * silently lacked the bench's AQE floor, which corrupted two A/Bs).
   *
-  * Core count comes from SPARK_GRAFT_CPUS unless the caller pins one
-  * (ThroughputBench's protocol is recorded at local[32]).
+  * Core count comes from SPARK_GRAFT_CPUS unless the caller pins one.
   */
 object GraftSession {
 

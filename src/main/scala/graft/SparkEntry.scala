@@ -25,6 +25,16 @@ object SparkEntry {
       operators.Selection.queries ++ operators.Eval.queries ++
       operators.ConfigPipeline.queries
 
+  /** `SPARK_GRAFT_ONLY=q87,q53`: the name substrings a Bench or Verify run
+    * is restricted to, for iterating on a few entries; None when unset. */
+  def only: Option[Seq[String]] =
+    sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
+
+  /** The entries whose name contains one of [[only]]'s substrings; every
+    * entry when it is unset. */
+  def selected: Map[String, (SparkSession, String) => DataFrame] =
+    only.fold(queries)(subs => queries.filter { case (n, _) => subs.exists(n.contains) })
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted keys get a weaker rows-only check. */
   def oracleSql: Map[String, String] =

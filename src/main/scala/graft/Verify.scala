@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.streaming.Codecs.jsonEscape
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -12,15 +12,11 @@ object Verify {
     val spark = GraftSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    // Dev loop: SPARK_GRAFT_ONLY=q94,q101 limits the dump to a
-    // comma-separated subset — SUBSTRING match, same semantics as Bench,
-    // so the same env var works for both. The driver sets nothing → full run.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-    val picked = SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.exists(name.contains)) }
+    // Dev loop: SPARK_GRAFT_ONLY limits the dump to the entries it names,
+    // the same filter Bench applies. The driver sets nothing → full run.
+    val picked = SparkEntry.selected
     if (picked.isEmpty)
-      System.err.println(s"[verify] WARNING: SPARK_GRAFT_ONLY=${only.map(_.mkString(",")).getOrElse("")} selected ZERO queries")
+      System.err.println(s"[verify] WARNING: SPARK_GRAFT_ONLY=${SparkEntry.only.map(_.mkString(",")).getOrElse("")} selected ZERO queries")
     picked.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
@@ -28,18 +24,10 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    // every control char escaped: a tab or CR in builder-authored SQL
+    // would otherwise make the driver's json.load fail and silently zero
+    // the round's correctness
+    def q(s: String): String = "\"" + jsonEscape(s) + "\""
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)

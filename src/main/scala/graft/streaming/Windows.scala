@@ -15,13 +15,15 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *    (buffer/join.rs:62-130).
   *  - sliding   → the reference's semantics are COUNT-based
   *    (window_size/slide_size messages, sliding_window.rs:41-50):
-  *    [[countSlidingWindow]] via flatMapGroupsWithState.
+  *    `Processors.SlidingWindowBuffer`, over whole micro-batches.
   *  - session   → gap since last arrival (session_window.rs:40-49):
-  *    [[sessionState]] via flatMapGroupsWithState +
-  *    ProcessingTimeTimeout.
+  *    `Processors.SessionWindowBuffer`.
   *
-  * Event-time versions of all three (the scale-correct default for
-  * historical/late data) are in graft.operators.EventsOps.
+  * Both buffers are built from YAML by `Engine.bufferBuilders`. This
+  * object also holds the per-key streaming twins of two batch operators
+  * ([[streamingAsOf]], [[streamingSessionize]]) as programmatic API.
+  * Event-time versions of all three windows (the scale-correct default
+  * for historical/late data) are in graft.operators.EventsOps.
   */
 object Windows {
 
@@ -43,41 +45,6 @@ object Windows {
   def unionTagged(dfs: Map[String, DataFrame]): DataFrame =
     dfs.map { case (name, df) => df.withColumn("__input_name", lit(name)) }
       .reduce(_.unionByName(_, allowMissingColumns = true))
-
-  // ---- count-based sliding window ----
-
-  final case class Keyed(key: String, value: Double)
-  final case class SlideOut(key: String, window: Seq[Double])
-
-  /** State function: buffer values per key; every time `windowSize`
-    * values are buffered emit them as one window and advance by
-    * `slideSize` (overlapping windows, exactly the reference's
-    * count-sliding semantics). Pure — unit-testable with TestGroupState. */
-  def slidingFunc(windowSize: Int, slideSize: Int)(
-      key: String, rows: Iterator[Keyed], state: GroupState[Seq[Double]]): Iterator[SlideOut] = {
-    var buf = state.getOption.getOrElse(Seq.empty) ++ rows.map(_.value)
-    val out = scala.collection.mutable.ArrayBuffer[SlideOut]()
-    while (buf.size >= windowSize) {
-      out += SlideOut(key, buf.take(windowSize))
-      buf = buf.drop(slideSize)
-    }
-    state.update(buf)
-    out.iterator
-  }
-
-  def countSlidingWindow(ds: Dataset[Keyed], windowSize: Int, slideSize: Int): Dataset[SlideOut] = {
-    // sliding_window.rs builder validation: both positive, and the window
-    // must cover the slide or rows would be silently skipped.
-    require(windowSize > 0, s"window_size must be positive, got $windowSize")
-    require(slideSize > 0, s"slide_size must be positive, got $slideSize")
-    require(windowSize >= slideSize,
-      s"window_size ($windowSize) must be >= slide_size ($slideSize)")
-    val spark = ds.sparkSession
-    import spark.implicits._
-    ds.groupByKey(_.key)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        slidingFunc(windowSize, slideSize))
-  }
 
   // ---- streaming as-of join ----
 
@@ -174,37 +141,5 @@ object Windows {
     ds.groupByKey(_.key)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
         sessionizeFunc(gapNanos))
-  }
-
-  // ---- processing-time session window ----
-
-  final case class SessionAgg(n: Long, sum: Double, openedMs: Long)
-  final case class SessionOut(key: String, n: Long, sum: Double)
-
-  /** State function: accumulate until `gapMs` of silence, then emit the
-    * session on timeout — the reference's gap semantics
-    * (session_window.rs read loop 120-140). */
-  def sessionFunc(gapMs: Long)(
-      key: String, rows: Iterator[Keyed], state: GroupState[SessionAgg]): Iterator[SessionOut] = {
-    if (state.hasTimedOut) {
-      val s = state.get
-      state.remove()
-      Iterator.single(SessionOut(key, s.n, s.sum))
-    } else {
-      val vals = rows.map(_.value).toSeq
-      val prev = state.getOption.getOrElse(SessionAgg(0L, 0.0,
-        state.getCurrentProcessingTimeMs()))
-      state.update(SessionAgg(prev.n + vals.size, prev.sum + vals.sum, prev.openedMs))
-      state.setTimeoutDuration(gapMs)
-      Iterator.empty
-    }
-  }
-
-  def sessionWindow(ds: Dataset[Keyed], gapMs: Long): Dataset[SessionOut] = {
-    val spark = ds.sparkSession
-    import spark.implicits._
-    ds.groupByKey(_.key)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.ProcessingTimeTimeout)(
-        sessionFunc(gapMs))
   }
 }

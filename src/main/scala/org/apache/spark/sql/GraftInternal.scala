@@ -63,4 +63,10 @@ object GraftInternal {
       }
     }
   }
+
+  /** Blocks until Spark's listener bus has delivered every queued event,
+    * so totals a listener sums after a job include all of its stages and
+    * tasks. The bus is `private[spark]`. */
+  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
 }

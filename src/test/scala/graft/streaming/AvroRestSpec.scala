@@ -255,12 +255,4 @@ class AvroRestSpec extends AnyFunSuite with graft.TempDirs {
       assert(e.getMessage.contains("Unsupported schema type"))
     } finally server.stop(0)
   }
-
-  test("sliding window builder rejects invalid sizes (sliding_window.rs builder)") {
-    import spark.implicits._
-    val ds = Seq(Windows.Keyed("k", 1.0)).toDS()
-    intercept[IllegalArgumentException](Windows.countSlidingWindow(ds, 0, 1))
-    intercept[IllegalArgumentException](Windows.countSlidingWindow(ds, 3, 0))
-    intercept[IllegalArgumentException](Windows.countSlidingWindow(ds, 2, 3))
-  }
 }

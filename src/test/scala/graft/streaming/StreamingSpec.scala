@@ -3387,35 +3387,26 @@ class StreamingSpec extends AnyFunSuite with graft.TempDirs {
     spark.conf.set(key,
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     try {
-      val ms = MemoryStream[Windows.Keyed]
-      val out = Windows.countSlidingWindow(ms.toDS(), windowSize = 3, slideSize = 2)
+      val ms = MemoryStream[Windows.SessEvent]
+      val out = Windows.streamingSessionize(ms.toDS(), gapNanos = 10L)
       val q = out.writeStream.outputMode("append").format("memory")
         .queryName("rocks_out").start()
-      ms.addData((1 to 7).map(i => Windows.Keyed("k", i.toDouble)): _*)
+      // the (lastTime, seq) state must survive the batch boundary in
+      // RocksDB: t=25 is 15 past t=10, so it opens session 2
+      ms.addData(Windows.SessEvent("k", 0L, "a"), Windows.SessEvent("k", 10L, "b"))
+      q.processAllAvailable()
+      ms.addData(Windows.SessEvent("k", 25L, "c"), Windows.SessEvent("k", 30L, "d"))
       q.processAllAvailable(); q.stop()
-      val windows = spark.table("rocks_out").as[Windows.SlideOut]
-        .collect().map(_.window.toList).toList
-      assert(windows == List(List(1.0, 2.0, 3.0), List(3.0, 4.0, 5.0), List(5.0, 6.0, 7.0)),
-        "RocksDB-backed run must produce the same windows as the default store")
+      val stamps = spark.table("rocks_out").as[Windows.SessStamped]
+        .collect().map(s => (s.time, s.sessionSeq)).sorted.toList
+      assert(stamps == List((0L, 1L), (10L, 1L), (25L, 2L), (30L, 2L)),
+        "RocksDB-backed run must carry session state across micro-batches")
     } finally {
       prev match {
         case Some(v) => spark.conf.set(key, v)
         case None => spark.conf.unset(key)
       }
     }
-  }
-
-  test("count-based sliding window emits overlapping windows (sliding_window.rs:41-50)") {
-    implicit val sq = spark.sqlContext
-    val ms = MemoryStream[Windows.Keyed]
-    val out = Windows.countSlidingWindow(ms.toDS(), windowSize = 3, slideSize = 2)
-    val q = out.writeStream.outputMode("append").format("memory")
-      .queryName("slide_out").start()
-    ms.addData((1 to 7).map(i => Windows.Keyed("k", i.toDouble)): _*)
-    q.processAllAvailable(); q.stop()
-    val windows = spark.table("slide_out").as[Windows.SlideOut]
-      .collect().map(_.window.toList).toList
-    assert(windows == List(List(1.0, 2.0, 3.0), List(3.0, 4.0, 5.0), List(5.0, 6.0, 7.0)))
   }
 
   test("streaming as-of join matches latest right state across micro-batches") {
@@ -3503,25 +3494,6 @@ class StreamingSpec extends AnyFunSuite with graft.TempDirs {
     // cap 2: r1 evicted, r2/r3 retained, left matches the latest
     assert(s.get == Seq(2L -> "r2", 3L -> "r3"))
     assert(out == Seq(Windows.AsOfMatch("k", 10L, "l", Some(3L), Some("r3"))))
-  }
-
-  test("session state function accumulates then emits on timeout (session_window.rs:40-49)") {
-    import org.apache.spark.api.java.Optional
-    import org.apache.spark.sql.streaming.{GroupStateTimeout, TestGroupState}
-    val f = Windows.sessionFunc(gapMs = 1000) _
-    // two arrivals accumulate silently
-    val s1 = TestGroupState.create[Windows.SessionAgg](
-      Optional.empty(), GroupStateTimeout.ProcessingTimeTimeout, 100L,
-      Optional.empty(), hasTimedOut = false)
-    assert(f("k", Iterator(Windows.Keyed("k", 2.0), Windows.Keyed("k", 3.0)), s1).isEmpty)
-    assert(s1.get.n == 2 && s1.get.sum == 5.0)
-    // gap elapses -> session emitted, state cleared
-    val s2 = TestGroupState.create[Windows.SessionAgg](
-      Optional.of(s1.get), GroupStateTimeout.ProcessingTimeTimeout, 2000L,
-      Optional.empty(), hasTimedOut = true)
-    val out = f("k", Iterator.empty, s2).toSeq
-    assert(out == Seq(Windows.SessionOut("k", 2, 5.0)))
-    assert(!s2.exists)
   }
 
   test("streaming event-time window with watermark aggregates in append mode") {

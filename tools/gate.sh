@@ -34,11 +34,23 @@ views="$(grep -rl createOrReplaceTempView src/main/scala/graft/streaming)"
 # would run Spark's full per-record inference beside it.
 jsonInfer="$(grep -rlE '\.read\.json\(' src/main/scala |
   grep -vx 'src/main/scala/org/apache/spark/sql/GraftJson\.scala')"
-if [ -n "$stray$views$jsonInfer" ]; then
+# One measurement harness: the only mains are the driver's Bench and
+# Verify, the Explain and ScaleProbe diagnostics and the streaming CLI.
+# Timing an entry belongs in graft.Bench, a pipeline in perfbench.
+mainsWant="src/main/scala/graft/Bench.scala
+src/main/scala/graft/Explain.scala
+src/main/scala/graft/ScaleProbe.scala
+src/main/scala/graft/Verify.scala
+src/main/scala/graft/streaming/Main.scala"
+mainsHave="$(grep -rl 'def main(' src/main/scala | LC_ALL=C sort)"
+mains=""
+[ "$mainsHave" != "$mainsWant" ] && mains="[$(echo $mainsHave)]"
+if [ -n "$stray$views$jsonInfer$mains" ]; then
   echo "[gate] RED — source guard:" >&2
   [ -n "$stray" ] && echo "  createOrReplaceTempFunction outside functions/Registry.scala: $stray" >&2
   [ -n "$views" ] && echo "  createOrReplaceTempView under graft/streaming/: $views" >&2
   [ -n "$jsonInfer" ] && echo "  schema-less read.json( outside sql/GraftJson.scala: $jsonInfer" >&2
+  [ -n "$mains" ] && echo "  the files declaring def main( are not exactly graft/{Bench,Verify,Explain,ScaleProbe}.scala and graft/streaming/Main.scala: $mains" >&2
   exit 1
 fi
 LOG=/tmp/gate_sbt_test.log
