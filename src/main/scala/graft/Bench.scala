@@ -117,12 +117,13 @@ object Bench {
   val ProbeEvery = 8
 
   /** Per-query pinned baselines (tools/bench_baseline.json, committed):
-    * the quiet-machine reference numbers a sweep value is judged
-    * against. Missing file or missing entry → no pin (new queries bench
-    * un-gated until the next pin refresh). */
-  def loadPins(): Map[String, Double] = {
+    * the quiet-machine sf0.1 numbers a sweep value is judged against, so
+    * they apply only when `sfDir` is an `sf0.1` directory; a sweep at any
+    * other scale has no pins. Missing file or missing entry → no pin (new
+    * queries bench un-gated until the next pin refresh). */
+  def loadPins(sfDir: String): Map[String, Double] = {
     val f = new java.io.File("tools/bench_baseline.json")
-    if (!f.exists()) return Map.empty
+    if (new java.io.File(sfDir).getName != "sf0.1" || !f.exists()) return Map.empty
     val txt = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
     // flat {"name": seconds, ...} object — parse with a regex, no JSON lib
     val entry = """"([^"]+)"\s*:\s*([0-9.eE+-]+)""".r
@@ -238,7 +239,7 @@ object Bench {
     // regression across the whole sweep (the round-4 lesson: one
     // machine-contended driver run poisoned all 114 numbers at once).
     val reps = math.max(1, sys.env.getOrElse("SPARK_GRAFT_REPS", "2").toInt)
-    val pins = loadPins()
+    val pins = loadPins(rawSfDir)
     // HEAVIEST-FIRST order (by pinned baseline, descending; unpinned new
     // queries lead, alphabetical): a heavy query's executor-side drain
     // (task teardown, GC from its heap churn) then bleeds into an entry

@@ -153,9 +153,11 @@ object Config {
       val opts = (cm - "type" - "inputs" - "temporary_list" - "name").flatMap {
         // nested config blocks (the buffer's `join:` map, the file
         // input's `store:`, the temporary's codec/mode/redis_type/key
-        // maps) flatten to dotted keys: join.query, mode.url, key.value …
-        case (k, m: java.util.Map[_, _])
-            if Set("join", "store", "codec", "mode", "redis_type", "key")(k) =>
+        // maps, the nats/pulsar `auth:`, pulsar's `retry_config:` and
+        // its Expr<String> `topic:`) flatten to dotted keys: join.query,
+        // mode.url, key.value, auth.token … ([[nested]] reads them back)
+        case (k, m: java.util.Map[_, _]) if Set("join", "store", "codec", "mode",
+            "redis_type", "key", "auth", "retry_config", "topic")(k) =>
           dotted(k, anyMap(m))
         // the memory input's preloaded `messages:` list
         // (input/memory.rs) and the python processor's `python_path:`
@@ -232,4 +234,11 @@ object Config {
     case s: String => s
     case other => other.toString
   }
+
+  /** A block [[parseStream]] flattened to dotted keys, read back:
+    * `nested(o, "auth")` turns `auth.type`/`auth.token` into
+    * `type`/`token`. Empty when the block is absent. */
+  def nested(o: Map[String, String], block: String): Map[String, String] =
+    o.collect { case (k, v) if k.startsWith(block + ".") =>
+      k.stripPrefix(block + ".") -> v }
 }

@@ -29,6 +29,19 @@ object Engine {
     def apply(batch: DataFrame, batchId: Long): DataFrame
   }
 
+  /** Processors that hold rows across batches (rate_cap's carry, an
+    * in-memory accumulator's pending rows, an open session window): the
+    * engine empties them through one [[drain]] at EOF and at stop
+    * without naming their classes. `drain()` returns held rows and
+    * removes them from the processor, None when nothing is held; each
+    * call returns None or strictly shrinks what is held, so draining
+    * until None ends. `written()` runs after the sink has written a
+    * batch. */
+  private[streaming] trait RowHolder {
+    def drain(): Option[DataFrame]
+    def written(): Unit = ()
+  }
+
   /** Idempotent per batchId: each batch lands in its own batch_id=N
     * partition with dynamic overwrite, so a replayed batch (restart
     * between sink write and checkpoint commit) overwrites itself instead
@@ -242,10 +255,9 @@ object Engine {
       c.options.get("username"), c.options.get("password"))),
     "mongodb" -> (c => Mongo.MongoSink(c.options)),
     "pulsar" -> (c => Pulsar.PulsarSink(c.options("service_url"),
-      c.options.get("topic_expr")
-        .getOrElse(Pulsar.topicExprOf(c.options("topic"))),
+      c.options.getOrElse("topic_expr", Pulsar.topicExprOf(c.options)),
       c.options.getOrElse("value_field", Codecs.ValueCol),
-      c.options.get("auth").map(Pulsar.nestedOption).getOrElse(Map.empty))))
+      Config.nested(c.options, "auth"))))
 
   def sinkFromConf(c: ComponentConf): BatchSink =
     sinkBuilders.getOrElse(c.kind,
@@ -293,23 +305,34 @@ object Engine {
       }).filter(_.schema.nonEmpty)
     }
 
-  /** Flush every still-open session window through the processors
-    * DOWNSTREAM of its buffer into the sink, one id from `ids` per
-    * flushed session (held back or not). */
-  private def flushSessions(procs: Seq[Processors.BatchTransform],
-      sink: BatchSink, ids: Iterator[Long]): Unit =
+  private def holders(procs: Seq[Processors.BatchTransform]): Seq[RowHolder] =
+    procs.collect { case h: RowHolder => h }
+
+  /** Empty every [[RowHolder]] in pipeline order (the reference's
+    * buffer.flush() + final read at stream end, stream/mod.rs:356-362):
+    * each drained frame folds through the processors DOWNSTREAM of its
+    * holder and what comes out is written under the next id of `ids`.
+    * A holder downstream of another catches the drained rows and gives
+    * them up when the walk reaches it. Every holder's `written()` runs
+    * once the walk is done. */
+  private def drain(procs: Seq[Processors.BatchTransform], sink: BatchSink,
+      ids: Iterator[Long]): Unit = {
     procs.zipWithIndex.foreach {
-      case (b: Processors.SessionWindowBuffer, i) =>
-        b.flushPending().foreach { session =>
-          val id = ids.next()
-          fold(procs.drop(i + 1), session).foreach(sink.write(_, id))
+      case (h: RowHolder, i) =>
+        Iterator.continually(h.drain()).takeWhile(_.nonEmpty).flatten.foreach { held =>
+          fold(procs.drop(i + 1), held).foreach(sink.write(_, ids.next()))
         }
       case _ => ()
     }
+    holders(procs).foreach(_.written())
+  }
 
   /** A running stream: the pipeline folds over each micro-batch; a failed
     * batch routes whole to the error sink (stream/mod.rs:485-516
-    * `ProcessorData::Err`) instead of killing the query.
+    * `ProcessorData::Err`) instead of killing the query. When the query
+    * stops, the rows its processors still hold (a rate_cap carry, an
+    * in-memory accumulator's pending rows, an open session window) are
+    * drained into the sink under negative batch ids.
     */
   def start(
       input: DataFrame,
@@ -319,6 +342,7 @@ object Engine {
       trigger: Trigger = Trigger.AvailableNow(),
       checkpoint: Option[String] = None,
       queryName: Option[String] = None): StreamingQuery = {
+    val held = holders(processors)
     var w = input.writeStream.trigger(trigger)
     checkpoint.foreach(p => w = w.option("checkpointLocation", p))
     queryName.foreach(n => w = w.queryName(n))
@@ -332,13 +356,7 @@ object Engine {
         // zero-row inference guard (Codecs.JsonCodec).
         if (!staticallyEmpty(batch)) {
           fold(processors, batch, Some(batchId)).foreach(sink.write(_, batchId))
-          // the sink has consumed the release frame — any rate_cap
-          // cache for THIS trigger can drop now instead of lingering
-          // until (or past) the next trigger
-          processors.foreach {
-            case rc: Processors.RateCap => rc.releaseCache()
-            case _ => ()
-          }
+          held.foreach(_.written())
         }
       } catch {
         // NonFatal only: data/processor failures divert to the error sink;
@@ -352,30 +370,30 @@ object Engine {
           }
       }
     }.start()
-    // Session-window stop flush: a still-open session would otherwise be
-    // dropped when the query stops while its source offsets are already
-    // checkpoint-committed — data loss with no replay. A listener flushes
-    // the held session through the DOWNSTREAM processors into the sink at
+    // Stop flush: rows a processor still holds would otherwise be dropped
+    // when the query stops while their source offsets are already
+    // checkpoint-committed — data loss with no replay. A listener drains
+    // them through the DOWNSTREAM processors into the sink at
     // termination, under negative batch ids (no collision with any
     // micro-batch's id; idempotent sinks partition by id as usual).
     // Boundary, stated: a flush after an ERROR termination may emit rows
     // from a batch whose offsets never committed — at-least-once on the
-    // final session, vs the silent at-most-once of not flushing. (The
+    // held rows, vs the silent at-most-once of not flushing. (The
     // reference drops pending sessions at close — read() returns None
     // once cancelled, session_window.rs:120-125; this is strictly more
     // durable.)
-    if (processors.exists(_.isInstanceOf[Processors.SessionWindowBuffer])) {
+    if (held.nonEmpty) {
       val spark = input.sparkSession
       // once-only guard: the terminated EVENT and the registration-time
       // catch-up check below can both observe the same termination — the
       // flush must run exactly once whichever wins
       val flushed = new java.util.concurrent.atomic.AtomicBoolean(false)
       def flushOnce(): Unit = if (flushed.compareAndSet(false, true)) {
-        try flushSessions(processors, sink, Iterator.iterate(-1L)(_ - 1))
+        try drain(processors, sink, Iterator.iterate(-1L)(_ - 1))
         catch {
           case scala.util.control.NonFatal(ex) =>
             System.err.println(
-              s"[engine] session flush at query stop failed: ${ex.getMessage}")
+              s"[engine] drain at query stop failed: ${ex.getMessage}")
         }
       }
       val listener = new org.apache.spark.sql.streaming.StreamingQueryListener {
@@ -524,7 +542,7 @@ object Engine {
       // JetStream{stream, consumer_name/durable_name}; auth 65-75
       val host = c.options.getOrElse("host", "localhost")
       val port = c.options.getOrElse("port", "4222").toInt
-      val auth = c.options.get("auth").map(Pulsar.nestedOption)
+      val auth = Some(Config.nested(c.options, "auth")).filter(_.nonEmpty)
         .getOrElse(c.options.filter { case (k, _) =>
           Set("username", "password", "token")(k) })
       if (c.options.get("mode").contains("jetstream") ||
@@ -547,8 +565,7 @@ object Engine {
       val in = new Pulsar.PulsarInput(spark, c.options("service_url"),
         c.options("topic"), c.options("subscription_name"),
         c.options.getOrElse("subscription_type", "exclusive"),
-        c.options.get("auth").map(Pulsar.nestedOption).getOrElse(Map.empty),
-        c.options.get("retry_config").map(Pulsar.nestedOption).getOrElse(Map.empty))
+        Config.nested(c.options, "auth"), Config.nested(c.options, "retry_config"))
       configInputs.add(() => in.stop())
       in.toDF
     },
@@ -732,7 +749,8 @@ object Engine {
     *
     *  - memory (buffer/memory.rs:40-46,108-150): hold rows until
     *    `capacity` are pending or `timeout_ms` elapsed, then release as
-    *    one batch — the [[Processors.BatchAccumulator]].
+    *    one batch — the [[Processors.BatchAccumulator]]; rows still
+    *    pending at EOF or at stop are drained into the sink.
     *  - tumbling_window: the trigger IS the window — [[runStream]] maps
     *    `interval` to Trigger.ProcessingTime; no processor needed.
     *  - sliding_window (sliding_window.rs:41-50): count-based overlapping
@@ -955,7 +973,10 @@ object Engine {
   /** Batch input: run the pipeline once, EOF semantics — with the same
     * NonFatal error_output divert the streaming path has (a failing batch
     * pipeline routes the input whole, tagged `__error`, to the error sink
-    * instead of throwing). */
+    * instead of throwing). At EOF the rows the processors still hold (a
+    * rate_cap carry, an accumulator's sub-threshold rows, an open session
+    * window) are drained into the sink under ids 1, 2, … — a partial
+    * sliding window is dropped, like the reference's close. */
   def runBatch(in: DataFrame, procs: Seq[Processors.BatchTransform],
       sink: BatchSink, err: Option[BatchSink]): Unit =
     try {
@@ -964,55 +985,10 @@ object Engine {
       // a staged BatchAccumulator onto the cross-run staging path where
       // every run overwrites the same __acc_batch=0 partition.
       fold(procs, in).foreach(sink.write(_, 0L))
-      // EOF drain: a rate_cap carries overflow to "the next trigger",
-      // but a one-shot batch has none — without this loop the held rows
-      // would silently vanish at EOF. Feed empty batches until the carry
-      // empties; the guard stops if an iteration makes no progress
-      // (e.g. a downstream sentinel hold-back swallowing the release).
-      val caps = procs.collect { case rc: Processors.RateCap => rc }
-      var remaining = caps.map(_.pendingRows).sum
-      // each drain release gets its own batch id: the idempotent sinks
+      // each drained release gets its own batch id: the idempotent sinks
       // partition/dedupe BY id, and re-using 0 would overwrite the
       // initial release
-      var drainId = 1L
-      while (remaining > 0) {
-        fold(procs, in.limit(0)).foreach(sink.write(_, drainId))
-        drainId += 1
-        val now = caps.map(_.pendingRows).sum
-        if (now >= remaining && now > 0)
-          // no progress with rows still held: a downstream processor
-          // (e.g. a sentinel hold-back) swallowed the release — the
-          // loop must stop, but the loss has to be OBSERVABLE, not
-          // silent: divert the held rows to the error output if there
-          // is one, and say so either way
-          try {
-            System.err.println(
-              s"[engine] EOF drain stalled with $now rate_cap rows still held; " +
-                err.fold("no error_output configured — rows dropped")(_ =>
-                  "diverting held rows to error_output"))
-            err.foreach { errSink =>
-              caps.foreach { rc =>
-                var more = rc.pendingRows > 0
-                while (more) { // each release pass caps at max_rows
-                  val held = rc(in.limit(0))
-                  errSink.write(held.withColumn("__error",
-                    lit("rate_cap carry undeliverable at EOF")), drainId)
-                  drainId += 1
-                  more = rc.pendingRows > 0
-                }
-              }
-            }
-          } catch { case scala.util.control.NonFatal(e) =>
-            System.err.println(s"[engine] EOF drain divert failed: ${e.getMessage}")
-          }
-        remaining = if (now < remaining) now else 0L
-      }
-      caps.foreach(_.releaseCache()) // last drain pass's cache
-      // EOF flush of still-open session windows (the reference's
-      // buffer.flush() + final read at stream end, stream/mod.rs:356-362)
-      // under fresh drain ids. Sliding windows intentionally drop partial
-      // windows at EOF, like the reference's close.
-      flushSessions(procs, sink, Iterator.iterate(drainId)(_ + 1))
+      drain(procs, sink, Iterator.iterate(1L)(_ + 1))
     } catch {
       case scala.util.control.NonFatal(e) =>
         err match {

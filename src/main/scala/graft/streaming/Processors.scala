@@ -203,23 +203,35 @@ object Processors {
     *
     * The split uses `zipWithIndex` — per-partition counts + offsets in
     * one extra pass, held rows keep their partition locality; no
-    * global sort or single-partition window anywhere. Held rows are
-    * session-scoped like the in-memory [[BatchAccumulator]]: a restart
-    * drops them (at-most-once) — put a durable accumulator upstream
-    * when that matters.
+    * global sort or single-partition window anywhere. At EOF and when
+    * the query stops, the engine drains the carry through [[drain]],
+    * still at most `maxRows` rows per release. Held rows are
+    * session-scoped like the in-memory [[BatchAccumulator]]: a crash or
+    * restart drops them (at-most-once) — put a durable accumulator
+    * upstream when that matters.
     */
-  final class RateCap(maxRows: Long) extends (DataFrame => DataFrame) {
+  final class RateCap(maxRows: Long) extends (DataFrame => DataFrame) with Engine.RowHolder {
     require(maxRows > 0, s"rate_cap max_rows must be positive, got $maxRows")
     private var pending: Option[DataFrame] = None
     // the previous trigger's cached input, unpersisted once its release
-    // half has certainly been consumed (the next apply call)
+    // half has certainly been consumed (the next split or written())
     private var lastCached: Option[org.apache.spark.rdd.RDD[_]] = None
-    def apply(batch: DataFrame): DataFrame = {
-      val spark = batch.sparkSession
-      val all = pending match {
-        case Some(p) => p.unionByName(batch)
-        case None => batch
-      }
+    def apply(batch: DataFrame): DataFrame =
+      split(pending.fold(batch)(_.unionByName(batch)))
+    /** The next release of the carry (at most `maxRows` rows). */
+    def drain(): Option[DataFrame] = pending.map(split)
+    /** Drops the last split's cache once the sink has written its release
+      * — else the LAST trigger's input stays pinned for the session.
+      * Safe for the carry: split checkpointed it EAGERLY while the cache
+      * was alive, so the next split never reads the released lineage. */
+    override def written(): Unit = {
+      lastCached.foreach(_.unpersist(blocking = false))
+      lastCached = None
+    }
+
+    /** Releases the first `maxRows` rows of `all` and holds the rest. */
+    private def split(all: DataFrame): DataFrame = {
+      val spark = all.sparkSession
       val schema = all.schema
       // local copy: the filter closures must not capture `this`
       // (RateCap holds a DataFrame and is not serializable)
@@ -227,8 +239,9 @@ object Processors {
       // cache the input ONCE: zipWithIndex's internal count job
       // materializes the cache, and the release/rest scans plus the
       // overflow checkpoint then all read it — without this the
-      // upstream pipeline recomputes three times per trigger
-      lastCached.foreach(_.unpersist(blocking = false))
+      // upstream pipeline recomputes three times per trigger (the
+      // previous split's cache goes first: its release is consumed)
+      written()
       val src = all.rdd.persist(
         org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       lastCached = Some(src)
@@ -246,19 +259,6 @@ object Processors {
     }
     /** Rows currently held back (test/monitoring hook). */
     def pendingRows: Long = pending.map(_.count()).getOrElse(0L)
-
-    /** Release the trigger's cache once the engine has finished writing
-      * the batch downstream — otherwise the LAST trigger's input stays
-      * pinned in MEMORY_AND_DISK for the rest of the session (the
-      * unpersist at the next apply() never comes after the final one).
-      * Safe for the carried-over `pending` rows: apply() materialized
-      * them EAGERLY (`rest.localCheckpoint(true)` above) while this
-      * cache was still alive, so the next trigger reads the checkpointed
-      * blocks, never the released cache's lineage. */
-    def releaseCache(): Unit = {
-      lastCached.foreach(_.unpersist(blocking = false))
-      lastCached = None
-    }
   }
 
   /** Cross-micro-batch accumulator (processor/batch.rs:31-127 — the
@@ -272,9 +272,10 @@ object Processors {
     *    `localCheckpoint()`ed frames — rows stay distributed on executors,
     *    lineage is truncated so the union chain never grows, and counts
     *    are tracked incrementally (no re-count of prior batches).
-    *    Pending rows are session-scoped: a restart drops sub-threshold
-    *    rows (at-most-once across restarts) — use staging when that
-    *    matters.
+    *    The engine drains the pending rows into the sink at EOF and
+    *    when the query stops ([[drain]]); a crash or restart drops
+    *    sub-threshold rows (at-most-once across restarts) — use staging
+    *    when that matters.
     *
     *  - Staged (staging = Some(path)): every micro-batch lands in its own
     *    `__acc_batch=N` parquet partition via dynamic overwrite, so a
@@ -282,7 +283,8 @@ object Processors {
     *    pending rows SURVIVE a restart. A `_flushed_upto` marker records
     *    the last released partition; the one remaining at-most-once
     *    window — a crash exactly between marker advance and the
-    *    downstream sink's commit — is documented, not hidden.
+    *    downstream sink's commit — is documented, not hidden. Staged
+    *    rows are not drained at stop: they wait on disk for the restart.
     *
     * Byte size in memory mode is rows × Catalyst per-type default width
     * (an estimate — the reference counts real arrow bytes); staged mode
@@ -290,7 +292,7 @@ object Processors {
     */
   final class BatchAccumulator(minRows: Long, maxBytes: Long = Long.MaxValue,
       maxIntervalMs: Long = Long.MaxValue, staging: Option[String] = None)
-      extends (DataFrame => DataFrame) with Engine.BatchIdAware {
+      extends (DataFrame => DataFrame) with Engine.BatchIdAware with Engine.RowHolder {
 
     private var pending: Option[DataFrame] = None
     private var pendingRows = 0L
@@ -306,6 +308,14 @@ object Processors {
           case _ => applyInMemory(batch)
         }
       }
+
+    /** The in-memory pending rows, cleared. A staged accumulator inside
+      * a streaming query holds nothing in memory, so it drains None. */
+    def drain(): Option[DataFrame] = synchronized {
+      val out = pending
+      pending = None; pendingRows = 0L; pendingBytes = 0L
+      out
+    }
 
     private def shouldFlush(rows: Long, bytes: Long, ageMs: Long): Boolean =
       rows >= minRows || bytes >= maxBytes || ageMs >= maxIntervalMs
@@ -443,11 +453,13 @@ object Processors {
     * engine only runs the pipeline on arrivals, so emission is
     * arrival-driven (the reference's timer fires during silence; here
     * the close is observed at the next arrival or at EOF) — the
-    * session CONTENTS are identical. [[flushPending]] is the EOF/flush
-    * hook ([[Engine.runBatch]] drains it so a one-shot input's single
-    * session is emitted, the reference's buffer.flush() at stream end).
+    * session CONTENTS are identical. The engine drains the still-open
+    * session at EOF (so a one-shot input's single session is emitted,
+    * the reference's buffer.flush() at stream end) and when the query
+    * stops ([[drain]]).
     */
-  final class SessionWindowBuffer(gapMs: Long) extends (DataFrame => DataFrame) {
+  final class SessionWindowBuffer(gapMs: Long) extends (DataFrame => DataFrame)
+      with Engine.RowHolder {
     require(gapMs > 0, s"session_window gap must be positive, got $gapMs")
     private var pending: Option[DataFrame] = None
     private var pendingDepth = 0
@@ -482,7 +494,7 @@ object Processors {
     }
     /** The still-open session, cleared — the reference's flush-then-read
       * at stream end. */
-    def flushPending(): Option[DataFrame] = synchronized {
+    def drain(): Option[DataFrame] = synchronized {
       val out = pending
       pending = None
       out

@@ -148,50 +148,22 @@ object Pulsar {
     }
   }
 
-  /** Parse the stringified nested-map form the YAML loader produces for
-    * object options (`{type=token, token=abc}`) into a flat map; flat
-    * string options pass through as Map("type" -> ..) when they aren't
-    * map-shaped. */
-  def nestedOption(s: String): Map[String, String] = {
-    val t = s.trim
-    if (t.startsWith("{") && t.endsWith("}")) {
-      // split on top-level commas only — option values may themselves be
-      // SQL expressions containing commas inside parens/brackets/quotes
-      val inner = t.substring(1, t.length - 1)
-      val parts = scala.collection.mutable.ArrayBuffer[String]()
-      val cur = new StringBuilder
-      var depth = 0; var quote = ' '
-      inner.foreach { c =>
-        if (quote != ' ') { if (c == quote) quote = ' '; cur.append(c) }
-        else c match {
-          case '\'' | '"' => quote = c; cur.append(c)
-          case '(' | '[' | '{' => depth += 1; cur.append(c)
-          case ')' | ']' | '}' => depth -= 1; cur.append(c)
-          case ',' if depth == 0 => parts += cur.toString; cur.clear()
-          case other => cur.append(other)
-        }
-      }
-      if (cur.nonEmpty) parts += cur.toString
-      parts.iterator.map(_.trim).filter(_.nonEmpty).map { kv =>
-        val i = kv.indexOf('=')
-        if (i < 0) kv -> "" else kv.substring(0, i).trim -> kv.substring(i + 1).trim
-      }.toMap
-    } else Map.empty
-  }
-
-  /** The reference output's `Expr<String>` topic: `{type=value,value=x}`
-    * stays a literal, `{type=expr, expr=...}` becomes the SQL
-    * expression; a bare string is a literal topic. */
-  def topicExprOf(raw: String): String = {
-    val m = nestedOption(raw)
+  /** The reference output's `Expr<String>` topic from the output's
+    * options: a `topic:` block (flattened to `topic.type` …) of
+    * `{type: value, value: x}` stays a literal, `{type: expr, expr: …}`
+    * becomes the SQL expression; a bare `topic:` string is a literal. */
+  def topicExprOf(o: Map[String, String]): String = {
+    def literal(v: String) = "'" + v.replace("'", "\\'") + "'"
+    val m = Config.nested(o, "topic")
     m.get("type") match {
       case Some("expr") => m.getOrElse("expr",
         throw new IllegalArgumentException("topic expr object without 'expr'"))
-      case Some("value") =>
-        val v = m.getOrElse("value",
-          throw new IllegalArgumentException("topic value object without 'value'"))
-        "'" + v.replace("'", "\\'") + "'"
-      case _ => "'" + raw.replace("'", "\\'") + "'"
+      case Some("value") => literal(m.getOrElse("value",
+        throw new IllegalArgumentException("topic value object without 'value'")))
+      case Some(other) => throw new IllegalArgumentException(
+        s"topic type must be value or expr, got '$other'")
+      case None => literal(o.getOrElse("topic",
+        throw new IllegalArgumentException("pulsar output needs a topic")))
     }
   }
 

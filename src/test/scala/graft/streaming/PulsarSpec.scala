@@ -206,7 +206,7 @@ class PulsarSpec extends AnyFunSuite {
         "service_url" -> broker.serviceUrl,
         "topic" -> "cfg-topic",
         "subscription_name" -> "cfg-sub",
-        "auth" -> "{type=token, token=secret-tok}")))
+        "auth.type" -> "token", "auth.token" -> "secret-tok")))
       assert(df.isStreaming)
       assert(df.columns.toSeq ==
         Seq(Codecs.ValueCol, "__meta_topic", "__meta_message_id"))
@@ -220,10 +220,33 @@ class PulsarSpec extends AnyFunSuite {
     val s = Engine.sinkFromConf(ComponentConf("pulsar", Map(
       "service_url" -> "pulsar://h:6650", "topic" -> "plain-topic")))
     assert(s.asInstanceOf[Pulsar.PulsarSink].topicExpr == "'plain-topic'")
-    assert(Pulsar.topicExprOf("{type=value, value=persistent://t/n/x}")
-      == "'persistent://t/n/x'")
-    assert(Pulsar.topicExprOf("{type=expr, expr=concat('a', b)}")
-      == "concat('a', b)")
+    assert(Pulsar.topicExprOf(Map("topic.type" -> "value",
+      "topic.value" -> "persistent://t/n/x")) == "'persistent://t/n/x'")
+    assert(Pulsar.topicExprOf(Map("topic.type" -> "expr",
+      "topic.expr" -> "concat('a', b)")) == "concat('a', b)")
+  }
+
+  test("a YAML pulsar output's auth and topic blocks reach the sink verbatim, " +
+      "commas and equals signs included") {
+    val conf = Config.fromYaml(
+      """streams:
+        |  - input:
+        |      type: generate
+        |      count: 1
+        |    output:
+        |      type: pulsar
+        |      service_url: pulsar://h:6650
+        |      topic:
+        |        type: expr
+        |        expr: "concat('t-', cast(id AS STRING))"
+        |      auth:
+        |        type: token
+        |        token: "a,b=c"
+        |""".stripMargin)
+    val s = Engine.sinkFromConf(conf.streams.head.output)
+      .asInstanceOf[Pulsar.PulsarSink]
+    assert(s.auth == Map("type" -> "token", "token" -> "a,b=c"))
+    assert(s.topicExpr == "concat('t-', cast(id AS STRING))")
   }
 
   test("config validation matches pulsar/common.rs rules") {

@@ -45,11 +45,17 @@ src/main/scala/graft/streaming/Main.scala"
 mainsHave="$(grep -rl 'def main(' src/main/scala | LC_ALL=C sort)"
 mains=""
 [ "$mainsHave" != "$mainsWant" ] && mains="[$(echo $mainsHave)]"
-if [ -n "$stray$views$jsonInfer$mains" ]; then
+# The engine names processor classes only in its builder tables: a
+# processor that holds rows across batches implements Engine.RowHolder,
+# and the engine drains every holder through that one trait.
+procMatch="$(grep -nE 'case \(?[A-Za-z_][A-Za-z0-9_]*: *Processors\.|isInstanceOf\[Processors\.' \
+  src/main/scala/graft/streaming/Engine.scala)"
+if [ -n "$stray$views$jsonInfer$mains$procMatch" ]; then
   echo "[gate] RED — source guard:" >&2
   [ -n "$stray" ] && echo "  createOrReplaceTempFunction outside functions/Registry.scala: $stray" >&2
   [ -n "$views" ] && echo "  createOrReplaceTempView under graft/streaming/: $views" >&2
   [ -n "$jsonInfer" ] && echo "  schema-less read.json( outside sql/GraftJson.scala: $jsonInfer" >&2
+  [ -n "$procMatch" ] && echo "  Engine.scala matches on a processor class (implement Engine.RowHolder instead): $procMatch" >&2
   [ -n "$mains" ] && echo "  the files declaring def main( are not exactly graft/{Bench,Verify,Explain,ScaleProbe}.scala and graft/streaming/Main.scala: $mains" >&2
   exit 1
 fi
