@@ -7,7 +7,11 @@ import scala.jdk.CollectionConverters._
   * (crates/arkflow-core/src/stream/mod.rs:1452-1465, config.rs:97-152).
   *
   * Components are (type, options) pairs resolved against the registries
-  * in [[Engine]]; options stay stringly-typed like the reference's YAML.
+  * in [[Engine]]. Options are one flat string map under one shape rule
+  * (`Config.flatten`): nested maps become dotted keys and lists indexed
+  * keys. Builders read a block back with `Config.nested`, a list with
+  * `Config.list` and an `Expr<String>` object with `Config.expr`, so no
+  * builder parses a YAML shape of its own.
   */
 /** `children` carries nested child components — the `inputs:` list of a
   * `multiple_inputs` input (input/multiple_inputs.rs:30-41). `name` is
@@ -116,6 +120,11 @@ object Config {
   private def anyMap(m: java.util.Map[_, _]): Map[String, Object] =
     m.asScala.map { case (k, v) => k.toString -> v.asInstanceOf[Object] }.toMap
 
+  /** The entries of a YAML list; empty when `v` is absent or no list. */
+  private def listOf(v: Option[Object]): Seq[Object] =
+    v.collect { case l: java.util.List[_] => l.asScala.toSeq.map(_.asInstanceOf[Object]) }
+      .getOrElse(Nil)
+
   /** Stream-level keys the parser understands; anything else is most
     * likely a TYPO (`bufer:`, `piplines:`) that YAML would otherwise
     * swallow silently — warn loudly (the reference's serde also ignores
@@ -137,85 +146,30 @@ object Config {
       // components), plus the sql processor's `temporary_list` — whose
       // entries are NOT typed components but NAME REFERENCES to
       // stream-level `temporary:` declarations (processor/sql.rs
-      // TemporaryConfig: name/table_name/key only, no `type:`), so they
-      // parse through the dedicated reference shape below
-      val children =
-        (cm.get("inputs") match {
-          case Some(l: java.util.List[_]) =>
-            l.asScala.toSeq.map(o => component(o.asInstanceOf[Object]))
-          case _ => Nil
-        }) ++
-        (cm.get("temporary_list") match {
-          case Some(l: java.util.List[_]) =>
-            l.asScala.toSeq.map(o => temporaryRef(o.asInstanceOf[Object]))
-          case _ => Nil
-        })
-      val opts = (cm - "type" - "inputs" - "temporary_list" - "name").flatMap {
-        // nested config blocks (the buffer's `join:` map, the file
-        // input's `store:`, the temporary's codec/mode/redis_type/key
-        // maps, the nats/pulsar `auth:`, pulsar's `retry_config:` and
-        // its Expr<String> `topic:`) flatten to dotted keys: join.query,
-        // mode.url, key.value, auth.token … ([[nested]] reads them back)
-        case (k, m: java.util.Map[_, _]) if Set("join", "store", "codec", "mode",
-            "redis_type", "key", "auth", "retry_config", "topic")(k) =>
-          dotted(k, anyMap(m))
-        // the memory input's preloaded `messages:` list
-        // (input/memory.rs) and the python processor's `python_path:`
-        // (processor/python.rs) flatten to indexed keys messages.0, … so
-        // each entry survives the flat option map verbatim
-        case (k, l: java.util.List[_]) if k == "messages" || k == "python_path" =>
-          l.asScala.zipWithIndex.map { case (v, i) =>
-            s"$k.$i" -> stringify(v.asInstanceOf[Object]) }.toMap
-        case (k, v) => Map(k -> stringify(v))
-      }
-      ComponentConf(kind, opts, children, cm.get("name").map(_.toString))
-    }
-    def dotted(prefix: String, m: Map[String, Object]): Map[String, String] =
-      m.flatMap {
-        case (k, v: java.util.Map[_, _]) => dotted(s"$prefix.$k", anyMap(v))
-        case (k, v) => Map(s"$prefix.$k" -> stringify(v))
-      }
-    // A `temporary_list` entry (processor/sql.rs TemporaryConfig):
-    // `name` references a stream-level temporary, `table_name` is the
-    // SQL view the fetched rows register under, `key` is the lookup key
-    // (a `{type: value, value: …}` constant or `{type: expr, expr: …}`
-    // batch expression). Parsed as kind `temporary_ref` with the key map
-    // flattened to dotted options — resolution happens in the sql
-    // builder against StreamConf.temporaries.
-    def temporaryRef(o: Object): ComponentConf = {
-      val cm = anyMap(o.asInstanceOf[java.util.Map[_, _]])
-      val name = cm.getOrElse("name", throw new IllegalArgumentException(
-        s"temporary_list entry without name: $cm")).toString
-      val opts = (cm - "name").flatMap {
-        case (k, m: java.util.Map[_, _]) => dotted(k, anyMap(m))
-        case (k, v) => Map(k -> stringify(v))
-      }
-      ComponentConf("temporary_ref", opts, Nil, Some(name))
-    }
-    val processors = m.get("pipeline") match {
-      case Some(p: java.util.Map[_, _]) =>
-        anyMap(p).get("processors") match {
-          case Some(l: java.util.List[_]) => l.asScala.toSeq.map(o => component(o.asInstanceOf[Object]))
-          case _ => Seq.empty
+      // TemporaryConfig: name/table_name/key only, no `type:`), parsed
+      // as kind `temporary_ref` and resolved by the sql builder against
+      // StreamConf.temporaries
+      val children = listOf(cm.get("inputs")).map(component) ++
+        listOf(cm.get("temporary_list")).map { o =>
+          val rm = anyMap(o.asInstanceOf[java.util.Map[_, _]])
+          val name = rm.getOrElse("name", throw new IllegalArgumentException(
+            s"temporary_list entry without name: $rm")).toString
+          ComponentConf("temporary_ref", flatten(rm - "name"), Nil, Some(name))
         }
-      case _ => Seq.empty
+      ComponentConf(kind, flatten(cm - "type" - "inputs" - "temporary_list" - "name"),
+        children, cm.get("name").map(_.toString))
     }
+    val processors = m.get("pipeline").collect { case p: java.util.Map[_, _] =>
+      listOf(anyMap(p).get("processors")).map(component) }.getOrElse(Nil)
     // stream-level `temporary:` declarations (core temporary/mod.rs
     // TemporaryConfig — typed components with a `name`), referenced by
     // sql processors' temporary_list entries
-    val temporaries = m.get("temporary") match {
-      case Some(l: java.util.List[_]) =>
-        l.asScala.toSeq.map(o => component(o.asInstanceOf[Object]))
-      case _ => Nil
-    }
+    val temporaries = listOf(m.get("temporary")).map(component)
     // `durability:` block (stream/mod.rs WalConfig) — flattened; consumed
     // by Engine.runStream (path → the Spark checkpointLocation, which IS
     // this engine's WAL)
-    val durability = m.get("durability") match {
-      case Some(d: java.util.Map[_, _]) => anyMap(d).map {
-        case (k, v) => k -> stringify(v) }
-      case _ => Map.empty[String, String]
-    }
+    val durability = m.get("durability").collect {
+      case d: java.util.Map[_, _] => flatten(anyMap(d)) }.getOrElse(Map.empty)
     StreamConf(
       input = component(m("input")),
       processors = processors,
@@ -227,13 +181,27 @@ object Config {
       temporaries = temporaries)
   }
 
-  /** Flatten nested YAML values to strings (scalars as-is, maps/lists as
-    * their YAML-ish toString) — component builders re-parse what they need. */
-  private def stringify(v: Object): String = v match {
-    case null => ""
-    case s: String => s
-    case other => other.toString
+  /** The one YAML shape rule: a component's options become one flat
+    * string map. A nested map becomes dotted keys (`auth: {token: t}` →
+    * `auth.token`), a list becomes indexed keys (`topics: [a, b]` →
+    * `topics.0`, `topics.1`; a list of maps → `points.0.name`), at any
+    * depth; a scalar keeps its key. Builders read the shapes back through
+    * [[nested]], [[list]] and [[expr]]. */
+  private def flatten(m: Map[String, Object]): Map[String, String] = {
+    def go(key: String, v: Object): Seq[(String, String)] = v match {
+      case n: java.util.Map[_, _] =>
+        anyMap(n).toSeq.flatMap { case (k, x) => go(s"$key.$k", x) }
+      case l: java.util.List[_] =>
+        l.asScala.toSeq.zipWithIndex.flatMap { case (x, i) =>
+          go(s"$key.$i", x.asInstanceOf[Object]) }
+      case scalar => Seq(key -> stringify(scalar))
+    }
+    m.toSeq.flatMap { case (k, v) => go(k, v) }.toMap
   }
+
+  /** A YAML scalar as its option string; null (`key:` with no value) is
+    * the empty string. */
+  private def stringify(v: Object): String = if (v == null) "" else v.toString
 
   /** A block [[parseStream]] flattened to dotted keys, read back:
     * `nested(o, "auth")` turns `auth.type`/`auth.token` into
@@ -241,4 +209,42 @@ object Config {
   def nested(o: Map[String, String], block: String): Map[String, String] =
     o.collect { case (k, v) if k.startsWith(block + ".") =>
       k.stripPrefix(block + ".") -> v }
+
+  /** The entries of a YAML list flattened to `key.0`, `key.1`, … in index
+    * order, verbatim; empty when `key` holds no list. For options whose
+    * entries may contain any separator (the memory input's `messages`, the
+    * python processor's `python_path`). */
+  def indexed(o: Map[String, String], key: String): Seq[String] =
+    nested(o, key).toSeq.collect { case (i, v) if i.nonEmpty && i.forall(_.isDigit) =>
+      i.toInt -> v }.sortBy(_._1).map(_._2)
+
+  /** A list-valued option, read in either YAML shape: a list
+    * (`topics: [a, b]`, entries in order, verbatim) or a scalar split on
+    * `sep` (`topics: "a, b"`), each entry trimmed and empty ones dropped.
+    * Empty when the key is absent. */
+  def list(o: Map[String, String], key: String, sep: String = ","): Seq[String] =
+    indexed(o, key) match {
+      case Seq() => o.get(key).toSeq.flatMap(_.split(sep)).map(_.trim).filter(_.nonEmpty)
+      case entries => entries
+    }
+
+  /** The reference's `Expr<String>` option (a routing target or lookup
+    * key): `{type: value, value: v}` decodes to `Left(v)`, a literal;
+    * `{type: expr, expr: e}` to `Right(e)`, a SQL expression over the
+    * batch. A bare scalar goes through `bare` — a literal unless the
+    * builder reads its bare form as an expression. None when the key is
+    * absent; an unknown `type` or a missing field throws. */
+  def expr(o: Map[String, String], key: String,
+      bare: String => Either[String, String] = Left(_)): Option[Either[String, String]] = {
+    val m = nested(o, key)
+    def field(f: String) = m.getOrElse(f,
+      throw new IllegalArgumentException(s"$key $f object without '$f'"))
+    if (m.isEmpty) o.get(key).map(bare)
+    else m.get("type") match {
+      case Some("value") => Some(Left(field("value")))
+      case Some("expr") => Some(Right(field("expr")))
+      case other => throw new IllegalArgumentException(
+        s"$key type must be value or expr, got '${other.getOrElse("")}'")
+    }
+  }
 }

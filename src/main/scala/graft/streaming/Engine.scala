@@ -94,37 +94,61 @@ object Engine {
     * idempotent path, `transactional_id` is accepted (config
     * compatibility with reference yaml) but never passed to the
     * producer — a WARN says so at config resolution.
+    *
+    * `brokers` is a list or a comma string. `topic` is a bare string or
+    * an `Expr<String>` object read through [[Config.expr]]: a value topic
+    * is the static `topic` option, an expr topic (like `topic_expr`)
+    * routes per row through [[kafkaRecords]]' `topic` column and sets no
+    * static topic.
     */
   def kafkaSinkOptions(o: Map[String, String]): Map[String, String] = {
-    // topic_expr (Expr<String> topic) routes per row via the projected
-    // `topic` column instead of a static topic option
-    val base = Map(
-      "kafka.bootstrap.servers" -> o.getOrElse("brokers", "localhost:9092")) ++
-      (if (o.contains("topic_expr")) Map.empty
-       else Map("topic" -> o("topic")))
-    val withAcks = o.get("acks").fold(base)(a => base + ("kafka.acks" -> a))
-    val withComp = o.get("compression").fold(withAcks)(t => withAcks + ("kafka.compression.type" -> t))
-    val withClient = o.get("client_id").fold(withComp)(i => withComp + ("kafka.client.id" -> i))
+    // a per-row topic routes via the projected `topic` column instead of
+    // a static topic option
+    val topic =
+      if (kafkaTopicExpr(o).nonEmpty) Map.empty
+      else Config.expr(o, "topic") match {
+        case Some(Left(t)) => Map("topic" -> t)
+        case _ => throw new IllegalArgumentException("kafka output needs a topic")
+      }
+    val producer = Seq("acks" -> "kafka.acks", "compression" -> "kafka.compression.type",
+      "client_id" -> "kafka.client.id").flatMap { case (k, p) => o.get(k).map(p -> _) }
+    val base = Map("kafka.bootstrap.servers" -> kafkaBrokers(o)) ++ topic ++ producer
     if (o.get("exactly_once").contains("true"))
-      withClient + ("kafka.enable.idempotence" -> "true") + ("kafka.acks" -> "all")
-    else withClient
+      base + ("kafka.enable.idempotence" -> "true") + ("kafka.acks" -> "all")
+    else base
   }
+
+  /** `brokers` (a list or a comma string) as one bootstrap string. */
+  private def kafkaBrokers(o: Map[String, String]): String =
+    Some(Config.list(o, "brokers")).filter(_.nonEmpty)
+      .fold("localhost:9092")(_.mkString(","))
+
+  /** The kafka output's per-row topic: `topic_expr`, or a `topic:
+    * {type: expr, expr: …}` object (the reference's `Expr<String>`). */
+  private def kafkaTopicExpr(o: Map[String, String]): Option[String] =
+    o.get("topic_expr").orElse(Config.expr(o, "topic").flatMap(_.toOption))
+
+  /** The kafka output's record key: a bare `key` or a `{type: expr}`
+    * object is a SQL expression over the row, a `{type: value}` object a
+    * constant. */
+  private def kafkaKey(o: Map[String, String]): Option[org.apache.spark.sql.Column] =
+    Config.expr(o, "key", bare = Right(_)).map(_.fold(lit(_), expr(_)))
 
   /** The kafka sink's record projection, split out so the shape is
     * unit-testable without a broker: key/value columns, the batch_id
-    * header, and — when `topic_expr` is configured (the reference's
-    * `Expr<String>` topic, output/kafka.rs:63-70) — a per-row `topic`
-    * column, which Spark's kafka writer routes by in place of the
-    * static `topic` option. */
+    * header, and — for a per-row topic (`topic_expr` or an expr-typed
+    * `Expr<String>` topic, output/kafka.rs:63-70) — a `topic` column,
+    * which Spark's kafka writer routes by in place of the static `topic`
+    * option. */
   def kafkaRecords(batch: DataFrame, options: Map[String, String],
       batchId: Long): DataFrame = {
     val valueField = options.getOrElse("value_field", Codecs.ValueCol)
     // topic/key expressions evaluate against the FULL input row, before
     // the projection narrows it to the producer-record shape
     val cols =
-      options.get("key").map(k => expr(k).cast("string").as("key")).toSeq ++
+      kafkaKey(options).map(_.cast("string").as("key")).toSeq ++
       Seq(col(valueField).cast("binary").as("value")) ++
-      options.get("topic_expr").map(t => expr(t).cast("string").as("topic")).toSeq
+      kafkaTopicExpr(options).map(t => expr(t).cast("string").as("topic")).toSeq
     batch.select(cols: _*)
       .withColumn("headers", array(struct(lit("batch_id").as("key"),
         lit(batchId.toString).cast("binary").as("value"))))
@@ -132,7 +156,9 @@ object Engine {
 
   /** kafka output (output/kafka.rs:44-90): key/value projection + producer
     * options; the micro-batch id rides as a record header so replayed
-    * batches are consumer-dedupable (see [[kafkaSinkOptions]]). */
+    * batches are consumer-dedupable (see [[kafkaSinkOptions]]). `topic`
+    * and `key` take the reference's `Expr<String>` objects as well as
+    * bare strings (a bare `key` is a SQL expression). */
   final case class KafkaSink(options: Map[String, String]) extends BatchSink {
     // ONE warning at sink construction (config resolution), not one per
     // micro-batch: the yaml user who set a transactional id must learn
@@ -144,10 +170,13 @@ object Engine {
         "for config compatibility but Spark's kafka writer cannot run broker-fenced " +
         "transactions - using idempotence + batch_id-header replay-dedupe instead " +
         "(set exactly_once: transactional for the hand-rolled transactional producer)")
+    // resolved at build, so a missing or malformed topic fails config
+    // resolution instead of every micro-batch
+    private val sinkOptions = kafkaSinkOptions(options)
     def write(batch: DataFrame, batchId: Long): Unit = {
       kafkaRecords(batch, options, batchId)
         .write.format("kafka")
-        .options(kafkaSinkOptions(options))
+        .options(sinkOptions)
         .option("includeHeaders", "true")
         .save()
     }
@@ -174,25 +203,22 @@ object Engine {
     // transactional client registers one static topic per transaction
     // (per-row topic_expr routing would need Metadata round-trips and
     // per-topic AddPartitionsToTxn bookkeeping it deliberately omits)
-    require(options.contains("topic"),
-      "kafka exactly_once: transactional requires a static 'topic'")
-    require(!options.contains("topic_expr"),
+    require(kafkaTopicExpr(options).isEmpty,
       "kafka exactly_once: transactional does not support 'topic_expr' " +
         "(per-row topics) - use the default idempotent path for expression routing")
+    private val staticTopic = Config.expr(options, "topic").flatMap(_.left.toOption)
+    require(staticTopic.nonEmpty,
+      "kafka exactly_once: transactional requires a static 'topic'")
     def write(batch: DataFrame, batchId: Long): Unit = {
-      val hostPort = options.getOrElse("brokers", "localhost:9092").split(",").head
+      val hostPort = Config.list(options, "brokers").headOption.getOrElse("localhost:9092")
       val host = hostPort.split(":").head
       val port = hostPort.split(":").lift(1).map(_.toInt).getOrElse(9092)
-      val topic = options("topic")
+      val topic = staticTopic.get
       val txnBase = options.getOrElse("transactional_id", "graft-txn")
       val numParts = options.getOrElse("num_partitions", "1").toInt
       val valueField = options.getOrElse("value_field", Codecs.ValueCol)
-      val keyed = options.get("key") match {
-        case Some(k) => batch.select(expr(k).cast("binary").as("key"),
-          col(valueField).cast("binary").as("value"))
-        case None => batch.select(lit(null).cast("binary").as("key"),
-          col(valueField).cast("binary").as("value"))
-      }
+      val keyed = batch.select(kafkaKey(options).getOrElse(lit(null)).cast("binary").as("key"),
+        col(valueField).cast("binary").as("value"))
       keyed.foreachPartition { (rows: Iterator[org.apache.spark.sql.Row]) =>
         if (rows.nonEmpty) {
           val pid = org.apache.spark.TaskContext.getPartitionId()
@@ -255,7 +281,12 @@ object Engine {
       c.options.get("username"), c.options.get("password"))),
     "mongodb" -> (c => Mongo.MongoSink(c.options)),
     "pulsar" -> (c => Pulsar.PulsarSink(c.options("service_url"),
-      c.options.getOrElse("topic_expr", Pulsar.topicExprOf(c.options)),
+      // a bare topic and a value topic are literals, an expr topic is SQL
+      c.options.getOrElse("topic_expr", Config.expr(c.options, "topic") match {
+        case Some(Left(t)) => "'" + t.replace("'", "\\'") + "'"
+        case Some(Right(e)) => e
+        case None => throw new IllegalArgumentException("pulsar output needs a topic")
+      }),
       c.options.getOrElse("value_field", Codecs.ValueCol),
       Config.nested(c.options, "auth"))))
 
@@ -313,15 +344,30 @@ object Engine {
     * each drained frame folds through the processors DOWNSTREAM of its
     * holder and what comes out is written under the next id of `ids`.
     * A holder downstream of another catches the drained rows and gives
-    * them up when the walk reaches it. Every holder's `written()` runs
-    * once the walk is done. */
+    * them up when the walk reaches it. A downstream processor that holds
+    * the rows back but is no holder (a sliding window short of a full
+    * window) keeps them, and what it still holds at close is dropped, as
+    * the reference drops a partial window; each such release logs one
+    * WARN. Every holder's `written()` runs once the walk is done. */
   private def drain(procs: Seq[Processors.BatchTransform], sink: BatchSink,
       ids: Iterator[Long]): Unit = {
+    def release(rest: Seq[Processors.BatchTransform], df: DataFrame): Unit =
+      rest match {
+        case Seq() => sink.write(df, ids.next())
+        case p +: tail => (fold(Seq(p), df), p) match {
+          case (Some(out), _) => release(tail, out)
+          case (None, _: RowHolder) => ()
+          case _ => System.err.println(
+            s"[engine] WARN drain: drained rows were held back by " +
+              s"${p.getClass.getSimpleName}, which the engine cannot drain; what it " +
+              "still holds at close is dropped (a partial sliding window is dropped " +
+              "at close, as the reference does)")
+        }
+      }
     procs.zipWithIndex.foreach {
       case (h: RowHolder, i) =>
-        Iterator.continually(h.drain()).takeWhile(_.nonEmpty).flatten.foreach { held =>
-          fold(procs.drop(i + 1), held).foreach(sink.write(_, ids.next()))
-        }
+        Iterator.continually(h.drain()).takeWhile(_.nonEmpty).flatten
+          .foreach(release(procs.drop(i + 1), _))
       case _ => ()
     }
     holders(procs).foreach(_.written())
@@ -446,13 +492,10 @@ object Engine {
     },
     "memory" -> { (spark, c) =>
       // input/memory.rs — a preloaded message list, EOF once drained
-      // (batch semantics). Parsed from the YAML `messages:` list via the
-      // indexed messages.N options; each message is one binary-envelope
-      // row, like the reference's MessageBatch-per-string.
-      val msgs = c.options.collect {
-        case (k, v) if k.startsWith("messages.") =>
-          (k.stripPrefix("messages.").toInt, v)
-      }.toSeq.sortBy(_._1).map(_._2)
+      // (batch semantics). The YAML `messages:` list only — a JSON message
+      // holds commas, so a scalar is never split; each message is one
+      // binary-envelope row, like the reference's MessageBatch-per-string.
+      val msgs = Config.indexed(c.options, "messages")
       require(msgs.nonEmpty, "memory input needs a non-empty `messages:` list")
       import spark.implicits._
       msgs.toDF("s").select(
@@ -528,7 +571,7 @@ object Engine {
       val in = new Mqtt.MqttInput(spark,
         c.options.getOrElse("host", "localhost"),
         c.options.getOrElse("port", "1883").toInt,
-        c.options.getOrElse("topics", c.options.getOrElse("topic_filter", "#")),
+        mqttTopicFilter(c.options),
         c.options.getOrElse("client_id", "graft-in"),
         c.options.getOrElse("qos", "0").toInt,
         c.options.get("username"), c.options.get("password"),
@@ -678,8 +721,7 @@ object Engine {
         o.get("path").foreach(p => require(p.startsWith("hdfs://"),
           s"hdfs store: path must be fully qualified (hdfs://…), got '$p' " +
             s"(the store url $url is the authority to use)"))
-        o.collect { case (k, v) if k.startsWith("store.ha_config.") =>
-          k.stripPrefix("store.ha_config.") -> v }
+        Config.nested(o, "store.ha_config")
       case Some("http") =>
         // round 13: the reference's object_store HTTP adapter
         // (input/file.rs:368-378) maps onto the engine's own read-only
@@ -730,12 +772,24 @@ object Engine {
     }
   }
 
+  /** The mqtt input's one topic filter: `topics` (a one-entry list or a
+    * string), else `topic_filter`, else `#`. The input subscribes to a
+    * single filter, so more than one entry fails at build. */
+  private def mqttTopicFilter(o: Map[String, String]): String =
+    Config.list(o, "topics") match {
+      case Seq() => o.getOrElse("topic_filter", "#")
+      case Seq(t) => t
+      case many => throw new IllegalArgumentException(
+        s"mqtt input subscribes to one topic filter, got ${many.size}: ${many.mkString(", ")}")
+    }
+
   /** Pure mapping of reference kafka input options (input/kafka.rs:36-58)
-    * to Spark kafka source options — unit-testable without a broker. */
+    * to Spark kafka source options — unit-testable without a broker.
+    * `brokers` and `topics` are lists or comma strings. */
   def kafkaOptions(o: Map[String, String]): Map[String, String] = {
     val base = Map(
-      "kafka.bootstrap.servers" -> o.getOrElse("brokers", "localhost:9092"),
-      "subscribe" -> o.getOrElse("topics", ""),
+      "kafka.bootstrap.servers" -> kafkaBrokers(o),
+      "subscribe" -> Config.list(o, "topics").mkString(","),
       "startingOffsets" ->
         (if (o.get("start_from_latest").contains("true")) "latest" else "earliest"))
     o.get("consumer_group").map(g => base + ("kafka.group.id" -> g)).getOrElse(base)
@@ -821,56 +875,55 @@ object Engine {
     * codec/schema_registry.rs:205-260; auth block `type: basic|bearer`
     * with username/password/token. */
   def inputCodec(c: ComponentConf): Seq[Processors.BatchTransform] = {
+    val block = Config.nested(c.options, "codec")
     // a codec: block whose `type` key is missing (or typo'd to another
     // key) must fail at BUILD — silently skipping the codec would flow
     // raw envelope bytes into processors undetected
-    if (c.options.keys.exists(_.startsWith("codec.")) &&
-        !c.options.contains("codec.type"))
+    if (block.nonEmpty && !block.contains("type"))
       throw new IllegalArgumentException(
         s"input `${c.kind}` has a codec: block with no `type` key " +
-          s"(found: ${c.options.keys.filter(_.startsWith("codec.")).toSeq.sorted.mkString(", ")})")
-    c.options.get("codec.type").toSeq.map {
-      case "json" => Processors.JsonToArrow()
-      case "debezium_json" =>
-        (df: DataFrame) => Codecs.DebeziumJsonCodec.decode(df)
-      case "protobuf" =>
-        // same schema sources as the protobuf_to_arrow processor
-        // (descriptor_path + message_type, or the inline fields spec),
-        // nested under the codec: block
-        val codecOpts = c.options.collect {
-          case (k, v) if k.startsWith("codec.") => k.stripPrefix("codec.") -> v
-        }
-        Processors.fromConf(Seq(ComponentConf("protobuf_to_arrow", codecOpts))).head
-      case "schema_registry" =>
-        val url = c.options.getOrElse("codec.registry_url",
-          throw new IllegalArgumentException(
-            "schema_registry codec needs `registry_url`"))
-        val auth = c.options.get("codec.auth.type")
-        auth.foreach(t => require(t == "basic" || t == "bearer",
-          s"Unsupported auth type: $t"))
-        val bearer = if (auth.contains("bearer"))
-          Some(c.options.getOrElse("codec.auth.token",
-            throw new IllegalArgumentException(
-              "schema_registry codec: auth type bearer needs `token`")))
-          else None
-        val basic = if (auth.contains("basic"))
-          Some((c.options.getOrElse("codec.auth.username", ""),
-            c.options.getOrElse("codec.auth.password", ""))) else None
-        // one cached resolver per stream — each schema id fetches once,
-        // like the reference's in-process cache
-        val resolver = new SchemaRegistry.CachingResolver(
-          new SchemaRegistry.RestResolver(url, bearer, basic,
-            c.options.get("codec.message_type")))
-        (df: DataFrame) => SchemaRegistry.decodeBatch(df, resolver)
-      case other => throw new IllegalArgumentException(
-        s"unknown input codec: $other (known: ${codecKinds.mkString(", ")})")
+          s"(found: ${block.keys.map("codec." + _).toSeq.sorted.mkString(", ")})")
+    block.get("type").toSeq.map { t =>
+      codecBuilders.getOrElse(t, throw new IllegalArgumentException(
+        s"unknown input codec: $t (known: ${codecKinds.mkString(", ")})"))(
+        ComponentConf(t, block - "type"))
     }
   }
 
-  /** Input-codec kinds `inputCodec` dispatches on — kept beside the
-    * match so the `/components` registry can't drift from it. */
-  val codecKinds: Seq[String] =
-    Seq("json", "debezium_json", "protobuf", "schema_registry")
+  /** Input-codec dispatch TABLE — kind → builder over the `codec:`
+    * block's own options; the same single-source-of-truth contract as
+    * [[inputBuilders]] (the `/components` registry lists its keys). */
+  val codecBuilders: Map[String, ComponentConf => Processors.BatchTransform] = Map(
+    "json" -> (_ => Processors.JsonToArrow()),
+    "debezium_json" -> (_ => (df: DataFrame) => Codecs.DebeziumJsonCodec.decode(df)),
+    // same schema sources as the protobuf_to_arrow processor
+    // (descriptor_path + message_type, or the inline fields spec)
+    "protobuf" -> (c => Processors.builders("protobuf_to_arrow")(c)),
+    "schema_registry" -> { c =>
+      val url = c.options.getOrElse("registry_url",
+        throw new IllegalArgumentException(
+          "schema_registry codec needs `registry_url`"))
+      val auth = c.options.get("auth.type")
+      auth.foreach(t => require(t == "basic" || t == "bearer",
+        s"Unsupported auth type: $t"))
+      val bearer = if (auth.contains("bearer"))
+        Some(c.options.getOrElse("auth.token",
+          throw new IllegalArgumentException(
+            "schema_registry codec: auth type bearer needs `token`")))
+        else None
+      val basic = if (auth.contains("basic"))
+        Some((c.options.getOrElse("auth.username", ""),
+          c.options.getOrElse("auth.password", ""))) else None
+      // one cached resolver per stream — each schema id fetches once,
+      // like the reference's in-process cache
+      val resolver = new SchemaRegistry.CachingResolver(
+        new SchemaRegistry.RestResolver(url, bearer, basic,
+          c.options.get("message_type")))
+      (df: DataFrame) => SchemaRegistry.decodeBatch(df, resolver)
+    })
+
+  /** Input-codec kinds, derived from [[codecBuilders]]. */
+  val codecKinds: Seq[String] = codecBuilders.keys.toSeq.sorted
 
   /** Every registered component name by kind — the control plane's
     * `/components` + `/schema` source (reference lib.rs:214-216; its
@@ -881,7 +934,7 @@ object Engine {
     "processor" -> Processors.builders.keys.toSeq.sorted,
     "output" -> sinkBuilders.keys.toSeq.sorted,
     "buffer" -> bufferBuilders.keys.toSeq.sorted,
-    "codec" -> codecKinds.sorted)
+    "codec" -> codecKinds)
 
   def run(spark: SparkSession, conf: EngineConf): Seq[StreamingQuery] =
     Config.streamIds(conf).zip(conf.streams).flatMap { case (id, s) =>

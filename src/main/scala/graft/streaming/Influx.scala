@@ -51,14 +51,14 @@ object Influx {
       lit(" "), fieldPart, timePart).as("line"))
   }
 
-  /** options: url, org, bucket, token, measurement, tags (csv), fields
-    * (csv), time_col?, rows_per_request?. */
+  /** options: url, org, bucket, token, measurement, tags and fields (each
+    * a list or a comma string), time_col?, rows_per_request?. */
   final case class InfluxSink(options: Map[String, String]) extends Engine.BatchSink {
+    private val tags = Config.list(options, "tags")
+    private val fields = Config.list(options, "fields")
+    require(fields.nonEmpty, "influxdb output needs a non-empty `fields` list")
     def write(batch: DataFrame, batchId: Long): Unit = {
-      val lines = lineProtocol(batch,
-        options("measurement"),
-        options.get("tags").toSeq.flatMap(_.split(",").map(_.trim).filter(_.nonEmpty)),
-        options("fields").split(",").map(_.trim).filter(_.nonEmpty).toSeq,
+      val lines = lineProtocol(batch, options("measurement"), tags, fields,
         options.get("time_col"))
       val endpoint = s"${options("url")}/api/v2/write?org=${options("org")}" +
         s"&bucket=${options("bucket")}&precision=ns"

@@ -32,7 +32,7 @@ object Jdbc {
   def read(spark: SparkSession, o: Map[String, String]): DataFrame = {
     val r = spark.read.format("jdbc").option("url", o("url"))
     o.get("driver").foreach(d => r.option("driver", d))
-    o.filter(_._1.startsWith("jdbc.")).foreach { case (k, v) => r.option(k.stripPrefix("jdbc."), v) }
+    r.options(Config.nested(o, "jdbc"))
     o.get("partition_column") match {
       case Some(pc) =>
         r.option("dbtable", s"(${o("select_sql")}) graft_sql_input")
@@ -92,10 +92,13 @@ object Jdbc {
       batchKeyCol: String, remoteKeyCol: String,
       maxKeys: Int = 10000): DataFrame => DataFrame = { batch =>
     // batchKeyCol may be any SQL expression over the batch (the
-    // reference's key expression, processor/sql.rs:148-183)
-    val projected = batch.select(expr(batchKeyCol)).distinct().limit(maxKeys + 1)
+    // reference's key expression, processor/sql.rs:148-183). Nulls filter
+    // BEFORE distinct/limit: filtered after, a null could take the
+    // maxKeys+1 overflow slot and a real key would miss the IN-list
+    val projected = batch.select(expr(batchKeyCol).as("k"))
+      .where(col("k").isNotNull).distinct().limit(maxKeys + 1)
     val keyType = projected.schema.head.dataType
-    val keys = projected.collect().map(_.get(0)).filter(_ != null)
+    val keys = projected.collect().map(_.get(0))
     val sql = o("select_sql")
     val filtered =
       if (keys.length > maxKeys) sql

@@ -18,15 +18,15 @@ object Modbus {
   /** One configured point: read `count` holding registers at `addr`. */
   final case class Point(name: String, addr: Int, count: Int)
 
-  /** "name:addr:count" csv → points. */
-  def parsePoints(spec: String): Seq[Point] =
-    spec.split(",").map(_.trim).filter(_.nonEmpty).map { p =>
+  /** "name:addr[:count]" entries → points. */
+  def parsePoints(entries: Seq[String]): Seq[Point] =
+    entries.map { p =>
       p.split(":") match {
         case Array(n, a, c) => Point(n, a.toInt, c.toInt)
         case Array(n, a) => Point(n, a.toInt, 1)
         case _ => throw new IllegalArgumentException(s"bad modbus point: $p")
       }
-    }.toSeq
+    }
 
   final class Conn(host: String, port: Int, unitId: Int = 1) extends AutoCloseable {
     private val socket = new java.net.Socket(host, port)
@@ -76,7 +76,8 @@ object Modbus {
     * point (count=1 → the value; count>1 → an array column), plus a poll
     * timestamp — the reference's columns-per-point layout. */
   def read(spark: SparkSession, options: Map[String, String]): DataFrame = {
-    val points = parsePoints(options("points"))
+    val points = parsePoints(Config.list(options, "points"))
+    require(points.nonEmpty, "modbus input needs a non-empty `points` list")
     val conn = new Conn(options("host"), options.getOrElse("port", "502").toInt,
       options.getOrElse("unit_id", "1").toInt)
     val values =

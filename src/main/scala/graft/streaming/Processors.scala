@@ -556,6 +556,7 @@ object Processors {
     * the capability is "safe per-row transform DSL"; covered by a list of
     * SQL expressions applied as a projection. */
   final case class ExprProcessor(exprs: Seq[String]) extends (DataFrame => DataFrame) {
+    require(exprs.nonEmpty, "expr processor needs a non-empty `exprs` list")
     def apply(batch: DataFrame): DataFrame = batch.selectExpr(exprs: _*)
   }
 
@@ -1988,9 +1989,7 @@ object Processors {
       // `schema` (DDL, e.g. "sensor STRING, value BIGINT") declares the
       // decode types — required when the stream feeds a schema-sensitive
       // sink so empty and non-empty micro-batches agree (JsonCodec doc)
-      JsonToArrow(
-        c.options.get("fields_to_include").toSeq
-          .flatMap(_.split(",").map(_.trim).filter(_.nonEmpty)),
+      JsonToArrow(Config.list(c.options, "fields_to_include"),
         c.options.get("schema")
           .map(org.apache.spark.sql.types.StructType.fromDDL))
     },
@@ -2015,8 +2014,7 @@ object Processors {
     "drift" -> { c =>
       // split on the LAST colon so keys may contain ':' (URLs); a
       // malformed entry gets a descriptive error, not a MatchError
-      val baseline = c.options("baseline").split(",").map { kv =>
-        val s = kv.trim
+      val baseline = Config.list(c.options, "baseline").map { s =>
         val cut = s.lastIndexOf(':')
         require(cut > 0 && cut < s.length - 1,
           s"drift baseline entry '$s' must be '<key>:<weight>'")
@@ -2034,19 +2032,17 @@ object Processors {
     "schema_guard" -> (c => new SchemaGuard(c.options.getOrElse("mode", "conform"),
       c.options.get("schema").map(
         org.apache.spark.sql.types.StructType.fromDDL))),
-    "expr" -> (c => ExprProcessor(c.options("exprs").split(";").map(_.trim).toSeq)),
+    "expr" -> (c => ExprProcessor(Config.list(c.options, "exprs", sep = ";"))),
     // reference config (processor/python.rs): script = full module
     // source, function = callable name, module (default __main__),
-    // python_path list (flattened to python_path.N). The body-only
-    // shorthand (no `function:`) is the engine's extension.
+    // python_path list (list form only). The body-only shorthand (no
+    // `function:`) is the engine's extension.
     "python" -> (c => PythonProcessor(
       c.options.getOrElse("script", ""),
       c.options.get("output_schema"),
       c.options.get("function"),
       c.options.get("module"),
-      c.options.keys.filter(_.startsWith("python_path."))
-        .toSeq.sortBy(_.stripPrefix("python_path.").toInt)
-        .map(c.options))),
+      Config.indexed(c.options, "python_path"))),
     // the reference's vrl processor takes its program under `statement`
     // (processor/vrl.rs config; examples/vrl_example.yaml)
     "vrl" -> (c => RemapProcessor(
@@ -2132,9 +2128,9 @@ object Processors {
   /** Proto message schema from processor options: `descriptor_path` +
     * `message_type` resolve through a compiled FileDescriptorSet
     * ([[ProtoDescriptor]] — the reference's proto-file route); `fields`
-    * takes the inline `name:number:type[,...]` spec. */
+    * takes inline `name:number:type` entries, a list or a comma string. */
   private def protoFields(options: Map[String, String]): Seq[ProtoField] =
-    (options.get("descriptor_path"), options.get("fields")) match {
+    (options.get("descriptor_path"), Config.list(options, "fields")) match {
       case (Some(path), _) =>
         val all = ProtoDescriptor.parse(
           java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path)))
@@ -2143,8 +2139,8 @@ object Processors {
             "descriptor_path requires message_type"))
         all.getOrElse(msg, throw new IllegalArgumentException(
           s"message $msg not found in descriptor; it has: ${all.keys.toSeq.sorted.mkString(", ")}"))
-      case (None, Some(spec)) =>
-        spec.split(",").map(_.trim).filter(_.nonEmpty).toSeq.map { s =>
+      case (None, specs) if specs.nonEmpty =>
+        specs.map { s =>
           s.split(":") match {
             case Array(name, number, tpe) =>
               ProtoField(number.trim.toInt, name.trim, tpe.trim)

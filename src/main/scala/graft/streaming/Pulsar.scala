@@ -148,25 +148,6 @@ object Pulsar {
     }
   }
 
-  /** The reference output's `Expr<String>` topic from the output's
-    * options: a `topic:` block (flattened to `topic.type` …) of
-    * `{type: value, value: x}` stays a literal, `{type: expr, expr: …}`
-    * becomes the SQL expression; a bare `topic:` string is a literal. */
-  def topicExprOf(o: Map[String, String]): String = {
-    def literal(v: String) = "'" + v.replace("'", "\\'") + "'"
-    val m = Config.nested(o, "topic")
-    m.get("type") match {
-      case Some("expr") => m.getOrElse("expr",
-        throw new IllegalArgumentException("topic expr object without 'expr'"))
-      case Some("value") => literal(m.getOrElse("value",
-        throw new IllegalArgumentException("topic value object without 'value'")))
-      case Some(other) => throw new IllegalArgumentException(
-        s"topic type must be value or expr, got '$other'")
-      case None => literal(o.getOrElse("topic",
-        throw new IllegalArgumentException("pulsar output needs a topic")))
-    }
-  }
-
   // ---- wire client ----
 
   /** Blocking protocol connection. Single-threaded use per instance

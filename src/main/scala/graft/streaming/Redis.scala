@@ -257,19 +257,15 @@ object Redis {
     if (decoded.schema.isEmpty) spark.emptyDataFrame else decoded
   }
 
-  /** Key extraction for a temporary_ref (processor/sql.rs `Expr<String>`):
-    * `value` is a constant, `expr` evaluates over the batch per
-    * micro-batch (distinct, maxKeys-bounded). */
+  /** Key extraction for a temporary_ref (processor/sql.rs `Expr<String>`
+    * key, read through [[Config.expr]]): a value is a constant, an expr
+    * evaluates over the batch per micro-batch (distinct, maxKeys-bounded). */
   def temporaryKeys(opts: Map[String, String],
       maxKeys: Int = 100000): DataFrame => Seq[String] =
-    opts.getOrElse("key.type", "value") match {
-      case "value" =>
-        val k = opts.getOrElse("key.value", throw new IllegalArgumentException(
-          "temporary_list key.type=value needs key.value"))
-        _ => Seq(k)
-      case "expr" =>
-        val e = opts.getOrElse("key.expr", throw new IllegalArgumentException(
-          "temporary_list key.type=expr needs key.expr"))
+    Config.expr(opts, "key") match {
+      case None => throw new IllegalArgumentException("temporary_list entry needs a key")
+      case Some(Left(k)) => _ => Seq(k)
+      case Some(Right(e)) =>
         batch => {
           // nulls filter BEFORE distinct/limit: a post-collect filter let
           // a null occupy the maxKeys+1 overflow slot, so a batch with
@@ -282,8 +278,6 @@ object Redis {
               "raise maxKeys or pre-aggregate the key expression")
           ks
         }
-      case other => throw new IllegalArgumentException(
-        s"temporary_list key.type '$other' (want value | expr)")
     }
 
   /** redis input (input/redis.rs poll modes): drain a list via LPOP or

@@ -545,6 +545,36 @@ class BrokerSpec extends AnyFunSuite {
     } finally broker.stop()
   }
 
+  test("a YAML mqtt topics list of one entry subscribes to that filter; " +
+      "more than one fails at build") {
+    val broker = new FakeMqtt
+    def input(topics: String) = Config.fromYaml(
+      s"""streams:
+         |  - input:
+         |      type: mqtt
+         |      host: 127.0.0.1
+         |      port: ${broker.port}
+         |      client_id: list-in
+         |      topics: $topics
+         |    output: { type: drop }
+         |""".stripMargin).streams.head.input
+    try {
+      val e = intercept[IllegalArgumentException](
+        Engine.inputFromConf(spark, input("[x/y, x/z]")))
+      assert(e.getMessage.contains("one topic filter"))
+      val in = Engine.inputFromConf(spark, input("[x/y]"))
+      Mqtt.MqttSink("127.0.0.1", broker.port, "'x/y'", "msg")
+        .write(Seq("""{"v": 7}""").toDF("msg"), 0L)
+      val deadline = System.nanoTime() + 10e9.toLong
+      while (broker.published.size < 1 && System.nanoTime() < deadline) Thread.sleep(20)
+      Thread.sleep(300)
+      val sink = new Engine.MemorySink
+      val q = Engine.start(in, Seq(Processors.JsonToArrow(Seq("v"))), sink)
+      q.processAllAvailable(); q.stop()
+      assert(sink.rows.map(_.getLong(0)) == Seq(7L))
+    } finally { Engine.closeConfigInputs(); broker.stop() }
+  }
+
   // ---- fake Modbus device ----
   private final class FakeModbus(registers: Map[Int, Int]) {
     private val server = new java.net.ServerSocket(0, 4,

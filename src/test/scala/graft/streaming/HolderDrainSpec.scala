@@ -55,6 +55,28 @@ class HolderDrainSpec extends AnyFunSuite with graft.TempDirs {
     assert(err.rows.isEmpty, s"diverted: ${err.rows}")
   }
 
+  test("a rate_cap ahead of a sliding window drains at EOF into full windows " +
+      "only: the partial window is dropped, nothing throws or is diverted") {
+    val procs = Processors.fromConf(Seq(ComponentConf("rate_cap", Map("max_rows" -> "2")))) ++
+      Engine.bufferProcessors(Some(ComponentConf("sliding_window",
+        Map("window_size" -> "2", "slide_size" -> "2"))))
+    val sink = new Engine.MemorySink
+    val err = new Engine.MemorySink
+    // 5 rows: rate_cap releases 2, 2 and 1 rows; the first two releases
+    // fill one window of 2 batches, the last stays a partial window
+    val stderr = new java.io.ByteArrayOutputStream
+    val saved = System.err
+    System.setErr(new java.io.PrintStream(stderr, true))
+    try Engine.runBatch((1 to 5).toDF("x"), procs, sink, Some(err))
+    finally System.setErr(saved)
+    assert(err.rows.isEmpty, s"diverted: ${err.rows}")
+    assert(sink.batches.values.map(_.size).toSeq == Seq(4),
+      s"writes: ${sink.batches.map { case (k, v) => k -> v.size }}")
+    assert(sink.rows.map(_.getInt(0)).sorted == (1 to 4))
+    assert(stderr.toString.linesIterator.count(_.startsWith("[engine] WARN drain")) == 1,
+      stderr.toString)
+  }
+
   test("stopping a stream drains the rate_cap carry into the sink under " +
       "negative ids, at most max_rows per id") {
     implicit val sq = spark.sqlContext

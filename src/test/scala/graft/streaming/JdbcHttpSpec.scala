@@ -102,6 +102,29 @@ class JdbcHttpSpec extends AnyFunSuite with graft.TempDirs {
       Set(("temp_1", 10L, "room_a"), ("temp_1", 5L, "room_a"), ("temp_2", 15L, "room_b")))
   }
 
+  test("jdbc lookup never drops a key when a null shares the batch: nulls " +
+      "cannot take the maxKeys+1 overflow slot") {
+    val url = derbyUrl()
+    val keys = (0 until 24).map(i => s"k$i")
+    Jdbc.execute(url, """CREATE TABLE rooms ("sensor" VARCHAR(32), "room" VARCHAR(32))""",
+      s"INSERT INTO rooms VALUES ${keys.map(k => s"('$k', 'r_$k')").mkString(", ")}")
+    val provider = Jdbc.lookupProvider(spark,
+      Map("url" -> url,
+        "select_sql" -> """SELECT "sensor" AS skey, "room" AS room FROM rooms"""),
+      batchKeyCol = "sensor", remoteKeyCol = "skey", maxKeys = 2)
+    // without AQE the distinct keeps its shuffle partitions, as it does on
+    // a batch too large to coalesce, so the null's partition can come
+    // ahead of a key's and reach the limit
+    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try for (parts <- Seq(1, 4); batchKeys <- keys.grouped(3)) {
+      val batch = (None +: batchKeys.map(Option(_))).toDF("sensor").repartition(parts)
+      val fetched = provider(batch).collect().map(_.getString(0)).toSet
+      assert(batchKeys.toSet.subsetOf(fetched),
+        s"$parts partition(s), keys $batchKeys: fetched only ${fetched.toSeq.sorted}")
+    } finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
+  }
+
   test("jdbc lookup renders non-string key types as typed SQL literals (DATE keys)") {
     val url = derbyUrl()
     Jdbc.execute(url,

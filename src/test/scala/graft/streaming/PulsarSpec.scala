@@ -220,9 +220,15 @@ class PulsarSpec extends AnyFunSuite {
     val s = Engine.sinkFromConf(ComponentConf("pulsar", Map(
       "service_url" -> "pulsar://h:6650", "topic" -> "plain-topic")))
     assert(s.asInstanceOf[Pulsar.PulsarSink].topicExpr == "'plain-topic'")
-    assert(Pulsar.topicExprOf(Map("topic.type" -> "value",
+    assert(Config.expr(Map("topic.type" -> "value",
+      "topic.value" -> "persistent://t/n/x"), "topic") == Some(Left("persistent://t/n/x")))
+    assert(Config.expr(Map("topic.type" -> "expr",
+      "topic.expr" -> "concat('a', b)"), "topic") == Some(Right("concat('a', b)")))
+    def sinkTopic(o: Map[String, String]) = Engine.sinkFromConf(ComponentConf("pulsar",
+      o + ("service_url" -> "pulsar://h:6650"))).asInstanceOf[Pulsar.PulsarSink].topicExpr
+    assert(sinkTopic(Map("topic.type" -> "value",
       "topic.value" -> "persistent://t/n/x")) == "'persistent://t/n/x'")
-    assert(Pulsar.topicExprOf(Map("topic.type" -> "expr",
+    assert(sinkTopic(Map("topic.type" -> "expr",
       "topic.expr" -> "concat('a', b)")) == "concat('a', b)")
   }
 

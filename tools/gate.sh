@@ -50,12 +50,18 @@ mains=""
 # and the engine drains every holder through that one trait.
 procMatch="$(grep -nE 'case \(?[A-Za-z_][A-Za-z0-9_]*: *Processors\.|isInstanceOf\[Processors\.' \
   src/main/scala/graft/streaming/Engine.scala)"
-if [ -n "$stray$views$jsonInfer$mains$procMatch" ]; then
+# One YAML shape rule: list-valued options are read through Config.list,
+# so no other streaming file splits an option on `,` or `;` (Pulsar keeps
+# its one split of a service URL's host list).
+splits="$(grep -rnE 'split\("[,;]"\)' src/main/scala/graft/streaming |
+  grep -vE '^src/main/scala/graft/streaming/(Config|Pulsar)\.scala:')"
+if [ -n "$stray$views$jsonInfer$mains$procMatch$splits" ]; then
   echo "[gate] RED — source guard:" >&2
   [ -n "$stray" ] && echo "  createOrReplaceTempFunction outside functions/Registry.scala: $stray" >&2
   [ -n "$views" ] && echo "  createOrReplaceTempView under graft/streaming/: $views" >&2
   [ -n "$jsonInfer" ] && echo "  schema-less read.json( outside sql/GraftJson.scala: $jsonInfer" >&2
   [ -n "$procMatch" ] && echo "  Engine.scala matches on a processor class (implement Engine.RowHolder instead): $procMatch" >&2
+  [ -n "$splits" ] && echo "  split(\",\") or split(\";\") under graft/streaming/ outside Config.scala and Pulsar.scala (read lists through Config.list): $splits" >&2
   [ -n "$mains" ] && echo "  the files declaring def main( are not exactly graft/{Bench,Verify,Explain,ScaleProbe}.scala and graft/streaming/Main.scala: $mains" >&2
   exit 1
 fi
