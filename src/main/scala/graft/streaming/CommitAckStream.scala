@@ -6,9 +6,10 @@ import org.apache.spark.sql.execution.streaming.runtime.LongOffset
 
 /** A [[PushStream]] that DEFERS broker acks to checkpoint commit — the
   * delivery-guarantee core shared by the Pulsar and NATS JetStream
-  * inputs: the reader thread [[enqueue]]s each message together with its
-  * ack token WITHOUT acking, and `ackOne` runs for a message only after
-  * Spark has committed the micro-batch holding it. A driver crash
+  * inputs (each an [[AckingPushInput]]): the reader thread
+  * [[enqueue]]s each message together with its ack action WITHOUT
+  * acking, and the action runs only after Spark has committed the
+  * micro-batch holding the message. A driver crash
   * between enqueue and commit therefore REDELIVERS from the broker
   * cursor instead of losing acked messages — at-least-once across
   * restarts, where ack-on-read (the reference's behavior and this
@@ -36,19 +37,19 @@ import org.apache.spark.sql.execution.streaming.runtime.LongOffset
   * Ack failures (connection closed mid-shutdown) are swallowed: the
   * broker redelivers the unacked message, which at-least-once permits.
   */
-final class CommitAckStream[A: Encoder, T](spark: SparkSession,
-    ackOne: T => Unit)
-  extends PushStream[A](spark) {
+final class CommitAckStream[A: Encoder](spark: SparkSession,
+    onStop: () => Unit = () => ())
+  extends PushStream[A](spark, onStop) {
 
   private val lock = new Object
-  private val unacked = new scala.collection.mutable.Queue[T]()
+  private val unacked = new scala.collection.mutable.Queue[() => Unit]()
   private var ackedThrough = 0L
 
-  /** Append one message and its ack token under ONE lock, so the stream
-    * offset always counts exactly the tokens queued. */
-  def enqueue(row: A, token: T): Unit = lock.synchronized {
+  /** Append one message and its ack action under ONE lock, so the
+    * stream offset always counts exactly the actions queued. */
+  def enqueue(row: A, ack: () => Unit): Unit = lock.synchronized {
     addData(row)
-    unacked.enqueue(token)
+    unacked.enqueue(ack)
   }
 
   override def commit(end: Offset): Unit = {
@@ -59,8 +60,8 @@ final class CommitAckStream[A: Encoder, T](spark: SparkSession,
     })
     lock.synchronized {
       while (ackedThrough < committedMessages && unacked.nonEmpty) {
-        val token = unacked.dequeue()
-        try ackOne(token)
+        val ack = unacked.dequeue()
+        try ack()
         catch { case _: java.io.IOException => () } // closed: broker redelivers
         ackedThrough += 1
       }

@@ -1,8 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.types.BinaryType
 
 /** The stream engine (SURVEY.md §3.1): wires
   * `input → [buffer] → pipeline → output (+ error_output)` onto
@@ -20,6 +21,30 @@ object Engine {
     * "one write_batch = one transaction", core output/mod.rs:41-47). */
   trait BatchSink {
     def write(batch: DataFrame, batchId: Long): Unit
+  }
+
+  /** Publishes each row of `batch` as a message: the key is `keyExpr`
+    * cast to a string, the payload is `valueExpr` as bytes. A binary value
+    * goes out as it is, any other value as the UTF-8 bytes of its text
+    * (ANSI mode casts no number, boolean or date to binary, and without
+    * it an integer would go out as raw big-endian bytes). Executor-side:
+    * each non-empty partition opens one `connect()`, sends every row
+    * through `send(conn)` and closes the connection. */
+  def publish[C <: AutoCloseable](batch: DataFrame, keyExpr: String,
+      valueExpr: String)(connect: () => C)(
+      send: C => (String, Array[Byte]) => Unit): Unit = {
+    val kv = batch.selectExpr(s"CAST(($keyExpr) AS STRING) AS k",
+      s"($valueExpr) AS v")
+    (if (kv.schema("v").dataType == BinaryType) kv
+     else kv.selectExpr("k", "CAST(CAST(v AS STRING) AS BINARY) AS v"))
+      .foreachPartition { (rows: Iterator[Row]) =>
+        if (rows.nonEmpty) {
+          val conn = connect()
+          val sendOne = send(conn)
+          try rows.foreach(r => sendOne(r.getString(0), r.getAs[Array[Byte]](1)))
+          finally conn.close()
+        }
+      }
   }
 
   /** Processors that need the micro-batch id (e.g. idempotent cross-batch
@@ -560,15 +585,14 @@ object Engine {
       // input/http.rs client mode — one endpoint poll, EOF semantics
       // (server mode is the programmatic HttpInput class).
       HttpPoll.read(spark, c.options)
-    // Connection-holding streaming inputs: the client object outlives
-    // this call (its reader thread feeds the stream), so its handle
-    // registers with [[closeConfigInputs]] for shutdown — config-run
-    // streams have no programmatic handle to stop() themselves.
     },
+    // Connection-holding streaming inputs are [[PushInput]]s: each closes
+    // when the query reading it stops, and [[closeConfigInputs]] closes
+    // those that were built but never started.
     "mqtt" -> { (spark, c) =>
       // input/mqtt.rs:35-57 full option surface: qos 0/1/2,
       // clean_session, keep_alive (seconds), username/password
-      val in = new Mqtt.MqttInput(spark,
+      new Mqtt.MqttInput(spark,
         c.options.getOrElse("host", "localhost"),
         c.options.getOrElse("port", "1883").toInt,
         mqttTopicFilter(c.options),
@@ -576,9 +600,7 @@ object Engine {
         c.options.getOrElse("qos", "0").toInt,
         c.options.get("username"), c.options.get("password"),
         cleanSession = !c.options.get("clean_session").contains("false"),
-        keepAliveSecs = c.options.getOrElse("keep_alive", "60").toInt)
-      configInputs.add(() => in.stop())
-      in.toDF
+        keepAliveSecs = c.options.getOrElse("keep_alive", "60").toInt).toDF
     },
     "nats" -> { (spark, c) =>
       // input/nats.rs:38-62 modes: Regular{subject, queue_group} or
@@ -589,35 +611,26 @@ object Engine {
         .getOrElse(c.options.filter { case (k, _) =>
           Set("username", "password", "token")(k) })
       if (c.options.get("mode").contains("jetstream") ||
-          c.options.contains("stream")) {
-        val in = new Nats.JetStreamInput(spark, host, port,
+          c.options.contains("stream"))
+        new Nats.JetStreamInput(spark, host, port,
           c.options("stream"),
           c.options.getOrElse("durable_name",
             c.options.getOrElse("consumer_name", "graft-durable")),
-          auth)
-        configInputs.add(() => in.stop())
-        in.toDF
-      } else {
-        val in = new Nats.NatsInput(spark, host, port,
-          c.options("subject"), c.options.get("queue_group"), auth)
-        configInputs.add(() => in.stop())
-        in.toDF
-      }
+          auth).toDF
+      else
+        new Nats.NatsInput(spark, host, port,
+          c.options("subject"), c.options.get("queue_group"), auth).toDF
     },
     "pulsar" -> { (spark, c) =>
-      val in = new Pulsar.PulsarInput(spark, c.options("service_url"),
+      new Pulsar.PulsarInput(spark, c.options("service_url"),
         c.options("topic"), c.options("subscription_name"),
         c.options.getOrElse("subscription_type", "exclusive"),
-        Config.nested(c.options, "auth"), Config.nested(c.options, "retry_config"))
-      configInputs.add(() => in.stop())
-      in.toDF
+        Config.nested(c.options, "auth"), Config.nested(c.options, "retry_config")).toDF
     },
     "websocket" -> { (spark, c) =>
-      val in = new WebSocketInput(spark, c.options("url"),
+      new WebSocketInput(spark, c.options("url"),
         c.options.get("bearer_token")
-          .map(t => Map("Authorization" -> s"Bearer $t")).getOrElse(Map.empty))
-      configInputs.add(() => in.stop())
-      in.toDF
+          .map(t => Map("Authorization" -> s"Bearer $t")).getOrElse(Map.empty)).toDF
     },
     "multiple_inputs" -> { (spark, c) =>
       // input/multiple_inputs.rs:30-110 — fan-in of child inputs; each
@@ -758,19 +771,14 @@ object Engine {
       s"abfs://$container@$account.dfs.core.windows.net$key"
     } else path
 
-  private val configInputs =
-    new java.util.concurrent.ConcurrentLinkedQueue[AutoCloseable]()
-
-  /** Close every connection-holding input created via [[inputFromConf]]
-    * (mqtt/nats/websocket) — engine shutdown's counterpart to the
-    * programmatic inputs' own stop(). Safe to call repeatedly. */
-  def closeConfigInputs(): Unit = {
-    var c = configInputs.poll()
-    while (c != null) {
-      try c.close() catch { case scala.util.control.NonFatal(_) => () }
-      c = configInputs.poll()
+  /** Close every [[PushInput]] still open: one that was built (by
+    * [[inputFromConf]] or in code) but whose query never started, since a
+    * query closes its inputs when it stops. Engine shutdown calls this
+    * after stopping the queries. Safe to call repeatedly. */
+  def closeConfigInputs(): Unit =
+    PushInput.open.forEach { in =>
+      try in.stop() catch { case scala.util.control.NonFatal(_) => () }
     }
-  }
 
   /** The mqtt input's one topic filter: `topics` (a one-entry list or a
     * string), else `topic_filter`, else `#`. The input subscribes to a
@@ -945,32 +953,39 @@ object Engine {
     * (the query name — how `/streams/{id}` lifecycle routes find it).
     * Streaming inputs return the live query; batch inputs run once to
     * EOF and return None (a re-`start` re-runs the batch, the
-    * reference's one-shot lifecycle). */
+    * reference's one-shot lifecycle).
+    *
+    * The processors, the sinks and the trigger are resolved BEFORE the
+    * input: building a connection-holding input opens its connection, so
+    * a config that fails to resolve opens none. The query closes its
+    * input when it stops, and a query that fails to start closes it
+    * here. */
   def runStream(spark: SparkSession, s: StreamConf,
       id: String): Option[StreamingQuery] = {
-    val in = inputFromConf(spark, s.input)
     val procs = inputCodec(s.input) ++ bufferProcessors(s.buffer, s.input) ++
       Processors.fromConf(s.processors, s.temporaries)
     val sink = sinkFromConf(s.output)
     val err = s.errorOutput.map(sinkFromConf)
+    // the buffer's cadence is the trigger: tumbling/sliding fire per
+    // `interval`. A session buffer triggers FASTER than its gap (gap/5,
+    // floor 50 ms): the gap test compares consecutive ARRIVALS, so the
+    // trigger must resolve finer than the gap or a steady stream whose
+    // batches land ~gap apart would spuriously close a session per batch
+    // (the reference's timer checks at message granularity for the same
+    // reason).
+    val trigger = s.buffer.flatMap(b =>
+        b.options.get("interval")
+          .map(i => Config.triggerInterval(i))
+          .orElse(b.options.get("gap").map(g =>
+            s"${math.max(Config.parseDurationMs(g) / 5, 50L)} milliseconds")))
+      .map(Trigger.ProcessingTime(_))
+      .getOrElse(Trigger.ProcessingTime(0L))
+    val in = inputFromConf(spark, s.input)
     if (in.isStreaming)
-      Some(start(in, procs, sink, err,
-        // the buffer's cadence is the trigger: tumbling/sliding fire per
-        // `interval`. A session buffer triggers FASTER than its gap
-        // (gap/5, floor 50 ms): the gap test compares consecutive
-        // ARRIVALS, so the trigger must resolve finer than the gap or a
-        // steady stream whose batches land ~gap apart would spuriously
-        // close a session per batch (the reference's timer checks at
-        // message granularity for the same reason).
-        trigger = s.buffer.flatMap(b =>
-            b.options.get("interval")
-              .map(i => Config.triggerInterval(i))
-              .orElse(b.options.get("gap").map(g =>
-                s"${math.max(Config.parseDurationMs(g) / 5, 50L)} milliseconds")))
-          .map(Trigger.ProcessingTime(_))
-          .getOrElse(Trigger.ProcessingTime(0L)),
-        checkpoint = resolvedCheckpoint(s, id),
-        queryName = Some(id)))
+      // a query that fails to start is never stopped by Spark, so its
+      // input is closed here
+      Some(try start(in, procs, sink, err, trigger, resolvedCheckpoint(s, id), Some(id))
+        catch { case e: Throwable => PushStream.stopSources(in); throw e })
     else {
       runBatch(in, procs, sink, err)
       None

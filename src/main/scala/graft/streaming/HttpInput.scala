@@ -1,12 +1,14 @@
 package graft.streaming
 
+import java.nio.charset.StandardCharsets.UTF_8
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** HTTP input, client mode (reference input/http.rs:225-233: poll a
   * remote endpoint with `method` on an `interval`). One poll = one GET →
   * envelope rows, EOF semantics; the engine trigger drives repetition.
-  * `split_lines=true` turns an NDJSON body into one row per line.
+  * The body reaches `__value__` byte for byte; `split_lines=true` turns
+  * an NDJSON body into one row per line.
   */
 object HttpPoll {
   def read(spark: SparkSession, options: Map[String, String]): DataFrame = {
@@ -21,38 +23,34 @@ object HttpPoll {
         if (conn.getResponseCode < 200 || conn.getResponseCode >= 300)
           throw new java.io.IOException(
             s"http input: ${options("url")} returned ${conn.getResponseCode}")
-        new String(conn.getInputStream.readAllBytes(),
-          java.nio.charset.StandardCharsets.UTF_8)
+        conn.getInputStream.readAllBytes()
       } finally conn.disconnect()
     val messages =
       if (options.get("split_lines").contains("true"))
-        body.linesIterator.filter(_.nonEmpty).toSeq
+        new String(body, UTF_8).linesIterator.filter(_.nonEmpty).map(_.getBytes(UTF_8)).toSeq
       else Seq(body)
-    messages.toDF("s").select(col("s").cast("binary").as(Codecs.ValueCol))
+    messages.toDF(Codecs.ValueCol)
   }
 }
 
 /** HTTP server input (SURVEY.md §2.1; reference input/http.rs:42-115):
-  * an embedded endpoint receives POST bodies and feeds them into the
-  * stream as binary envelopes — the foreachBatch-harness shape the survey
-  * prescribes (no custom DataSourceV2 needed). Uses the JDK's built-in
-  * HttpServer, so no extra dependency.
+  * an embedded endpoint receives POST bodies and feeds them, byte for
+  * byte, into the stream as binary envelopes — the foreachBatch-harness
+  * shape the survey prescribes (no custom DataSourceV2 needed). Uses the
+  * JDK's built-in HttpServer, so no extra dependency.
   *
   * Optional bearer-token auth mirrors the reference's auth block. The
   * driver-side queue is the ingestion edge (like the reference's bounded
   * channel); downstream processing is fully distributed. Each accepted
-  * POST is one message and one offset of the [[PushStream]], and a
-  * micro-batch plans at most one contiguous partition per core, not one
-  * task per POST.
+  * POST is one message of the [[PushInput]]; the server stops with the
+  * query that reads it.
   */
 final class HttpInput(spark: SparkSession, port: Int, path: String = "/ingest",
                       bearerToken: Option[String] = None,
                       maxRequestsPerSecond: Option[Int] = None,
                       authLockoutAfter: Int = Int.MaxValue,
-                      basicAuth: Option[(String, String)] = None) {
-  import spark.implicits._
-
-  private val stream = new PushStream[String](spark)
+                      basicAuth: Option[(String, String)] = None)
+    extends PushInput(spark) {
   private val server = com.sun.net.httpserver.HttpServer.create(
     new java.net.InetSocketAddress("127.0.0.1", port), 0)
 
@@ -121,21 +119,16 @@ final class HttpInput(spark: SparkSession, port: Int, path: String = "/ingest",
         exchange.sendResponseHeaders(405, -1)
       } else {
         failedAuths.set(0) // a successful auth resets the lockout counter
-        val body = new String(exchange.getRequestBody.readAllBytes(),
-          java.nio.charset.StandardCharsets.UTF_8)
-        stream.addData(body)
+        push(exchange.getRequestBody.readAllBytes())
         exchange.sendResponseHeaders(200, -1)
       }
     } finally exchange.close()
   })
   server.setExecutor(null)
   server.start()
-
-  /** The streaming frame in the engine's binary-envelope shape. */
-  def toDF: DataFrame =
-    stream.toDF().select(col("value").cast("binary").as(Codecs.ValueCol))
+  opened()
 
   def boundAddress: String = s"http://127.0.0.1:$port$path"
 
-  def stop(): Unit = server.stop(0)
+  protected def disconnect(): Unit = server.stop(0)
 }

@@ -52,28 +52,35 @@ object Influx {
   }
 
   /** options: url, org, bucket, token, measurement, tags and fields (each
-    * a list or a comma string), time_col?, rows_per_request?. */
+    * a list or a comma string), time_col?, rows_per_request?. The
+    * required options are read at construction, so an output that lacks
+    * one fails at build and names the key. */
   final case class InfluxSink(options: Map[String, String]) extends Engine.BatchSink {
+    private def required(key: String): String = options.getOrElse(key,
+      throw new IllegalArgumentException(s"influxdb output needs `$key`"))
+    private val measurement = required("measurement")
+    private val endpoint = s"${required("url")}/api/v2/write?org=${required("org")}" +
+      s"&bucket=${required("bucket")}&precision=ns"
+    private val token = required("token")
     private val tags = Config.list(options, "tags")
     private val fields = Config.list(options, "fields")
     require(fields.nonEmpty, "influxdb output needs a non-empty `fields` list")
     def write(batch: DataFrame, batchId: Long): Unit = {
-      val lines = lineProtocol(batch, options("measurement"), tags, fields,
+      val lines = lineProtocol(batch, measurement, tags, fields,
         options.get("time_col"))
-      val endpoint = s"${options("url")}/api/v2/write?org=${options("org")}" +
-        s"&bucket=${options("bucket")}&precision=ns"
-      val token = options("token")
+      // locals, so the executor closure captures two strings, not the sink
+      val (url, auth) = (endpoint, s"Token $token")
       val cap = options.getOrElse("rows_per_request", "5000").toInt
       lines.select("line").foreachPartition {
         (rows: Iterator[org.apache.spark.sql.Row]) =>
         rows.map(_.getString(0)).grouped(cap).foreach { chunk =>
-          val conn = new java.net.URI(endpoint).toURL.openConnection()
+          val conn = new java.net.URI(url).toURL.openConnection()
             .asInstanceOf[java.net.HttpURLConnection]
           try {
             conn.setRequestMethod("POST")
             conn.setDoOutput(true)
             conn.setRequestProperty("Content-Type", "text/plain; charset=utf-8")
-            conn.setRequestProperty("Authorization", s"Token $token")
+            conn.setRequestProperty("Authorization", auth)
             val out = conn.getOutputStream
             try out.write(chunk.mkString("\n").getBytes(StandardCharsets.UTF_8))
             finally out.close()

@@ -2,8 +2,7 @@ package graft.streaming
 
 import java.io.{BufferedInputStream, BufferedOutputStream}
 import java.nio.charset.StandardCharsets
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** MQTT 3.1.1 input + output (SURVEY.md §2.1/§2.2; reference
   * input/mqtt.rs:35-57 subscribe incl. qos/clean_session/keep_alive/
@@ -199,8 +198,7 @@ object Mqtt {
     * tagged with `__meta_topic`. `qos`/`cleanSession`/`keepAlive`/auth
     * mirror input/mqtt.rs:35-57 (clean_session=false + a stable client
     * id = the broker-durable subscription). Each PUBLISH is one offset of
-    * the [[PushStream]]; a micro-batch plans at most one contiguous
-    * partition per core.
+    * the [[PushInput]], its payload kept byte for byte.
     *
     * Delivery boundary, stated: MQTT's QoS acknowledgments (PUBACK /
     * PUBREC-PUBREL-PUBCOMP) are TRANSPORT handshakes the broker paces
@@ -214,62 +212,42 @@ object Mqtt {
   final class MqttInput(spark: SparkSession, host: String, port: Int,
       topicFilter: String, clientId: String = "graft-in", qos: Int = 0,
       username: Option[String] = None, password: Option[String] = None,
-      cleanSession: Boolean = true, keepAliveSecs: Int = 60) {
-    import spark.implicits._
-    private val stream = new PushStream[(String, String)](spark)
+      cleanSession: Boolean = true, keepAliveSecs: Int = 60)
+      extends PushInput(spark, Seq("__meta_topic")) {
     private val conn = new Conn(host, port, clientId, username, password,
       cleanSession, keepAliveSecs)
     conn.subscribe(topicFilter, qos)
     conn.startKeepAlive()
-
-    private val reader = new Thread(() => {
-      try while (true) {
+    opened("graft-mqtt-reader") {
+      while (true) {
         val (tpe, body) = conn.readPacket()
         (tpe & 0xf0) match {
-          case 0x30 =>
-            conn.onPublish(tpe, body).foreach { case (topic, payload) =>
-              stream.addData((topic, new String(payload, StandardCharsets.UTF_8)))
-            }
+          case 0x30 => conn.onPublish(tpe, body).foreach { case (t, p) => push(p, t) }
           case 0x60 => // broker's PUBREL: release the QoS 2 message
-            conn.onPubRel(body).foreach { case (topic, payload) =>
-              stream.addData((topic, new String(payload, StandardCharsets.UTF_8)))
-            }
+            conn.onPubRel(body).foreach { case (t, p) => push(p, t) }
           case 0xc0 => conn.writePacket(0xd0, Array.empty) // PINGREQ -> PINGRESP
-          case 0xd0 => () // PINGRESP for our keep-alive PINGREQs
-          case _ => ()
+          case _ => () // PINGRESP for our keep-alive PINGREQs, and the rest
         }
-      } catch { case _: java.io.EOFException | _: java.net.SocketException => () }
-    }, "graft-mqtt-reader")
-    reader.setDaemon(true)
-    reader.start()
+      }
+    }
 
-    def toDF: DataFrame = stream.toDF().select(
-      col("_2").cast("binary").as(Codecs.ValueCol),
-      col("_1").as("__meta_topic"))
-
-    def stop(): Unit = conn.close()
+    protected def disconnect(): Unit = conn.close()
   }
 
-  /** Publish each row — executor-side, one connection per partition.
-    * QoS 0 is at-most-once (the reference default); QoS 1/2 wait out
-    * each row's ack ladder (at-least-once / broker-exactly-once). */
+  /** Publish each row's value as its bytes ([[Engine.publish]]: a
+    * binary value unchanged, anything else as its text in UTF-8) —
+    * executor-side, one connection per partition. QoS 0 is at-most-once
+    * (the reference default); QoS 1/2 wait out each row's ack ladder
+    * (at-least-once / broker-exactly-once). */
   final case class MqttSink(host: String, port: Int, topicExpr: String,
       valueExpr: String, qos: Int = 0,
       username: Option[String] = None, password: Option[String] = None)
       extends Engine.BatchSink {
     def write(batch: DataFrame, batchId: Long): Unit = {
       val (h, p, q, u, pw) = (host, port, qos, username, password)
-      batch.selectExpr(s"CAST(($topicExpr) AS STRING) AS t",
-          s"CAST(($valueExpr) AS STRING) AS v")
-        .foreachPartition { (rows: Iterator[Row]) =>
-          if (rows.nonEmpty) {
-            val conn = new Conn(h, p,
-              s"graft-out-${java.util.UUID.randomUUID()}", u, pw)
-            try rows.foreach(r => conn.publish(r.getString(0),
-              r.getString(1).getBytes(StandardCharsets.UTF_8), q))
-            finally conn.close()
-          }
-        }
+      Engine.publish(batch, topicExpr, valueExpr)(() => new Conn(h, p,
+        s"graft-out-${java.util.UUID.randomUUID()}", u, pw))(
+        conn => conn.publish(_, _, q))
     }
   }
 }

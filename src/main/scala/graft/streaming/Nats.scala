@@ -2,8 +2,7 @@ package graft.streaming
 
 import java.io.{BufferedInputStream, BufferedOutputStream}
 import java.nio.charset.StandardCharsets
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** NATS input + output (SURVEY.md §2.1/§2.2; reference
   * input/nats.rs:38-90 — Regular subject subscribe incl. queue groups,
@@ -17,10 +16,9 @@ import org.apache.spark.sql.functions._
   * reply inbox carrying `$JS.ACK.*` reply subjects to ack into.
   *
   * Input shape: a background reader thread feeds MSG payloads into the
-  * [[PushStream]] envelope (the driver-side ingestion edge, like
-  * [[HttpInput]]/[[WebSocketInput]]): one offset per message, at most one
-  * contiguous partition per core per micro-batch. The output publishes
-  * from executors with one connection per partition.
+  * [[PushInput]] envelope (the driver-side ingestion edge, like
+  * [[HttpInput]]/[[WebSocketInput]]). The output publishes from
+  * executors with one connection per partition.
   */
 object Nats {
 
@@ -126,35 +124,26 @@ object Nats {
       case _: java.io.EOFException | _: java.net.SocketException => None
     }
 
+  /** The MSG frames off the wire until the peer closes. */
+  private def msgs(conn: Conn): Iterator[Msg] =
+    Iterator.continually(nextMsg(conn)).takeWhile(_.isDefined).flatten
+
   /** Streaming subject input: `MSG <subject> <sid> [reply] <#bytes>`
     * frames land as envelope rows tagged with `__meta_subject`
     * (input/nats.rs Regular mode, optional queue group + auth). Each MSG
-    * is one offset of the [[PushStream]]; a micro-batch plans at most one
-    * contiguous partition per core. */
+    * is one message of the [[PushInput]], its payload kept byte for
+    * byte. */
   final class NatsInput(spark: SparkSession, host: String, port: Int,
       subject: String, queueGroup: Option[String] = None,
-      auth: Map[String, String] = Map.empty) {
-    import spark.implicits._
-    private val stream = new PushStream[(String, String)](spark)
+      auth: Map[String, String] = Map.empty)
+      extends PushInput(spark, Seq("__meta_subject")) {
     private val conn = new Conn(host, port, auth)
     conn.subscribe(subject, "1", queueGroup)
+    opened("graft-nats-reader") {
+      msgs(conn).foreach(m => push(m.payload, m.subject))
+    }
 
-    private val reader = new Thread(() => {
-      var m = nextMsg(conn)
-      while (m.isDefined) {
-        stream.addData((m.get.subject,
-          new String(m.get.payload, StandardCharsets.UTF_8)))
-        m = nextMsg(conn)
-      }
-    }, "graft-nats-reader")
-    reader.setDaemon(true)
-    reader.start()
-
-    def toDF: DataFrame = stream.toDF().select(
-      col("_2").cast("binary").as(Codecs.ValueCol),
-      col("_1").as("__meta_subject"))
-
-    def stop(): Unit = conn.close()
+    protected def disconnect(): Unit = conn.close()
   }
 
   /** JetStream DURABLE pull consumer (input/nats.rs JetStream mode:
@@ -168,21 +157,14 @@ object Nats {
     * input resumes where the durable left off and a crashed driver's
     * unacked tail REDELIVERS after ack_wait instead of being lost:
     * at-least-once across driver restarts (spec'd with a restart in
-    * BrokerSpec).
+    * BrokerSpec). The broker's ack_wait redelivers anything a crash left
+    * unacked; duplicates are the consumer-dedupe case the idempotent
+    * sinks already handle.
     */
   final class JetStreamInput(spark: SparkSession, host: String, port: Int,
       streamName: String, durable: String,
-      auth: Map[String, String] = Map.empty) extends AutoCloseable {
-    import spark.implicits._
-    // Round 8: acks are DEFERRED to checkpoint commit (CommitAckStream,
-    // same contract as PulsarInput): the `$JS.ACK.*` reply subject of an
-    // enqueued message is +ACK'd only once the micro-batch holding it
-    // has committed — at-least-once across driver restarts (the broker's
-    // ack_wait redelivers anything a crash left unacked; duplicates are
-    // the consumer-dedupe case the idempotent sinks already handle).
-    private val stream = new CommitAckStream[(String, String), String](
-      spark, ackSubject =>
-        conn.publish(ackSubject, "+ACK".getBytes(StandardCharsets.UTF_8)))
+      auth: Map[String, String] = Map.empty)
+      extends AckingPushInput(spark, Seq("__meta_stream")) {
     private val conn = new Conn(host, port, auth)
     private val inbox = s"_INBOX.graft.${java.util.UUID.randomUUID()}"
     conn.subscribe(inbox)
@@ -218,48 +200,33 @@ object Nats {
       conn.publishRequest(s"$$JS.API.CONSUMER.MSG.NEXT.$streamName.$durable",
         inbox, """{"batch":1}""".getBytes(StandardCharsets.UTF_8))
 
-    private val reader = new Thread(() => {
+    opened("graft-nats-js-reader") {
       requestNext()
-      var m = nextMsg(conn)
-      while (m.isDefined) {
-        m.get.reply match {
+      msgs(conn).foreach { m =>
+        m.reply match {
           case Some(ack) if ack.startsWith("$JS.ACK") =>
             // the +ACK itself rides the checkpoint commit (CommitAckStream)
-            stream.enqueue((streamName,
-              new String(m.get.payload, StandardCharsets.UTF_8)), ack)
+            pushAcked(() => conn.publish(ack, "+ACK".getBytes(StandardCharsets.UTF_8)),
+              m.payload, streamName)
             requestNext()
           case _ => () // API responses / status messages
         }
-        m = nextMsg(conn)
       }
-    }, "graft-nats-js-reader")
-    reader.setDaemon(true)
-    reader.start()
+    }
 
-    def toDF: DataFrame = stream.toDF().select(
-      col("_2").cast("binary").as(Codecs.ValueCol),
-      col("_1").as("__meta_stream"))
-
-    def stop(): Unit = conn.close()
-    def close(): Unit = stop()
+    protected def disconnect(): Unit = conn.close()
   }
 
-  /** Publish each row's value to `subjectExpr` — executor-side, one
-    * connection per partition. At-least-once, like the reference. */
+  /** Publish each row's value as its bytes ([[Engine.publish]]: a
+    * binary value unchanged, anything else as its text in UTF-8) to
+    * `subjectExpr` — executor-side, one connection per partition.
+    * At-least-once, like the reference. */
   final case class NatsSink(host: String, port: Int, subjectExpr: String,
       valueExpr: String) extends Engine.BatchSink {
     def write(batch: DataFrame, batchId: Long): Unit = {
       val (h, p) = (host, port)
-      batch.selectExpr(s"CAST(($subjectExpr) AS STRING) AS s",
-          s"CAST(($valueExpr) AS STRING) AS v")
-        .foreachPartition { (rows: Iterator[Row]) =>
-          if (rows.nonEmpty) {
-            val conn = new Conn(h, p)
-            try rows.foreach(r => conn.publish(r.getString(0),
-              r.getString(1).getBytes(StandardCharsets.UTF_8)))
-            finally conn.close()
-          }
-        }
+      Engine.publish(batch, subjectExpr, valueExpr)(() => new Conn(h, p))(
+        conn => conn.publish(_, _))
     }
   }
 }

@@ -3,8 +3,7 @@ package graft.streaming
 import java.io.{BufferedInputStream, BufferedOutputStream, ByteArrayOutputStream}
 import java.nio.ByteBuffer
 import java.nio.charset.StandardCharsets.UTF_8
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Pulsar input + output (SURVEY.md §2.1/§2.2; reference
   * input/pulsar.rs:39-62 topic+subscription consumer,
@@ -24,11 +23,11 @@ import org.apache.spark.sql.functions._
   * SEND/SEND_RECEIPT, PING/PONG.
   *
   * Input shape (input/pulsar.rs): a background reader thread feeds
-  * MESSAGE payloads into the stream envelope (the driver-side ingestion
-  * edge, like [[HttpInput]]). Delivery guarantee (round 8): acks are
-  * DEFERRED to checkpoint commit via [[CommitAckStream]] — a message is
-  * ACKed only after the micro-batch holding it has committed, so a
-  * driver crash redelivers from the subscription cursor instead of
+  * MESSAGE payloads into the [[PushInput]] envelope (the driver-side
+  * ingestion edge, like [[HttpInput]]). Delivery guarantee (round 8):
+  * acks are DEFERRED to checkpoint commit via [[CommitAckStream]] — a
+  * message is ACKed only after the micro-batch holding it has committed,
+  * so a driver crash redelivers from the subscription cursor instead of
   * losing acked-but-uncommitted messages: at-least-once across driver
   * restarts (STRONGER than the reference's ack-on-read, whose
   * ack-before-processing window is at-most-once). Redelivered messages
@@ -341,14 +340,8 @@ object Pulsar {
   final class PulsarInput(spark: SparkSession, serviceUrl: String,
       topic: String, subscription: String, subType: String = "exclusive",
       auth: Map[String, String] = Map.empty,
-      retry: Map[String, String] = Map.empty) extends AutoCloseable {
-    import spark.implicits._
-    // the ack-token queue and offset arithmetic live in CommitAckStream;
-    // this input only supplies the per-message ack call
-    private val stream =
-      new CommitAckStream[(Array[Byte], String, String), (Long, Long)](
-        spark, { case (ledger, entry) => conn.ack(ledger, entry) })
-
+      retry: Map[String, String] = Map.empty)
+      extends AckingPushInput(spark, Seq("__meta_topic", "__meta_message_id")) {
     private val conn: Conn = {
       val delays =
         if (retry.isEmpty) Seq(0L)
@@ -372,55 +365,39 @@ object Pulsar {
     }
     conn.subscribe(topic, subscription, subType)
     conn.flow(1000)
-
-    private val reader = new Thread(() => {
-      try while (true) {
+    opened("graft-pulsar-reader") {
+      while (true) {
         val (ledger, entry, payload) = conn.nextMessage()
-        stream.enqueue((payload, topic, s"$ledger:$entry"), (ledger, entry))
+        pushAcked(() => conn.ack(ledger, entry), payload, topic, s"$ledger:$entry")
         conn.flow(1) // replenish the consumed permit
-      } catch {
-        case _: java.io.EOFException | _: java.net.SocketException => ()
       }
-    }, "graft-pulsar-reader")
-    reader.setDaemon(true)
-    reader.start()
+    }
 
-    def toDF: DataFrame = stream.toDF().select(
-      col("_1").as(Codecs.ValueCol),
-      col("_2").as("__meta_topic"),
-      col("_3").as("__meta_message_id"))
-
-    def stop(): Unit = conn.close()
-    def close(): Unit = stop()
+    protected def disconnect(): Unit = conn.close()
   }
 
   /** Publish each row to its evaluated topic (output/pulsar.rs:38;
     * topic is the reference's `Expr<String>`) — executor-side, one
     * connection per partition, one producer per distinct topic seen.
+    * The value goes out as its bytes ([[Engine.publish]]).
     * At-least-once: every send waits for its receipt. */
   final case class PulsarSink(serviceUrl: String, topicExpr: String,
       valueField: String, auth: Map[String, String] = Map.empty)
       extends Engine.BatchSink {
     def write(batch: DataFrame, batchId: Long): Unit = {
       val (url, a) = (serviceUrl, auth)
-      batch.selectExpr(s"CAST(($topicExpr) AS STRING) AS t",
-          s"CAST(`$valueField` AS BINARY) AS v")
-        .foreachPartition { (rows: Iterator[Row]) =>
-          if (rows.nonEmpty) {
-            val conn = new Conn(url, a)
-            // producer per distinct topic in this partition
-            val producers = scala.collection.mutable.Map[String, (Long, String)]()
-            var nextId = 0L
-            try rows.foreach { r =>
-              val topic = r.getString(0)
-              val (pid, pname) = producers.getOrElseUpdate(topic, {
-                nextId += 1
-                (nextId, conn.createProducer(topic, nextId))
-              })
-              conn.send(pname, r.getAs[Array[Byte]](1), producerId = pid)
-            } finally conn.close()
+      Engine.publish(batch, topicExpr, s"`$valueField`")(() => new Conn(url, a)) {
+        conn =>
+          // producer per distinct topic in this partition: (id, name)
+          val producers = scala.collection.mutable.Map[String, (Long, String)]()
+          (topic, value) => {
+            val (pid, pname) = producers.getOrElseUpdate(topic, {
+              val id = producers.size + 1L
+              (id, conn.createProducer(topic, id))
+            })
+            conn.send(pname, value, producerId = pid)
           }
-        }
+      }
     }
   }
 }

@@ -1,37 +1,50 @@
 package graft.streaming
 
+import java.io.ByteArrayOutputStream
 import java.net.http.{HttpClient, WebSocket}
-import java.util.concurrent.CompletionStage
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import java.nio.ByteBuffer
+import java.nio.charset.StandardCharsets
+import java.util.concurrent.{CompletionStage, TimeUnit}
+import org.apache.spark.sql.SparkSession
 
 /** WebSocket client input (SURVEY.md §2.1; reference input/websocket.rs:
   * 42-60: connect to a URL and stream frames into the pipeline). Built on
   * the JDK 11+ `java.net.http.WebSocket` client — no extra dependency —
-  * feeding the same [[PushStream]] envelope as [[HttpInput]]: the
+  * feeding the same [[PushInput]] envelope as [[HttpInput]]: the
   * driver-side queue is the ingestion edge (the reference's bounded
-  * channel), all downstream processing is distributed. Each message is
-  * one offset; a micro-batch plans at most one contiguous partition per
-  * core.
+  * channel), all downstream processing is distributed.
   *
-  * Text frames may arrive fragmented; fragments accumulate until the
-  * final frame flag, then the whole message enqueues as one envelope row.
+  * Text and binary messages may arrive fragmented; fragments accumulate
+  * until the final frame flag, then the whole message enqueues as one
+  * envelope row — a text message as its UTF-8 bytes, a binary one as
+  * received.
   */
 final class WebSocketInput(spark: SparkSession, uri: String,
-    headers: Map[String, String] = Map.empty) {
+    headers: Map[String, String] = Map.empty) extends PushInput(spark) {
 
-  import spark.implicits._
-  private val stream = new PushStream[String](spark)
   @volatile private var closed = false
 
   private val listener = new WebSocket.Listener {
-    private val partial = new StringBuilder
+    private val text = new StringBuilder
+    private val binary = new ByteArrayOutputStream
     override def onText(ws: WebSocket, data: CharSequence,
         last: Boolean): CompletionStage[_] = {
-      partial.append(data)
+      text.append(data)
       if (last) {
-        stream.addData(partial.toString)
-        partial.clear()
+        push(text.toString.getBytes(StandardCharsets.UTF_8))
+        text.clear()
+      }
+      ws.request(1)
+      null
+    }
+    override def onBinary(ws: WebSocket, data: ByteBuffer,
+        last: Boolean): CompletionStage[_] = {
+      val bytes = new Array[Byte](data.remaining)
+      data.get(bytes)
+      binary.write(bytes)
+      if (last) {
+        push(binary.toByteArray)
+        binary.reset()
       }
       ws.request(1)
       null
@@ -48,13 +61,16 @@ final class WebSocketInput(spark: SparkSession, uri: String,
     headers.foreach { case (k, v) => b.header(k, v) }
     b.buildAsync(java.net.URI.create(uri), listener).join()
   }
-
-  /** The streaming frame in the engine's binary-envelope shape. */
-  def toDF: DataFrame =
-    stream.toDF().select(col("value").cast("binary").as(Codecs.ValueCol))
+  opened()
 
   def isClosed: Boolean = closed
 
-  def stop(): Unit =
-    if (!closed) socket.sendClose(WebSocket.NORMAL_CLOSURE, "stop").join()
+  /** Sends the close frame (waiting at most a second for it to go out),
+    * then drops the connection without waiting for the server's reply. */
+  protected def disconnect(): Unit =
+    try {
+      if (!closed)
+        socket.sendClose(WebSocket.NORMAL_CLOSURE, "stop").get(1, TimeUnit.SECONDS)
+    } catch { case scala.util.control.NonFatal(_) => () }
+    finally socket.abort()
 }

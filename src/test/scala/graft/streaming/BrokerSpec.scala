@@ -139,8 +139,9 @@ class BrokerSpec extends AnyFunSuite {
               received.add((subject, payload))
               subscribers.forEach { case (subj, sid, sout) =>
                 if (subj == subject) sout.synchronized {
-                  sout.write(s"MSG $subject $sid $n\r\n$payload\r\n"
-                    .getBytes(StandardCharsets.UTF_8))
+                  sout.write(s"MSG $subject $sid $n\r\n".getBytes(StandardCharsets.UTF_8))
+                  sout.write(buf) // the payload as published, byte for byte
+                  sout.write("\r\n".getBytes(StandardCharsets.UTF_8))
                   sout.flush()
                 }
               }
@@ -149,7 +150,17 @@ class BrokerSpec extends AnyFunSuite {
           case _ => ()
         }
       } catch { case _: java.io.EOFException | _: java.net.SocketException => () }
-      finally s.close()
+      finally {
+        s.close()
+        subscribers.removeIf(_._3 eq out) // a closed client subscribes to nothing
+      }
+    }
+
+    /** Subscriptions to `subject` whose client connection is still open. */
+    def liveSubscribers(subject: String): Int = {
+      var n = 0
+      subscribers.forEach { case (subj, _, _) => if (subj == subject) n += 1 }
+      n
     }
 
     private val acceptor = new Thread(() => {
@@ -324,10 +335,94 @@ class BrokerSpec extends AnyFunSuite {
     } finally nats.stop()
   }
 
+  test("nats sink publishes a binary value's bytes and the nats input " +
+      "streams them back unchanged") {
+    val nats = new FakeNats
+    try {
+      val input = new Nats.NatsInput(spark, "127.0.0.1", nats.port, "raw")
+      val bytes = Array(0x08, 0x96, 0x01, 0xff, 0xfe).map(_.toByte)
+      Nats.NatsSink("127.0.0.1", nats.port, "'raw'", "b")
+        .write(Seq(bytes).toDF("b"), 0L)
+      val rows = PushInputSpec.rows(input.toDF, 1)
+      assert(rows.map(_.getAs[Array[Byte]](Codecs.ValueCol).toSeq) == Seq(bytes.toSeq))
+      assert(rows.map(_.getAs[String]("__meta_subject")) == Seq("raw"))
+    } finally nats.stop()
+  }
+
+  private def natsStream(port: Int): StreamConf = Config.fromYaml(
+    s"""streams:
+       |  - input:
+       |      type: nats
+       |      host: 127.0.0.1
+       |      port: $port
+       |      subject: orders
+       |      queue_group: workers
+       |    output: { type: drop }
+       |""".stripMargin).streams.head
+
+  private def waitFor(what: String)(cond: => Boolean): Unit = {
+    val deadline = System.nanoTime() + 15e9.toLong
+    while (!cond && System.nanoTime() < deadline) Thread.sleep(20)
+    assert(cond, what)
+  }
+
+  test("a nats stream run from YAML leaves no live subscriber once its " +
+      "query stops") {
+    val nats = new FakeNats
+    try {
+      val q = Engine.runStream(spark, natsStream(nats.port), "nats-close").get
+      waitFor("the stream subscribes")(nats.liveSubscribers("orders") == 1)
+      q.stop()
+      waitFor("the stopped stream's subscription closes")(
+        nats.liveSubscribers("orders") == 0)
+    } finally { Engine.closeConfigInputs(); nats.stop() }
+  }
+
+  test("a control-plane restart of a nats stream leaves one live " +
+      "subscriber, not two") {
+    val nats = new FakeNats
+    val sc = natsStream(nats.port)
+    val q = Engine.runStream(spark, sc, "nats-restart").get
+    val cp = new ControlPlane(spark, 0, None, Seq("nats-restart" -> sc))
+    try {
+      waitFor("the stream subscribes")(nats.liveSubscribers("orders") == 1)
+      val c = new java.net.URI(
+        s"http://127.0.0.1:${cp.boundPort}/streams/nats-restart/restart")
+        .toURL.openConnection().asInstanceOf[java.net.HttpURLConnection]
+      c.setRequestMethod("POST")
+      assert(c.getResponseCode == 202)
+      c.disconnect()
+      waitFor("the restarted query runs")(spark.streams.active.exists(r =>
+        Option(r.name).contains("nats-restart") && r.runId != q.runId))
+      waitFor("only the restarted query's subscription is live")(
+        nats.liveSubscribers("orders") == 1)
+    } finally {
+      spark.streams.active.filter(r => Option(r.name).contains("nats-restart"))
+        .foreach(_.stop())
+      cp.stop(); Engine.closeConfigInputs(); nats.stop()
+    }
+  }
+
+  test("a nats stream whose query fails to start closes its input") {
+    val nats = new FakeNats
+    val sc = natsStream(nats.port)
+    val q = Engine.runStream(spark, sc, "nats-dup").get
+    try {
+      waitFor("the stream subscribes")(nats.liveSubscribers("orders") == 1)
+      // a second query under an active query's name fails in start()
+      intercept[IllegalArgumentException](Engine.runStream(spark, sc, "nats-dup"))
+      Thread.sleep(300) // a leaked subscription, had there been one, is registered
+      waitFor("the failed start's subscription closes")(
+        nats.liveSubscribers("orders") == 1)
+      assert(q.isActive)
+    } finally { q.stop(); Engine.closeConfigInputs(); nats.stop() }
+  }
+
   // ---- fake MQTT broker ----
   private final class FakeMqtt(requiredAuth: Option[(String, String)] = None) {
     val published = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
     val pubacksFromSubscribers = new java.util.concurrent.atomic.AtomicInteger(0)
+    val connects = new java.util.concurrent.atomic.AtomicInteger(0)
     @volatile var lastConnectFlags: Int = -1
     @volatile var lastKeepAlive: Int = -1
     // (filter, granted qos, out)
@@ -367,6 +462,7 @@ class BrokerSpec extends AnyFunSuite {
         val (tpe, body) = readPacket()
         (tpe & 0xf0) match {
           case 0x10 => // CONNECT: variable header then clientId [user] [pass]
+            connects.incrementAndGet()
             val protoLen = ((body(0) & 0xff) << 8) | (body(1) & 0xff)
             val flags = body(protoLen + 3) & 0xff
             lastConnectFlags = flags
@@ -573,6 +669,79 @@ class BrokerSpec extends AnyFunSuite {
       q.processAllAvailable(); q.stop()
       assert(sink.rows.map(_.getLong(0)) == Seq(7L))
     } finally { Engine.closeConfigInputs(); broker.stop() }
+  }
+
+  test("mqtt input keeps a payload that is not UTF-8 byte for byte") {
+    val broker = new FakeMqtt
+    try {
+      val input = new Mqtt.MqttInput(spark, "127.0.0.1", broker.port, "raw/t")
+      val bytes = Array(0x08, 0x96, 0x01, 0xff, 0xfe).map(_.toByte)
+      val pub = new Mqtt.Conn("127.0.0.1", broker.port, "raw-pub")
+      try pub.publish("raw/t", bytes) finally pub.close()
+      val rows = PushInputSpec.rows(input.toDF, 1)
+      assert(rows.map(_.getAs[Array[Byte]](Codecs.ValueCol).toSeq) == Seq(bytes.toSeq))
+      assert(rows.map(_.getAs[String]("__meta_topic")) == Seq("raw/t"))
+    } finally broker.stop()
+  }
+
+  test("runStream builds the output before the input: a kafka output " +
+      "without a topic fails at build and opens no mqtt connection") {
+    val broker = new FakeMqtt
+    val conf = Config.fromYaml(
+      s"""streams:
+         |  - input:
+         |      type: mqtt
+         |      host: 127.0.0.1
+         |      port: ${broker.port}
+         |      topics: [a/b]
+         |    output:
+         |      type: kafka
+         |      brokers: [127.0.0.1:9]
+         |""".stripMargin)
+    try {
+      intercept[IllegalArgumentException](
+        Engine.runStream(spark, conf.streams.head, "no-topic"))
+      Thread.sleep(200) // a CONNECT, had one been sent, would have landed
+      assert(broker.connects.get() == 0)
+    } finally { Engine.closeConfigInputs(); broker.stop() }
+  }
+
+  test("runStream resolves the trigger before the input: an interval " +
+      "that does not parse opens no mqtt connection") {
+    val broker = new FakeMqtt
+    val conf = Config.fromYaml(
+      s"""streams:
+         |  - input:
+         |      type: mqtt
+         |      host: 127.0.0.1
+         |      port: ${broker.port}
+         |      topics: [a/b]
+         |    buffer:
+         |      type: tumbling_window
+         |      interval: not-a-duration
+         |    output: { type: drop }
+         |""".stripMargin)
+    try {
+      intercept[IllegalArgumentException](
+        Engine.runStream(spark, conf.streams.head, "bad-interval"))
+      Thread.sleep(200) // a CONNECT, had one been sent, would have landed
+      assert(broker.connects.get() == 0)
+    } finally { Engine.closeConfigInputs(); broker.stop() }
+  }
+
+  test("mqtt and nats sinks publish a numeric value as its text") {
+    val broker = new FakeMqtt
+    val nats = new FakeNats
+    try {
+      val temps = Seq(21.5).toDF("temp")
+      Mqtt.MqttSink("127.0.0.1", broker.port, "'sensors/temp'", "temp")
+        .write(temps, 0L)
+      Nats.NatsSink("127.0.0.1", nats.port, "'temp'", "temp").write(temps, 0L)
+      waitFor("both brokers receive the value")(
+        broker.published.size == 1 && nats.received.size == 1)
+      assert(broker.published.peek() == ("sensors/temp", "21.5"))
+      assert(nats.received.peek() == ("temp", "21.5"))
+    } finally { broker.stop(); nats.stop() }
   }
 
   // ---- fake Modbus device ----

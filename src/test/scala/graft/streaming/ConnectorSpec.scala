@@ -59,6 +59,14 @@ class ConnectorSpec extends AnyFunSuite {
     } finally server.stop(0)
   }
 
+  test("an influxdb output without `token` fails at build and names the key") {
+    val e = intercept[IllegalArgumentException](Engine.sinkFromConf(
+      ComponentConf("influxdb", Map("url" -> "http://127.0.0.1:9",
+        "org" -> "graft", "bucket" -> "b1", "measurement" -> "m",
+        "fields" -> "value"))))
+    assert(e.getMessage.contains("token"), e.getMessage)
+  }
+
   test("http server input rate-limits and locks out failed auth (http.rs middleware)") {
     val port = {
       val s = new java.net.ServerSocket(0); val p = s.getLocalPort; s.close(); p
@@ -156,8 +164,9 @@ class ConnectorSpec extends AnyFunSuite {
   // ---- websocket ----
 
   /** Single-connection RFC6455 server: HTTP upgrade handshake, then
-    * server->client unmasked text frames. */
-  private def wsServer(messages: Seq[String]): (Int, Thread) = {
+    * server->client unmasked text frames, then binary frames. */
+  private def wsServer(messages: Seq[String],
+      binary: Seq[Array[Byte]] = Nil): (Int, Thread) = {
     val server = new java.net.ServerSocket(0, 1,
       java.net.InetAddress.getByName("127.0.0.1"))
     val t = new Thread(() => {
@@ -179,9 +188,9 @@ class ConnectorSpec extends AnyFunSuite {
           s"Connection: Upgrade\r\nSec-WebSocket-Accept: $accept\r\n\r\n")
           .getBytes(StandardCharsets.UTF_8))
         out.flush()
-        messages.foreach { m =>
-          val payload = m.getBytes(StandardCharsets.UTF_8)
-          out.write(0x81) // FIN + text opcode
+        (messages.map(m => (0x81, m.getBytes(StandardCharsets.UTF_8))) ++
+            binary.map((0x82, _))).foreach { case (first, payload) =>
+          out.write(first) // FIN + text (1) or binary (2) opcode
           if (payload.length < 126) out.write(payload.length)
           else { out.write(126); out.write(payload.length >> 8); out.write(payload.length & 0xff) }
           out.write(payload)
@@ -212,6 +221,19 @@ class ConnectorSpec extends AnyFunSuite {
     q.processAllAvailable(); q.stop()
     assert(sink.rows.map(r => (r.getString(0), r.getLong(1))).toSet ==
       Set(("w1", 1L), ("w2", 2L)))
+  }
+
+  test("websocket input keeps a binary frame as one __value__ row, byte for byte") {
+    val bytes = Array(0x08, 0x96, 0x01, 0xff, 0xfe).map(_.toByte)
+    val (port, _) = wsServer(Nil, binary = Seq(bytes))
+    val ws = new WebSocketInput(spark, s"ws://127.0.0.1:$port/stream")
+    val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+    while (!ws.isClosed && System.nanoTime() < deadline) Thread.sleep(50)
+    assert(ws.isClosed, "server close frame never arrived")
+    val sink = new Engine.MemorySink
+    val q = Engine.start(ws.toDF, Nil, sink)
+    q.processAllAvailable(); q.stop()
+    assert(sink.rows.map(_.getAs[Array[Byte]](Codecs.ValueCol).toSeq) == Seq(bytes.toSeq))
   }
 
   // ---- redis ----

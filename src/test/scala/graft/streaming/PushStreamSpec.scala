@@ -53,16 +53,16 @@ class PushStreamSpec extends AnyFunSuite {
   test("CommitAckStream acks every message of a micro-batch packed into " +
       "fewer partitions, the newest included") {
     val acked = new ConcurrentLinkedQueue[Int]()
-    val stream = new CommitAckStream[Long, Int](spark, t => acked.add(t))
+    val stream = new CommitAckStream[Long](spark)
     val n = 3 * spark.sparkContext.defaultParallelism + 1
-    (0 until n).foreach(i => stream.enqueue(i.toLong, i))
+    (0 until n).foreach(i => stream.enqueue(i.toLong, () => acked.add(i)))
     val sink = new PartitionSink
     val q = Engine.start(stream.toDF(), Nil, sink,
       trigger = Trigger.ProcessingTime(0L))
     try {
       q.processAllAvailable()
       // the source commit of a batch rides the construction of the next
-      stream.enqueue(n.toLong, n)
+      stream.enqueue(n.toLong, () => acked.add(n))
       q.processAllAvailable()
     } finally q.stop()
     val first = sink.batches.asScala.head

@@ -55,13 +55,22 @@ procMatch="$(grep -nE 'case \(?[A-Za-z_][A-Za-z0-9_]*: *Processors\.|isInstanceO
 # its one split of a service URL's host list).
 splits="$(grep -rnE 'split\("[,;]"\)' src/main/scala/graft/streaming |
   grep -vE '^src/main/scala/graft/streaming/(Config|Pulsar)\.scala:')"
-if [ -n "$stray$views$jsonInfer$mains$procMatch$splits" ]; then
+# One push input: every connection-holding input extends PushInput, so
+# only PushStream.scala and CommitAckStream.scala construct a push stream,
+# and open inputs are tracked only in PushInput's registry, never in an
+# engine-side configInputs table.
+pushStreams="$(grep -rlE 'new (PushStream|CommitAckStream)\[' src/main/scala/graft/streaming |
+  grep -vxE 'src/main/scala/graft/streaming/(PushStream|CommitAckStream)\.scala')"
+inputTable="$(grep -rl configInputs src perfbench)"
+if [ -n "$stray$views$jsonInfer$mains$procMatch$splits$pushStreams$inputTable" ]; then
   echo "[gate] RED — source guard:" >&2
   [ -n "$stray" ] && echo "  createOrReplaceTempFunction outside functions/Registry.scala: $stray" >&2
   [ -n "$views" ] && echo "  createOrReplaceTempView under graft/streaming/: $views" >&2
   [ -n "$jsonInfer" ] && echo "  schema-less read.json( outside sql/GraftJson.scala: $jsonInfer" >&2
   [ -n "$procMatch" ] && echo "  Engine.scala matches on a processor class (implement Engine.RowHolder instead): $procMatch" >&2
   [ -n "$splits" ] && echo "  split(\",\") or split(\";\") under graft/streaming/ outside Config.scala and Pulsar.scala (read lists through Config.list): $splits" >&2
+  [ -n "$pushStreams" ] && echo "  new PushStream[ or new CommitAckStream[ under graft/streaming/ outside PushStream.scala and CommitAckStream.scala (extend PushInput instead): $pushStreams" >&2
+  [ -n "$inputTable" ] && echo "  configInputs (open inputs are PushInput's registry, closed by Engine.closeConfigInputs): $inputTable" >&2
   [ -n "$mains" ] && echo "  the files declaring def main( are not exactly graft/{Bench,Verify,Explain,ScaleProbe}.scala and graft/streaming/Main.scala: $mains" >&2
   exit 1
 fi
